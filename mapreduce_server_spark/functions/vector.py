@@ -111,9 +111,11 @@ def cosine(a: Column, b: Column) -> Column:
 def _dlit(v: float) -> str:
     """Exact Spark SQL DOUBLE literal: repr round-trips the double and
     Spark's parser is correctly rounded, so the JVM sees the identical
-    bits. Finite values only (planes/centroids/embeddings)."""
+    bits. Finite values only (planes/centroids/embeddings): NaN and ±Inf
+    have no SQL literal, so they raise ValueError (also under -O)."""
     v = float(v)
-    assert not (isnan(v) or isinf(v)), v
+    if isnan(v) or isinf(v):
+        raise ValueError(f"no exact SQL literal for non-finite {v!r}")
     return repr(v) + "D"
 
 

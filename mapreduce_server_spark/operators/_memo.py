@@ -6,10 +6,10 @@ duplicated subtrees — the STATUS trap). A bare per-invocation
 ``.cache()`` is correct but leaks: repeated runs in a long-lived serving
 session accumulate one InMemoryRelation per call until LRU eviction
 (round-10 ADVICE). This helper memoizes the cached frame per
-(applicationId, sf_dir, tag, source-file mtime) — the _SCAN_CACHE /
-_IVF_ASSIGN_CACHE discipline — so the Nth invocation reuses the first
-invocation's InMemoryRelation, and a fixture rewrite (mtime change)
-rebuilds while unpersisting the stale entry instead of stranding it.
+(applicationId, sf_dir, tag, source-table fingerprint) — the key
+_SCAN_CACHE uses — so the Nth invocation reuses the first invocation's
+InMemoryRelation, and a fixture rewrite or append rebuilds while
+unpersisting the stale entry instead of stranding it.
 
 At 100 TB the analogue is a shared cluster cache / materialized
 intermediate: build once per corpus version, serve every query from it.
@@ -17,13 +17,14 @@ intermediate: build once per corpus version, serve every query from it.
 
 from __future__ import annotations
 
-import os
 import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-_FRAME_CACHE: dict[tuple[str, str, str, float], DataFrame] = {}
+from ..sources.loader import Fingerprint, note_read
+
+_FRAME_CACHE: dict[tuple[str, str, str, Fingerprint], DataFrame] = {}
 _FRAME_LOCK = threading.Lock()
 
 
@@ -56,20 +57,17 @@ def session_cache(
     table: str = "documents",
 ) -> DataFrame:
     """Return ``build()`` cached, memoized per (appId, sf_dir, tag,
-    mtime of ``sf_dir/table.parquet``). Double-checked lock: concurrent
-    cold callers serialize so exactly one InMemoryRelation is built."""
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        mtime = -1.0
+    fingerprint of ``table``). Double-checked lock: concurrent cold
+    callers serialize so exactly one InMemoryRelation is built. A hit
+    still records ``table`` into the open plan-build recording."""
+    fp = note_read(sf_dir, table)
     app = spark.sparkContext.applicationId
-    key = (app, sf_dir, tag, mtime)
+    key = (app, sf_dir, tag, fp)
     if key not in _FRAME_CACHE:
         with _FRAME_LOCK:
             if key not in _FRAME_CACHE:
                 # a fixture rewrite leaves a same-prefix entry at the old
-                # mtime — unpersist it rather than strand the memory
+                # fingerprint — unpersist it rather than strand the memory
                 for stale in [
                     k for k in _FRAME_CACHE if k[:3] == (app, sf_dir, tag)
                 ]:

@@ -35,13 +35,16 @@ from ..functions.vector import (
     norm,
 )
 from ..registry import query
-from ..sources.loader import Tables, fan_out_scan
+from ..sources.loader import Fingerprint, Tables, fan_out_scan, note_read
 
 QUERY_VEC_ID = 0
 
 #: query-vector cache keyed by sf_dir — the lookup is one tiny Spark job;
 #: repeated invocations (bench warm-ups, LSH + brute-force pairs) reuse it.
-_QV_CACHE: dict[str, list[float]] = {}
+#: Each value carries the embeddings fingerprint it was read at and is
+#: served only while the table still has it (so are the other value
+#: memos below and curation's _KCENTER_CACHE).
+_QV_CACHE: dict[str, tuple[Fingerprint, list[float]]] = {}
 
 
 def _query_vector(spark: SparkSession, sf_dir: str) -> list[float] | None:
@@ -50,13 +53,17 @@ def _query_vector(spark: SparkSession, sf_dir: str) -> list[float] | None:
     ``q`` CTE is then empty and empties the query downstream, so
     callers return their schema-correct empty frame instead of
     subscripting None (round-10 empty-input sweep)."""
-    if sf_dir not in _QV_CACHE:
-        e = Tables(spark, sf_dir).embeddings
-        row = e.filter(F.col("vec_id") == QUERY_VEC_ID).select("embedding").head()
-        if row is None:
-            return None  # don't cache absence — fixtures are immutable
-        _QV_CACHE[sf_dir] = [float(x) for x in row[0]]
-    return _QV_CACHE[sf_dir]
+    fp = note_read(sf_dir, "embeddings")  # a memo hit still records its input
+    hit = _QV_CACHE.get(sf_dir)
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    e = Tables(spark, sf_dir).embeddings
+    row = e.filter(F.col("vec_id") == QUERY_VEC_ID).select("embedding").head()
+    if row is None:
+        return None  # absence is not cached
+    qv = [float(x) for x in row[0]]
+    _QV_CACHE[sf_dir] = (fp, qv)
+    return qv
 # 6 planes → 64 buckets: sized so fixture-scale buckets hold ~8-30 vectors
 # (candidate set non-trivial); at real scale raise planes with corpus size
 # (candidates per probe ≈ n / 2^planes). Multi-probe (Hamming-1 flips)
@@ -377,8 +384,9 @@ IVF_NPROBE = 4  # clusters scanned per query
 IVF_ITERS = 2  # Lloyd refinement rounds over the deterministic seeds
 IVF_TRAIN_CAP = 10_000  # max vectors collected for quantizer training
 
-#: coarse-quantizer cache keyed by sf_dir (16×64 doubles — driver-tiny)
-_IVF_CACHE: dict[str, list[list[float]]] = {}
+#: coarse-quantizer cache keyed by sf_dir (16×64 ints — driver-tiny),
+#: each value with the embeddings fingerprint it was trained at
+_IVF_CACHE: dict[str, tuple[Fingerprint, list[list[int]]]] = {}
 
 
 def _micro(emb_col):
@@ -442,8 +450,10 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]] | None:
     is therefore a pure integer function of the data that DuckDB
     replays bit-for-bit (the _IVF_ORACLE unrolled CTEs) — knn_ivf /
     knn_ivf_pruned graduate from rows-only to exact-oracle."""
-    if sf_dir in _IVF_CACHE:
-        return _IVF_CACHE[sf_dir]
+    fp = note_read(sf_dir, "embeddings")  # a memo hit still records its input
+    hit = _IVF_CACHE.get(sf_dir)
+    if hit is not None and hit[0] == fp:
+        return hit[1]
     import numpy as np
 
     e = Tables(spark, sf_dir).embeddings
@@ -490,8 +500,9 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]] | None:
             else:
                 new.append(cents[k])  # empty cluster: keep previous
         cents = np.array(new, dtype=np.int64)
-    _IVF_CACHE[sf_dir] = [[int(x) for x in c] for c in cents]
-    return _IVF_CACHE[sf_dir]
+    out = [[int(x) for x in c] for c in cents]
+    _IVF_CACHE[sf_dir] = (fp, out)
+    return out
 
 
 def _probe_cells(
@@ -514,14 +525,16 @@ def _probe_cells(
 
 
 #: session-scoped IVF artifacts, keyed by (Spark applicationId, sf_dir):
-#: the assigned-cells DataFrame and the cell-partitioned on-disk index.
+#: the assigned-cells DataFrame and the cell-partitioned on-disk index,
+#: each with the embeddings fingerprint it was built at (served only
+#: while the table still has it).
 #: _ivf_centroids already made quantizer TRAINING once-per-session; these
 #: make corpus ASSIGNMENT once-per-session too (round-9 verdict item 4 —
 #: knn_ivf/knn_filter sat in the slowest-ten purely on the shared
 #: per-query assignment pass). The 100 TB analogue is exactly this: a
 #: vector store materializes cell assignment at ingest, not per query.
-_IVF_ASSIGN_CACHE: dict[tuple[str, str], DataFrame] = {}
-_IVF_INDEX_CACHE: dict[tuple[str, str], str] = {}
+_IVF_ASSIGN_CACHE: dict[tuple[str, str], tuple[Fingerprint, DataFrame]] = {}
+_IVF_INDEX_CACHE: dict[tuple[str, str], tuple[Fingerprint, str]] = {}
 
 #: single-writer guard for the session-scoped builds: two serving
 #: threads cold-hitting the same corpus must not race the same
@@ -545,10 +558,15 @@ def _ivf_assigned(
     kept in the columnar cache; knn_ivf / knn_cell_stats (and the index
     writer below) all read this InMemoryRelation instead of replaying
     the 16×64 interpreted distance fold per query."""
+    fp = note_read(sf_dir, "embeddings")  # a memo hit still records its input
     key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVF_ASSIGN_CACHE:
+    hit = _IVF_ASSIGN_CACHE.get(key)
+    if hit is None or hit[0] != fp:
         with _IVF_BUILD_LOCK:
-            if key not in _IVF_ASSIGN_CACHE:  # re-check under the lock
+            hit = _IVF_ASSIGN_CACHE.get(key)  # re-check under the lock
+            if hit is None or hit[0] != fp:
+                if hit is not None:  # built from older data: release it
+                    hit[1].unpersist()
                 e = Tables(spark, sf_dir).embeddings
                 v = e.select(
                     "vec_id",
@@ -557,14 +575,17 @@ def _ivf_assigned(
                     _micro(F.col("embedding")).alias("_vi"),
                 )
                 cluster, dmin = _cell_assign_cols("_vi", cents)
-                _IVF_ASSIGN_CACHE[key] = v.select(
-                    "vec_id",
-                    "embedding",
-                    "label",
-                    dmin.alias("d"),
-                    cluster.alias("cluster"),
-                ).cache()
-    return _IVF_ASSIGN_CACHE[key]
+                hit = _IVF_ASSIGN_CACHE[key] = (
+                    fp,
+                    v.select(
+                        "vec_id",
+                        "embedding",
+                        "label",
+                        dmin.alias("d"),
+                        cluster.alias("cluster"),
+                    ).cache(),
+                )
+    return hit[1]
 
 
 def _ivf_index(
@@ -589,16 +610,28 @@ def _ivf_index(
 
     from ..scratch import SCRATCH, owned
 
+    fp = note_read(sf_dir, "embeddings")  # a memo hit still records its input
     key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVF_INDEX_CACHE:
+    hit = _IVF_INDEX_CACHE.get(key)
+    if hit is None or hit[0] != fp:
         assigned = _ivf_assigned(spark, sf_dir, cents)  # own lock scope
         with _IVF_BUILD_LOCK:
-            if key not in _IVF_INDEX_CACHE:  # re-check under the lock
+            hit = _IVF_INDEX_CACHE.get(key)  # re-check under the lock
+            if hit is None or hit[0] != fp:
+                # the fingerprint is in the tag, so a rebuild after the
+                # corpus changed writes a sibling directory instead of
+                # deleting one a running query may still be reading
                 tag = (
                     _os.path.basename(_os.path.normpath(sf_dir))
                     + "_"
                     + _hl.md5(
-                        (spark.sparkContext.applicationId + "|" + sf_dir).encode()
+                        (
+                            spark.sparkContext.applicationId
+                            + "|"
+                            + sf_dir
+                            + "|"
+                            + repr(fp)
+                        ).encode()
                     ).hexdigest()[:10]
                 )
                 out = owned(_os.path.join(SCRATCH, f"ivf_index_{tag}"))
@@ -607,14 +640,14 @@ def _ivf_index(
                     .partitionBy("cluster")
                     .parquet(out)
                 )
-                _IVF_INDEX_CACHE[key] = out
+                hit = _IVF_INDEX_CACHE[key] = (fp, out)
     try:
         # keep a long-lived server's index younger than the stale-GC TTL
         # for as long as queries keep arriving (scratch.py contract)
-        _os.utime(_IVF_INDEX_CACHE[key])
+        _os.utime(hit[1])
     except OSError:
         pass
-    return _IVF_INDEX_CACHE[key]
+    return hit[1]
 
 
 #: SQL twins of _micro and _l2sq_int (int64-exact, order-free).

@@ -26,6 +26,10 @@ fixtures need on top of ``spark.read.parquet``:
 from __future__ import annotations
 
 import os
+import stat
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -63,8 +67,80 @@ MEASURE_COLUMNS: dict[str, tuple[str, ...]] = {
 #: run per process (one limit-pushed scan per measure table).
 _VALIDATE_SAMPLE_ROWS = 8192
 
-#: (path, mtime) pairs already validated this process.
-_VALIDATED: set[tuple[str, float]] = set()
+#: What a table's files looked like: ``(mtime_ns, size)`` for a file, the
+#: sorted ``(relative name, mtime_ns, size)`` of every file for a
+#: directory, ``None`` when the path is missing.
+Fingerprint = tuple | None
+
+#: (path, fingerprint) pairs already validated this process.
+_VALIDATED: set[tuple[str, Fingerprint]] = set()
+
+
+def fingerprint(path: str) -> Fingerprint:
+    """The one input fingerprint every cache keys on (the scan cache, the
+    plan cache's recorded reads, the session frame memo), so they cannot
+    disagree about whether a table changed. File-system stats only: an
+    append adds a part file, a rewrite moves mtime_ns or size."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_mtime_ns, st.st_size)
+    files = []
+    for root, _, names in os.walk(path):
+        for n in names:
+            p = os.path.join(root, n)
+            try:
+                f = os.stat(p)
+            except OSError:
+                continue  # removed mid-walk: the next check sees the change
+            files.append((os.path.relpath(p, path), f.st_mtime_ns, f.st_size))
+    return tuple(sorted(files))
+
+
+def table_path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def table_fingerprint(sf_dir: str, name: str) -> Fingerprint:
+    return fingerprint(table_path(sf_dir, name))
+
+
+#: (sf_dir, table) → fingerprint of every table read while a plan builds.
+#: A context variable, so builds on concurrent threads record apart.
+Reads = dict[tuple[str, str], Fingerprint]
+_RECORDING: ContextVar[Reads | None] = ContextVar("_RECORDING", default=None)
+
+
+@contextmanager
+def recording() -> Iterator[Reads]:
+    """Record the fixture tables read inside the block (nested blocks
+    record apart; the plan cache merges an inner build's reads outward)."""
+    reads: Reads = {}
+    token = _RECORDING.set(reads)
+    try:
+        yield reads
+    finally:
+        _RECORDING.reset(token)
+
+
+def note_read(sf_dir: str, name: str) -> Fingerprint:
+    """Fingerprint ``name`` and add it to the open recording, if any.
+    Memos that hand back a frame or value derived from a table without
+    calling the loader call this on every hit."""
+    fp = table_fingerprint(sf_dir, name)
+    reads = _RECORDING.get()
+    if reads is not None:
+        reads[(sf_dir, name)] = fp
+    return fp
+
+
+def note_reads(reads: Mapping[tuple[str, str], Fingerprint]) -> None:
+    """Add already-fingerprinted reads to the open recording, if any."""
+    rec = _RECORDING.get()
+    if rec is not None:
+        rec.update(reads)
 
 
 def validate_measure_contract(
@@ -87,7 +163,7 @@ def validate_measure_contract(
     cols = list(MEASURE_COLUMNS.get(name, ()))
     if not cols:
         return
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = spark.read.parquet(table_path(sf_dir, name))
     cols = [c for c in cols if c in df.columns]
     if not cols:
         return
@@ -118,11 +194,11 @@ def validate_measure_contract(
 
 
 def _maybe_validate(
-    spark: SparkSession, sf_dir: str, name: str, path: str, mtime: float
+    spark: SparkSession, sf_dir: str, name: str, path: str, fp: Fingerprint
 ) -> None:
     if os.environ.get("SPARK_GRAFT_VALIDATE_MEASURES", "") != "1":
         return
-    key = (path, mtime)
+    key = (path, fp)
     if key in _VALIDATED or name not in MEASURE_COLUMNS:
         return
     validate_measure_contract(spark, sf_dir, name)
@@ -142,14 +218,15 @@ _RUNTIME_CONFS = {
 }
 
 
-#: table-scan cache: (applicationId, sf_dir, name, mtime) → DataFrame.
-#: Scans are immutable plans over read-only paths; caching skips the
-#: per-call parquet footer read and schema inference (~80 ms/table).
-#: The file mtime in the key makes the cache drift-safe: if the fixture
-#: is regenerated under a live process (it happened — the events
-#: timestamp encoding changed between rounds), the stale plan is simply
-#: never hit again and the dtype dispatch re-runs on the fresh schema.
-_SCAN_CACHE: dict[tuple[str, str, str, float], DataFrame] = {}
+#: table-scan cache: (applicationId, sf_dir, name, fingerprint) → DataFrame.
+#: Scans are immutable plans over a file listing taken when they were
+#: made; caching skips the per-call parquet footer read and schema
+#: inference (~80 ms/table). The fingerprint in the key makes the cache
+#: drift-safe: if the fixture is regenerated or appended to under a live
+#: process (the events timestamp encoding changed between rounds; a log
+#: directory gains part files), the stale scan is simply never hit again
+#: and the listing and dtype dispatch re-run on the fresh files.
+_SCAN_CACHE: dict[tuple[str, str, str, Fingerprint], DataFrame] = {}
 
 
 def _normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -185,19 +262,18 @@ def ensure_confs(spark: SparkSession) -> None:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table; applies the events timestamp normalization."""
+    """Load one fixture table; applies the events timestamp normalization.
+    The table is recorded, with the fingerprint taken before Spark lists
+    its files, into the open :func:`recording`."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     ensure_confs(spark)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        mtime = -1.0
-    key = (spark.sparkContext.applicationId, sf_dir, name, mtime)
+    path = table_path(sf_dir, name)
+    fp = note_read(sf_dir, name)
+    key = (spark.sparkContext.applicationId, sf_dir, name, fp)
     df = _SCAN_CACHE.get(key)
     if df is None:
-        _maybe_validate(spark, sf_dir, name, path, mtime)
+        _maybe_validate(spark, sf_dir, name, path, fp)
         df = spark.read.parquet(path)
         if name == "events":
             df = _normalize_events_ts(df)
@@ -216,7 +292,8 @@ def load_table_fresh(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     ensure_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    note_read(sf_dir, name)
+    df = spark.read.parquet(table_path(sf_dir, name))
     if name == "events":
         df = _normalize_events_ts(df)
     return df

@@ -55,11 +55,14 @@ def spark():
 
 
 def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """Oracle views over ``sf_dir``; a table stored as a directory of
+    part files is read as all of them."""
     con = duckdb.connect()
     for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(path):
+            path += "/*.parquet"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     return con
 
 

@@ -61,7 +61,7 @@ def clear_query_caches(spark) -> None:
     the _memo session frames, and the IVF assignment cache. Driver-side
     value memos and disk indexes stay warm (module docstring)."""
     _memo.clear_frame_cache()
-    for d in list(similarity._IVF_ASSIGN_CACHE.values()):
+    for _, d in list(similarity._IVF_ASSIGN_CACHE.values()):
         try:
             d.unpersist()
         except Exception:
