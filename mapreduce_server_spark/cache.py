@@ -1,0 +1,224 @@
+"""One memo rule for every cache in the engine.
+
+A server re-serving recurring queries may reuse earlier work only while
+it can tell the work is still valid (PAPERS.md, *Shared Execution of
+Recurring Workloads in MapReduce*). Every memo in the package is a
+:class:`Memo`: an entry holds its value and the fixture tables its build
+read, each with its fingerprint then (:func:`recording`). A lookup
+serves the value only while every fingerprint is unchanged, and
+otherwise rebuilds and *replaces* the entry, so keys carry no
+fingerprint and an appended or rewritten table never adds an entry.
+Concurrent builds of one key run once; other keys, and builds nested in
+a build, never wait on each other. A fingerprint is file-system stats
+only, so checking a directory table costs time linear in its part count.
+"""
+
+from __future__ import annotations
+
+import os
+import stat
+import threading
+import weakref
+from collections.abc import Callable, Hashable, Iterator, Mapping
+from contextlib import contextmanager
+from contextvars import ContextVar
+from dataclasses import dataclass
+from typing import Any
+
+#: What a table's files looked like: ``(mtime_ns, size)`` for a file, the
+#: sorted ``(relative name, mtime_ns, size)`` of every file for a
+#: directory, ``None`` when the path is missing.
+Fingerprint = tuple | None
+
+
+def fingerprint(path: str) -> Fingerprint:
+    """File-system stats only: an append adds a part file, a rewrite
+    moves mtime_ns or size."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_mtime_ns, st.st_size)
+    files = []
+    for root, _, names in os.walk(path):
+        for n in names:
+            p = os.path.join(root, n)
+            try:
+                f = os.stat(p)
+            except OSError:
+                continue  # removed mid-walk: the next check sees the change
+            files.append((os.path.relpath(p, path), f.st_mtime_ns, f.st_size))
+    return tuple(sorted(files))
+
+
+def table_path(sf_dir: str, name: str) -> str:
+    """A fixture table is the file or directory ``<sf_dir>/<name>.parquet``."""
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def table_fingerprint(sf_dir: str, name: str) -> Fingerprint:
+    return fingerprint(table_path(sf_dir, name))
+
+
+#: (sf_dir, table) → fingerprint of every table read while a value builds.
+#: A context variable, so builds on concurrent threads record apart.
+Reads = dict[tuple[str, str], Fingerprint]
+_RECORDING: ContextVar[Reads | None] = ContextVar("_RECORDING", default=None)
+
+
+@contextmanager
+def recording() -> Iterator[Reads]:
+    """Record the fixture tables read inside the block (nested blocks
+    record apart; a memo merges an inner build's reads outward)."""
+    reads: Reads = {}
+    token = _RECORDING.set(reads)
+    try:
+        yield reads
+    finally:
+        _RECORDING.reset(token)
+
+
+def note_read(sf_dir: str, name: str) -> Fingerprint:
+    """Fingerprint ``name`` and add it to the open recording, if any."""
+    fp = table_fingerprint(sf_dir, name)
+    reads = _RECORDING.get()
+    if reads is not None:
+        reads[(sf_dir, name)] = fp
+    return fp
+
+
+def note_reads(reads: Mapping[tuple[str, str], Fingerprint]) -> None:
+    """Add already-fingerprinted reads to the open recording, if any."""
+    rec = _RECORDING.get()
+    if rec is not None:
+        rec.update(reads)
+
+
+#: SparkContext → applicationId, so an application-scoped key costs no
+#: py4j call
+_APP_IDS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def app_id(spark) -> str:
+    """The Spark applicationId of ``spark``, asked of the JVM once."""
+    sc = spark.sparkContext
+    app = _APP_IDS.get(sc)
+    if app is None:
+        app = _APP_IDS[sc] = sc.applicationId
+    return app
+
+
+@dataclass(frozen=True)
+class Entry:
+    """One memoized value and the inputs it was built from."""
+
+    value: Any
+    #: (sf_dir, table) → fingerprint of every fixture table the build read
+    reads: Reads
+
+    def current(self) -> bool:
+        """Do all the recorded inputs still look as they did? Stats only."""
+        return all(
+            table_fingerprint(d, t) == fp for (d, t), fp in self.reads.items()
+        )
+
+    def tables(self, sf_dir: str) -> set[str]:
+        """The tables of ``sf_dir`` the build read."""
+        return {t for d, t in self.reads if d == sf_dir}
+
+
+#: every memo by name, for :func:`stats` and :func:`clear_frames`
+_MEMOS: dict[str, Memo] = {}
+
+
+class Memo(dict):
+    """key → :class:`Entry`, under the module's one rule.
+
+    A dict, so evicting or counting entries by key (``pop``, ``clear``,
+    ``len``) works as on any dict. ``release`` (e.g.
+    ``DataFrame.unpersist``) is run on a value that is replaced or
+    cleared by :func:`clear_frames`. Hit, miss (no entry) and stale
+    (an entry whose inputs changed) counts are kept per memo."""
+
+    def __init__(self, name: str, release: Callable[[Any], object] | None = None):
+        super().__init__()
+        self.name = name
+        self.release = release
+        self.counts = {"hits": 0, "misses": 0, "stale": 0}
+        self._lock = threading.Lock()  # guards the counts
+        self._key_locks: dict[Hashable, threading.Lock] = {}
+        _MEMOS[name] = self
+
+    def __call__(self, key: Hashable, build: Callable[[], Any]) -> Any:
+        """The value of ``key`` while its inputs are unchanged, else
+        ``build()``'s, memoized. Concurrent cold callers build once."""
+        entry = self.lookup(key)
+        if entry is not None:
+            return entry.value
+        with self._key_lock(key):
+            entry = self.lookup(key)  # built meanwhile on another thread?
+            return entry.value if entry is not None else self._fill(key, build)
+
+    def lookup(self, key: Hashable) -> Entry | None:
+        """The entry of ``key`` if its inputs are unchanged (a counted
+        hit, its reads recorded into the open recording), else None."""
+        entry = self.get(key)
+        if entry is None or not entry.current():
+            return None
+        self._count("hits")
+        note_reads(entry.reads)
+        return entry
+
+    def build(self, key: Hashable, build: Callable[[], Any]) -> Any:
+        """Build ``key`` afresh and memoize it, replacing any entry."""
+        with self._key_lock(key):
+            return self._fill(key, build)
+
+    def _fill(self, key: Hashable, build: Callable[[], Any]) -> Any:
+        self._count("stale" if key in self else "misses")
+        with recording() as reads:
+            value = build()
+        note_reads(reads)  # a build nested in another records into it too
+        if value is None:  # not stored: absence is rechecked next call
+            old = self.pop(key, None)
+        else:
+            old = self.get(key)
+            self[key] = Entry(value, reads)
+        if old is not None:
+            self._release(old.value)
+        return value
+
+    def _key_lock(self, key: Hashable) -> threading.Lock:
+        # dict.setdefault is one atomic step: every caller gets one lock
+        return self._key_locks.setdefault(key, threading.Lock())
+
+    def _count(self, what: str) -> None:
+        with self._lock:
+            self.counts[what] += 1
+
+    def _release(self, value: Any) -> None:
+        if self.release is None:
+            return
+        try:
+            self.release(value)
+        except Exception:  # best effort: the value's session may be gone
+            pass
+
+
+def stats() -> dict[str, dict[str, int]]:
+    """Hits, misses and stale rebuilds of every memo so far, by name."""
+    return {name: dict(m.counts) for name, m in _MEMOS.items()}
+
+
+def clear_frames() -> None:
+    """Release and forget every value of the memos that have a
+    ``release`` (the cached frames). A cold-recompute timing calls this
+    with ``spark.catalog.clearCache()``: clearing only the catalog would
+    leave these memos serving frames whose cache is gone, so the next
+    build would recompute their subtrees per consumer instead of paying
+    one cache fill."""
+    for m in _MEMOS.values():
+        if m.release is not None:
+            while m:
+                m._release(m.popitem()[1].value)

@@ -142,11 +142,6 @@ def dot_lit_sql(col_sql: str, vec: list[float]) -> str:
     )
 
 
-def dot_lit(col_sql: str, vec: list[float]) -> Column:
-    """Column form of :func:`dot_lit_sql`."""
-    return F.expr(dot_lit_sql(col_sql, vec))
-
-
 def norm_sql(col_sql: str) -> str:
     """SQL text of ``norm(F.expr(col_sql))`` — the sequential
     square-sum fold under sqrt (fold-not-unroll per dot_lit_sql)."""

@@ -27,8 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import Memo
 from ..registry import query
-from ..sources.loader import Fingerprint, Tables, fan_out_scan, note_read
+from ..sources.loader import Tables, fan_out_scan
 
 
 def hash_bucket(key: F.Column) -> F.Column:
@@ -457,9 +458,8 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 K_CENTERS = 5  # coreset size (rounds = K_CENTERS - 1 after the seed)
 
-#: selected centers per sf_dir: [(vec_id, micro-unit vector)], driver-tiny,
-#: with the embeddings fingerprint they were selected at.
-_KCENTER_CACHE: dict[str, tuple[Fingerprint, list[tuple[int, list[int]]]]] = {}
+#: selected centers per sf_dir: [(vec_id, micro-unit vector)], driver-tiny
+_KCENTER_CACHE = Memo("kcenter")
 
 
 def _kcenter_centers(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[int]]]:
@@ -483,19 +483,19 @@ def _kcenter_centers(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[i
     set is empty (corpus ≤ centers selected) the traversal stops with
     the centers found — EXACTLY what the oracle's unrolled CTEs do,
     where the exhausted round's argmax CTE is empty and every later
-    round stays empty (an empty corpus selects nothing)."""
+    round stays empty (an empty corpus selects nothing). Memoized per
+    sf_dir."""
+    return _KCENTER_CACHE(sf_dir, lambda: _select_centers(spark, sf_dir))
+
+
+def _select_centers(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[int]]]:
     from .similarity import _l2sq_int, _micro
 
-    fp = note_read(sf_dir, "embeddings")  # a memo hit still records its input
-    hit = _KCENTER_CACHE.get(sf_dir)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
     e = Tables(spark, sf_dir).embeddings.select(
         "vec_id", _micro(F.col("embedding")).alias("vi")
     )
     seed_rows = e.orderBy("vec_id").limit(1).collect()
     if not seed_rows:
-        _KCENTER_CACHE[sf_dir] = (fp, [])
         return []
     seed = seed_rows[0]
     centers = [(int(seed[0]), [int(x) for x in seed[1]])]
@@ -514,7 +514,6 @@ def _kcenter_centers(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[i
             break
         row = rows[0]
         centers.append((int(row[0]), [int(x) for x in row[1]]))
-    _KCENTER_CACHE[sf_dir] = (fp, centers)
     return centers
 
 

@@ -21,6 +21,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import Memo, app_id, note_read
 from ..functions.pairs import skew_safe_pairs
 from ..functions.vector import (
     DUCK_DOT,
@@ -35,16 +36,13 @@ from ..functions.vector import (
     norm,
 )
 from ..registry import query
-from ..sources.loader import Fingerprint, Tables, fan_out_scan, note_read
+from ..sources.loader import Tables, fan_out_scan
 
 QUERY_VEC_ID = 0
 
-#: query-vector cache keyed by sf_dir — the lookup is one tiny Spark job;
+#: query-vector memo keyed by sf_dir — the lookup is one tiny Spark job;
 #: repeated invocations (bench warm-ups, LSH + brute-force pairs) reuse it.
-#: Each value carries the embeddings fingerprint it was read at and is
-#: served only while the table still has it (so are the other value
-#: memos below and curation's _KCENTER_CACHE).
-_QV_CACHE: dict[str, tuple[Fingerprint, list[float]]] = {}
+_QV_CACHE = Memo("query_vector")
 
 
 def _query_vector(spark: SparkSession, sf_dir: str) -> list[float] | None:
@@ -53,17 +51,13 @@ def _query_vector(spark: SparkSession, sf_dir: str) -> list[float] | None:
     ``q`` CTE is then empty and empties the query downstream, so
     callers return their schema-correct empty frame instead of
     subscripting None (round-10 empty-input sweep)."""
-    fp = note_read(sf_dir, "embeddings")  # a memo hit still records its input
-    hit = _QV_CACHE.get(sf_dir)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    e = Tables(spark, sf_dir).embeddings
-    row = e.filter(F.col("vec_id") == QUERY_VEC_ID).select("embedding").head()
-    if row is None:
-        return None  # absence is not cached
-    qv = [float(x) for x in row[0]]
-    _QV_CACHE[sf_dir] = (fp, qv)
-    return qv
+
+    def read() -> list[float] | None:
+        e = Tables(spark, sf_dir).embeddings
+        row = e.filter(F.col("vec_id") == QUERY_VEC_ID).select("embedding").head()
+        return None if row is None else [float(x) for x in row[0]]
+
+    return _QV_CACHE(sf_dir, read)
 # 6 planes → 64 buckets: sized so fixture-scale buckets hold ~8-30 vectors
 # (candidate set non-trivial); at real scale raise planes with corpus size
 # (candidates per probe ≈ n / 2^planes). Multi-probe (Hamming-1 flips)
@@ -384,9 +378,8 @@ IVF_NPROBE = 4  # clusters scanned per query
 IVF_ITERS = 2  # Lloyd refinement rounds over the deterministic seeds
 IVF_TRAIN_CAP = 10_000  # max vectors collected for quantizer training
 
-#: coarse-quantizer cache keyed by sf_dir (16×64 ints — driver-tiny),
-#: each value with the embeddings fingerprint it was trained at
-_IVF_CACHE: dict[str, tuple[Fingerprint, list[list[int]]]] = {}
+#: coarse-quantizer memo keyed by sf_dir (16×64 ints — driver-tiny)
+_IVF_CACHE = Memo("ivf_centroids")
 
 
 def _micro(emb_col):
@@ -414,15 +407,6 @@ def _l2sq_int(micro_col_sql: str, centroid: list[int]):
     return F.expr(l2sq_int_lit_sql(micro_col_sql, centroid))
 
 
-def _assign_cluster(micro_col_sql: str, centroids: list[list[int]]):
-    """argmin over exact integer centroid distances, ties to the lowest
-    cluster id. Operates on a MATERIALIZED micro-unit column (callers
-    project ``_micro(...)`` once, rather than re-quantizing per
-    centroid)."""
-    dists = F.array(*[_l2sq_int(micro_col_sql, c) for c in centroids])
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-
 def _ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]] | None:
     """K coarse centroids IN INTEGER MICRO-UNITS: stride-spaced seeds
     over vec_id order, refined with IVF_ITERS Lloyd rounds — trained
@@ -445,15 +429,16 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]] | None:
     ``_micro``-quantized vectors in PURE int64 — squared distances are
     exact order-free integer sums, the Lloyd mean rounds half-up via
     the integer identity (2·Σ + n) // (2n), and np.argmin ties resolve
-    to the lowest cluster id, matching both _assign_cluster's
+    to the lowest cluster id, matching both _cell_assign_cols's
     array_position rule and the oracle's ORDER BY d, cid. Every step
     is therefore a pure integer function of the data that DuckDB
     replays bit-for-bit (the _IVF_ORACLE unrolled CTEs) — knn_ivf /
-    knn_ivf_pruned graduate from rows-only to exact-oracle."""
-    fp = note_read(sf_dir, "embeddings")  # a memo hit still records its input
-    hit = _IVF_CACHE.get(sf_dir)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
+    knn_ivf_pruned graduate from rows-only to exact-oracle. Memoized
+    per sf_dir."""
+    return _IVF_CACHE(sf_dir, lambda: _train_centroids(spark, sf_dir))
+
+
+def _train_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]] | None:
     import numpy as np
 
     e = Tables(spark, sf_dir).embeddings
@@ -474,7 +459,7 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]] | None:
     if not rows:
         # empty corpus → no quantizer; every IVF-family oracle's CTE
         # chain is empty, so callers return their schema-correct empty
-        # frame (round-10 empty-input sweep). Absence is not cached.
+        # frame (round-10 empty-input sweep).
         return None
     mat = np.array([[int(x) for x in r[1]] for r in rows], dtype=np.int64)
     stride = max(1, len(rows) // IVF_K)
@@ -500,9 +485,7 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]] | None:
             else:
                 new.append(cents[k])  # empty cluster: keep previous
         cents = np.array(new, dtype=np.int64)
-    out = [[int(x) for x in c] for c in cents]
-    _IVF_CACHE[sf_dir] = (fp, out)
-    return out
+    return [[int(x) for x in c] for c in cents]
 
 
 def _probe_cells(
@@ -525,25 +508,19 @@ def _probe_cells(
 
 
 #: session-scoped IVF artifacts, keyed by (Spark applicationId, sf_dir):
-#: the assigned-cells DataFrame and the cell-partitioned on-disk index,
-#: each with the embeddings fingerprint it was built at (served only
-#: while the table still has it).
+#: the assigned-cells DataFrame and the cell-partitioned on-disk index.
 #: _ivf_centroids already made quantizer TRAINING once-per-session; these
 #: make corpus ASSIGNMENT once-per-session too (round-9 verdict item 4 —
 #: knn_ivf/knn_filter sat in the slowest-ten purely on the shared
 #: per-query assignment pass). The 100 TB analogue is exactly this: a
 #: vector store materializes cell assignment at ingest, not per query.
-_IVF_ASSIGN_CACHE: dict[tuple[str, str], tuple[Fingerprint, DataFrame]] = {}
-_IVF_INDEX_CACHE: dict[tuple[str, str], tuple[Fingerprint, str]] = {}
-
-#: single-writer guard for the session-scoped builds: two serving
+#: The memo's per-key build lock keeps them single-writer: two serving
 #: threads cold-hitting the same corpus must not race the same
 #: overwrite-mode index write (Spark's _temporary staging collides) —
 #: one builds, the other waits and reuses (pinned in
 #: tests/test_concurrent.py).
-import threading as _threading
-
-_IVF_BUILD_LOCK = _threading.Lock()
+_IVF_ASSIGN_CACHE = Memo("ivf_assign", release=DataFrame.unpersist)
+_IVF_INDEX_CACHE = Memo("ivf_index")
 
 _IVF_INDEX_SCHEMA = (
     "vec_id bigint, embedding array<float>, label int, d bigint, cluster int"
@@ -558,34 +535,25 @@ def _ivf_assigned(
     kept in the columnar cache; knn_ivf / knn_cell_stats (and the index
     writer below) all read this InMemoryRelation instead of replaying
     the 16×64 interpreted distance fold per query."""
-    fp = note_read(sf_dir, "embeddings")  # a memo hit still records its input
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _IVF_ASSIGN_CACHE.get(key)
-    if hit is None or hit[0] != fp:
-        with _IVF_BUILD_LOCK:
-            hit = _IVF_ASSIGN_CACHE.get(key)  # re-check under the lock
-            if hit is None or hit[0] != fp:
-                if hit is not None:  # built from older data: release it
-                    hit[1].unpersist()
-                e = Tables(spark, sf_dir).embeddings
-                v = e.select(
-                    "vec_id",
-                    "embedding",
-                    "label",
-                    _micro(F.col("embedding")).alias("_vi"),
-                )
-                cluster, dmin = _cell_assign_cols("_vi", cents)
-                hit = _IVF_ASSIGN_CACHE[key] = (
-                    fp,
-                    v.select(
-                        "vec_id",
-                        "embedding",
-                        "label",
-                        dmin.alias("d"),
-                        cluster.alias("cluster"),
-                    ).cache(),
-                )
-    return hit[1]
+
+    def assign() -> DataFrame:
+        e = Tables(spark, sf_dir).embeddings
+        v = e.select(
+            "vec_id",
+            "embedding",
+            "label",
+            _micro(F.col("embedding")).alias("_vi"),
+        )
+        cluster, dmin = _cell_assign_cols("_vi", cents)
+        return v.select(
+            "vec_id",
+            "embedding",
+            "label",
+            dmin.alias("d"),
+            cluster.alias("cluster"),
+        ).cache()
+
+    return _IVF_ASSIGN_CACHE((app_id(spark), sf_dir), assign)
 
 
 def _ivf_index(
@@ -602,52 +570,36 @@ def _ivf_index(
     same corpus writes a sibling directory instead of overwrite-deleting
     the one the first process is actively serving reads from (the
     cross-process race the round-10 judge reproduced with three
-    concurrent Spark apps; _IVF_BUILD_LOCK is process-local and cannot
-    guard a machine-global path). Pinned by the two-process cold-cache
-    test in tests/test_concurrent.py."""
+    concurrent Spark apps; the memo's build lock is process-local and
+    cannot guard a machine-global path). Pinned by the two-process
+    cold-cache test in tests/test_concurrent.py."""
     import hashlib as _hl
     import os as _os
 
     from ..scratch import SCRATCH, owned
 
-    fp = note_read(sf_dir, "embeddings")  # a memo hit still records its input
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _IVF_INDEX_CACHE.get(key)
-    if hit is None or hit[0] != fp:
-        assigned = _ivf_assigned(spark, sf_dir, cents)  # own lock scope
-        with _IVF_BUILD_LOCK:
-            hit = _IVF_INDEX_CACHE.get(key)  # re-check under the lock
-            if hit is None or hit[0] != fp:
-                # the fingerprint is in the tag, so a rebuild after the
-                # corpus changed writes a sibling directory instead of
-                # deleting one a running query may still be reading
-                tag = (
-                    _os.path.basename(_os.path.normpath(sf_dir))
-                    + "_"
-                    + _hl.md5(
-                        (
-                            spark.sparkContext.applicationId
-                            + "|"
-                            + sf_dir
-                            + "|"
-                            + repr(fp)
-                        ).encode()
-                    ).hexdigest()[:10]
-                )
-                out = owned(_os.path.join(SCRATCH, f"ivf_index_{tag}"))
-                (
-                    assigned.write.mode("overwrite")
-                    .partitionBy("cluster")
-                    .parquet(out)
-                )
-                hit = _IVF_INDEX_CACHE[key] = (fp, out)
+    app = app_id(spark)
+
+    def write() -> str:
+        fp = note_read(sf_dir, "embeddings")
+        assigned = _ivf_assigned(spark, sf_dir, cents)
+        # the fingerprint is in the tag, so a rebuild after the corpus
+        # changed writes a sibling directory instead of deleting one a
+        # running query may still be reading
+        digest = _hl.md5(f"{app}|{sf_dir}|{fp!r}".encode()).hexdigest()[:10]
+        tag = f"{_os.path.basename(_os.path.normpath(sf_dir))}_{digest}"
+        out = owned(_os.path.join(SCRATCH, f"ivf_index_{tag}"))
+        assigned.write.mode("overwrite").partitionBy("cluster").parquet(out)
+        return out
+
+    out = _IVF_INDEX_CACHE((app, sf_dir), write)
     try:
         # keep a long-lived server's index younger than the stale-GC TTL
         # for as long as queries keep arriving (scratch.py contract)
-        _os.utime(hit[1])
+        _os.utime(out)
     except OSError:
         pass
-    return hit[1]
+    return out
 
 
 #: SQL twins of _micro and _l2sq_int (int64-exact, order-free).
@@ -921,8 +873,7 @@ SEMDEDUP_T = 0.3
 
 def _cell_assign_cols(micro_col_sql: str, cents: list[list[int]]):
     """(cluster, sqdist-to-own-centroid) from the exact integer
-    distances — the struct-min twin of :func:`_assign_cluster` for
-    operators that also need the winning distance. Takes the name of a
+    distances, ties to the lowest cluster id. Takes the name of a
     MATERIALIZED micro-unit column (round 14): quantize once per row in
     a separate projection, not once per centroid inside the distance
     expressions."""
@@ -1311,8 +1262,12 @@ def knn_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     directed pairs generated cell-locally (mega-cells chunk-split by
     functions/pairs.py, so one hot bucket cannot pin a task), partial
     pair dedup below the global distinct exchange. The bucketing pass
-    runs once with NO cache (the two pair branches share the cell
-    exchange via ReuseExchange), and fan_out_scan parallelizes the
+    runs with NO cache. The two pair branches share the cell exchange
+    only through AQE stage reuse at run time: the static plan
+    (plans/r14/knn_join_lsh_after.txt) holds the bucketing and
+    collect_set subtree twice with no ReusedExchange node, so a session
+    with AQE off pays the bucketing pass twice (time only; results are
+    unchanged). fan_out_scan parallelizes the
     32-plane bucketing over the under-split local scan (no-op at real
     scale). Candidate SET unchanged: pairs (x ≠ y) sharing ≥1
     (tbl, bucket) cell, exactly as before — vec_ids are unique within

@@ -8,15 +8,12 @@ function (plus its DuckDB oracle SQL, when SQL-expressible).
 
 from __future__ import annotations
 
-import threading
-import weakref
-from collections import Counter
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .sources.loader import Reads, note_reads, recording, table_fingerprint
+from .cache import Entry, Memo, app_id
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -41,26 +38,7 @@ class QuerySpec:
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-@dataclass(frozen=True)
-class PlanEntry:
-    """One memoized plan and the inputs it was built from."""
-
-    df: DataFrame
-    #: (sf_dir, table) → fingerprint of every fixture table the build read
-    reads: Reads
-
-    def current(self) -> bool:
-        """Do all the recorded inputs still look as they did? Stats only."""
-        return all(
-            table_fingerprint(d, t) == fp for (d, t), fp in self.reads.items()
-        )
-
-    def tables(self, sf_dir: str) -> set[str]:
-        """The tables of ``sf_dir`` the build read."""
-        return {t for d, t in self.reads if d == sf_dir}
-
-
-#: Plan cache: (applicationId, sf_dir, key) → :class:`PlanEntry`.
+#: Plan cache: (applicationId, sf_dir, key) → plan, a ``cache.Memo``.
 #:
 #: Spark re-analyzes, re-optimizes and re-codegens every freshly
 #: constructed plan (~0.4 s/query here — 5× the actual execution time at
@@ -68,75 +46,33 @@ class PlanEntry:
 #: across queries. A built plan is pinned to the file listing its scans
 #: took, and a build may fold values collected from the data into the
 #: plan, so an entry is only served while every table the build read
-#: (recorded by ``sources.loader`` with its fingerprint) still has that
-#: fingerprint; otherwise the key rebuilds. Re-collecting a served plan
-#: re-executes it (AQE re-runs only the stages whose shuffle output is
-#: gone). A hit costs file-system stats only; entries never cross
-#: sessions (applicationId key).
-_PLAN_CACHE: dict[tuple[str, str, str], PlanEntry] = {}
-
-#: plan-cache counters: "hits", "misses" (no entry) and "stale" (an
-#: entry whose inputs changed, rebuilt)
-_PLAN_COUNTS: Counter = Counter()
-_COUNT_LOCK = threading.Lock()
-
-#: SparkContext → applicationId, so a hit makes no py4j call
-_APP_IDS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+#: still has the fingerprint it had then; otherwise the key rebuilds.
+#: Re-collecting a served plan re-executes it (AQE re-runs only the
+#: stages whose shuffle output is gone). A hit costs file-system stats
+#: only; entries never cross sessions (applicationId key).
+_PLAN_CACHE = Memo("plan")
 
 
-def _count(what: str) -> None:
-    with _COUNT_LOCK:
-        _PLAN_COUNTS[what] += 1
+def _build(spark: SparkSession, sf_dir: str, key: str) -> Callable[[], DataFrame]:
+    # looked up when called, so a wrapped builder is honoured
+    return lambda: REGISTRY[key].raw_fn(spark, sf_dir)
 
 
-def plan_cache_stats() -> dict[str, int]:
-    """Hits, misses and stale rebuilds of the plan cache so far."""
-    with _COUNT_LOCK:
-        return {k: _PLAN_COUNTS[k] for k in ("hits", "misses", "stale")}
-
-
-def _cache_key(spark: SparkSession, sf_dir: str, key: str) -> tuple[str, str, str]:
-    sc = spark.sparkContext
-    app = _APP_IDS.get(sc)
-    if app is None:
-        app = _APP_IDS[sc] = sc.applicationId
-    return (app, sf_dir, key)
-
-
-def plan_entry(spark: SparkSession, sf_dir: str, key: str) -> PlanEntry | None:
+def plan_entry(spark: SparkSession, sf_dir: str, key: str) -> Entry | None:
     """The memoized entry of ``key``, current or not; None if never built."""
-    return _PLAN_CACHE.get(_cache_key(spark, sf_dir, key))
+    return _PLAN_CACHE.get((app_id(spark), sf_dir, key))
 
 
 def build_plan(spark: SparkSession, sf_dir: str, key: str) -> DataFrame:
-    """Build ``key`` afresh through ``REGISTRY[key].raw_fn`` (looked up
-    now, so a wrapped builder is honoured), record the tables it reads
-    and memoize it, replacing any older entry."""
-    cache_key = _cache_key(spark, sf_dir, key)
-    _count("stale" if cache_key in _PLAN_CACHE else "misses")
-    with recording() as reads:
-        df = REGISTRY[key].raw_fn(spark, sf_dir)
-    _PLAN_CACHE[cache_key] = PlanEntry(df, dict(reads))
-    note_reads(reads)  # a build nested in another records into it too
-    return df
-
-
-def current_plan(spark: SparkSession, sf_dir: str, key: str) -> DataFrame | None:
-    """The memoized plan of ``key`` if its inputs are unchanged (counted
-    as a hit), else None."""
-    entry = _PLAN_CACHE.get(_cache_key(spark, sf_dir, key))
-    if entry is None or not entry.current():
-        return None
-    _count("hits")
-    note_reads(entry.reads)
-    return entry.df
+    """Build ``key`` afresh through ``REGISTRY[key].raw_fn`` and memoize
+    it, replacing any older entry."""
+    return _PLAN_CACHE.build((app_id(spark), sf_dir, key), _build(spark, sf_dir, key))
 
 
 def memoized_plan(spark: SparkSession, sf_dir: str, key: str) -> DataFrame:
     """The memoized plan of ``key`` while its inputs are unchanged, else
     a fresh build."""
-    df = current_plan(spark, sf_dir, key)
-    return df if df is not None else build_plan(spark, sf_dir, key)
+    return _PLAN_CACHE((app_id(spark), sf_dir, key), _build(spark, sf_dir, key))
 
 
 def query(

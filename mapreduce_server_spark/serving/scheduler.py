@@ -122,12 +122,11 @@ def run_shared(
         # builds) write when built: they run once, fresh, below
         if "side_effects" in REGISTRY[k].tags:
             continue
-        df = registry.current_plan(spark, sf_dir, k)
-        if df is not None:
-            plans[k] = df
+        entry = registry.plan_entry(spark, sf_dir, k)
+        if entry is not None and entry.current():
+            plans[k] = registry.memoized_plan(spark, sf_dir, k)  # a counted hit
             report.reused.append(k)
             continue
-        entry = registry.plan_entry(spark, sf_dir, k)
         if entry is None:  # new: built now, to learn its tables
             plans[k] = registry.build_plan(spark, sf_dir, k)
             entry = registry.plan_entry(spark, sf_dir, k)

@@ -26,14 +26,12 @@ fixtures need on top of ``spark.read.parquet``:
 from __future__ import annotations
 
 import os
-import stat
-from collections.abc import Iterator, Mapping
-from contextlib import contextmanager
-from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
+
+from ..cache import Memo, app_id, note_read, table_path
 
 TABLE_NAMES = (
     "region",
@@ -67,80 +65,8 @@ MEASURE_COLUMNS: dict[str, tuple[str, ...]] = {
 #: run per process (one limit-pushed scan per measure table).
 _VALIDATE_SAMPLE_ROWS = 8192
 
-#: What a table's files looked like: ``(mtime_ns, size)`` for a file, the
-#: sorted ``(relative name, mtime_ns, size)`` of every file for a
-#: directory, ``None`` when the path is missing.
-Fingerprint = tuple | None
-
-#: (path, fingerprint) pairs already validated this process.
-_VALIDATED: set[tuple[str, Fingerprint]] = set()
-
-
-def fingerprint(path: str) -> Fingerprint:
-    """The one input fingerprint every cache keys on (the scan cache, the
-    plan cache's recorded reads, the session frame memo), so they cannot
-    disagree about whether a table changed. File-system stats only: an
-    append adds a part file, a rewrite moves mtime_ns or size."""
-    try:
-        st = os.stat(path)
-    except OSError:
-        return None
-    if not stat.S_ISDIR(st.st_mode):
-        return (st.st_mtime_ns, st.st_size)
-    files = []
-    for root, _, names in os.walk(path):
-        for n in names:
-            p = os.path.join(root, n)
-            try:
-                f = os.stat(p)
-            except OSError:
-                continue  # removed mid-walk: the next check sees the change
-            files.append((os.path.relpath(p, path), f.st_mtime_ns, f.st_size))
-    return tuple(sorted(files))
-
-
-def table_path(sf_dir: str, name: str) -> str:
-    return os.path.join(sf_dir, f"{name}.parquet")
-
-
-def table_fingerprint(sf_dir: str, name: str) -> Fingerprint:
-    return fingerprint(table_path(sf_dir, name))
-
-
-#: (sf_dir, table) → fingerprint of every table read while a plan builds.
-#: A context variable, so builds on concurrent threads record apart.
-Reads = dict[tuple[str, str], Fingerprint]
-_RECORDING: ContextVar[Reads | None] = ContextVar("_RECORDING", default=None)
-
-
-@contextmanager
-def recording() -> Iterator[Reads]:
-    """Record the fixture tables read inside the block (nested blocks
-    record apart; the plan cache merges an inner build's reads outward)."""
-    reads: Reads = {}
-    token = _RECORDING.set(reads)
-    try:
-        yield reads
-    finally:
-        _RECORDING.reset(token)
-
-
-def note_read(sf_dir: str, name: str) -> Fingerprint:
-    """Fingerprint ``name`` and add it to the open recording, if any.
-    Memos that hand back a frame or value derived from a table without
-    calling the loader call this on every hit."""
-    fp = table_fingerprint(sf_dir, name)
-    reads = _RECORDING.get()
-    if reads is not None:
-        reads[(sf_dir, name)] = fp
-    return fp
-
-
-def note_reads(reads: Mapping[tuple[str, str], Fingerprint]) -> None:
-    """Add already-fingerprinted reads to the open recording, if any."""
-    rec = _RECORDING.get()
-    if rec is not None:
-        rec.update(reads)
+#: path → True once the table's measures passed the contract check
+_VALIDATED = Memo("validated")
 
 
 def validate_measure_contract(
@@ -193,16 +119,17 @@ def validate_measure_contract(
         )
 
 
-def _maybe_validate(
-    spark: SparkSession, sf_dir: str, name: str, path: str, fp: Fingerprint
-) -> None:
-    if os.environ.get("SPARK_GRAFT_VALIDATE_MEASURES", "") != "1":
+def _maybe_validate(spark: SparkSession, sf_dir: str, name: str) -> None:
+    opted_in = os.environ.get("SPARK_GRAFT_VALIDATE_MEASURES", "") == "1"
+    if not opted_in or name not in MEASURE_COLUMNS:
         return
-    key = (path, fp)
-    if key in _VALIDATED or name not in MEASURE_COLUMNS:
-        return
-    validate_measure_contract(spark, sf_dir, name)
-    _VALIDATED.add(key)
+
+    def check() -> bool:
+        note_read(sf_dir, name)
+        validate_measure_contract(spark, sf_dir, name)
+        return True
+
+    _VALIDATED(table_path(sf_dir, name), check)
 
 
 _RUNTIME_CONFS = {
@@ -218,15 +145,14 @@ _RUNTIME_CONFS = {
 }
 
 
-#: table-scan cache: (applicationId, sf_dir, name, fingerprint) → DataFrame.
-#: Scans are immutable plans over a file listing taken when they were
-#: made; caching skips the per-call parquet footer read and schema
-#: inference (~80 ms/table). The fingerprint in the key makes the cache
-#: drift-safe: if the fixture is regenerated or appended to under a live
-#: process (the events timestamp encoding changed between rounds; a log
-#: directory gains part files), the stale scan is simply never hit again
-#: and the listing and dtype dispatch re-run on the fresh files.
-_SCAN_CACHE: dict[tuple[str, str, str, Fingerprint], DataFrame] = {}
+#: table-scan cache: (applicationId, sf_dir, name) → DataFrame. Scans
+#: are immutable plans over a file listing taken when they were made;
+#: caching skips the per-call parquet footer read and schema inference
+#: (~80 ms/table). If the fixture is regenerated or appended to under a
+#: live process (the events timestamp encoding changed between rounds; a
+#: log directory gains part files), the entry is replaced and the
+#: listing and dtype dispatch re-run on the fresh files.
+_SCAN_CACHE = Memo("scan")
 
 
 def _normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -261,24 +187,25 @@ def ensure_confs(spark: SparkSession) -> None:
             spark.conf.set(k, v)
 
 
+def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    note_read(sf_dir, name)  # fingerprinted before Spark lists the files
+    df = spark.read.parquet(table_path(sf_dir, name))
+    return _normalize_events_ts(df) if name == "events" else df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table; applies the events timestamp normalization.
-    The table is recorded, with the fingerprint taken before Spark lists
-    its files, into the open :func:`recording`."""
+    The table is recorded with its fingerprint into the open
+    ``cache.recording``."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     ensure_confs(spark)
-    path = table_path(sf_dir, name)
-    fp = note_read(sf_dir, name)
-    key = (spark.sparkContext.applicationId, sf_dir, name, fp)
-    df = _SCAN_CACHE.get(key)
-    if df is None:
-        _maybe_validate(spark, sf_dir, name, path, fp)
-        df = spark.read.parquet(path)
-        if name == "events":
-            df = _normalize_events_ts(df)
-        _SCAN_CACHE[key] = df
-    return df
+
+    def scan() -> DataFrame:
+        _maybe_validate(spark, sf_dir, name)
+        return _read(spark, sf_dir, name)
+
+    return _SCAN_CACHE((app_id(spark), sf_dir, name), scan)
 
 
 def load_table_fresh(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -292,16 +219,13 @@ def load_table_fresh(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     ensure_confs(spark)
-    note_read(sf_dir, name)
-    df = spark.read.parquet(table_path(sf_dir, name))
-    if name == "events":
-        df = _normalize_events_ts(df)
-    return df
+    return _read(spark, sf_dir, name)
 
 
 #: (applicationId, sorted input files, parallelism) → scan partition
-#: count, for :func:`fan_out_scan`'s conditionality probe.
-_FANOUT_NPART: dict[tuple[str, tuple[str, ...], int], int] = {}
+#: count, for :func:`fan_out_scan`'s conditionality probe. Its builds
+#: read no fixture table, so its entries are always current.
+_FANOUT_NPART = Memo("fanout")
 
 
 def fan_out_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
@@ -330,20 +254,22 @@ def fan_out_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
     Round 14 (ADVICE r13): the split-count probe is memoized per
     (application, input file set, parallelism) — ``df.rdd`` forces a
     full physical-plan → RDD translation on every call, and this helper
-    sits on ~10 hot operator build paths. A scan's partition count
-    depends on the file layout and session confs, never on the
-    projection/filter above it, so the file set is the right key; the
-    probe frames in tests (range(), no files) key to an empty file set
-    and skip the memo."""
+    sits on ~10 hot operator build paths. The probe frames in tests
+    (range(), no files) key to an empty file set and skip the memo.
+
+    Scan-only contract: ``df`` must be a table scan with at most narrow
+    operators (projection, filter) above it. Such a frame's partition
+    count depends only on the file layout, so the file set is the right
+    key. The key ignores the plan above the scan and any later change
+    of the split confs (e.g. ``maxPartitionBytes``): a shuffled or
+    aggregated frame over the same files would be served the scan's
+    memoized count and mis-decide the fan-out."""
     target = spark.sparkContext.defaultParallelism
     files = tuple(sorted(df.inputFiles()))
-    key = (spark.sparkContext.applicationId, files, target)
-    if files and key in _FANOUT_NPART:
-        n = _FANOUT_NPART[key]
+    if files:
+        n = _FANOUT_NPART((app_id(spark), files, target), lambda: df.rdd.getNumPartitions())
     else:
         n = df.rdd.getNumPartitions()
-        if files:
-            _FANOUT_NPART[key] = n
     if n >= target:
         return df
     return df.repartition(target)

@@ -28,6 +28,20 @@ def pytest_configure(config):
     )
 
 
+def _sweep_deselected(config) -> bool:
+    # an explicit marker expression wins (e.g. -m sweep)
+    return not (os.environ.get("SPARK_GRAFT_FULL_SUITE") or config.getoption("-m"))
+
+
+def pytest_report_header(config):
+    if _sweep_deselected(config):
+        return (
+            "@sweep full-registry axes are deselected; "
+            "SPARK_GRAFT_FULL_SUITE=1 runs them (the full lane)"
+        )
+    return None
+
+
 def pytest_collection_modifyitems(config, items):
     """Default lane excludes the @pytest.mark.sweep axes (round-14,
     VERDICT r13 #1): the full suite runs ~90-220 min — outside any
@@ -35,10 +49,8 @@ def pytest_collection_modifyitems(config, items):
     ~620 tests) covers every operator, helper and lint. The sweep
     fixtures remain the CI/endgame lane: opt in with
     SPARK_GRAFT_FULL_SUITE=1 or an explicit -m expression."""
-    if os.environ.get("SPARK_GRAFT_FULL_SUITE"):
+    if not _sweep_deselected(config):
         return
-    if config.getoption("-m"):
-        return  # explicit marker expression wins (e.g. -m sweep)
     deselected = [it for it in items if it.get_closest_marker("sweep")]
     if not deselected:
         return

@@ -90,8 +90,8 @@ spark.stop()
 
 def test_two_process_cold_build_does_not_race(spark):
     """Round-10 judge finding: two concurrent Spark APPLICATIONS
-    cold-hitting the same corpus raced the on-disk IVF index —
-    _IVF_BUILD_LOCK is process-local, but the directory was keyed by
+    cold-hitting the same corpus raced the on-disk IVF index — the
+    memo's build lock is process-local, but the directory was keyed by
     sf_dir only and written mode("overwrite"), so process B's build
     deleted the files process A was serving reads from (py4j
     FileNotFound). The fix keys the directory by (applicationId,

@@ -17,7 +17,7 @@ import pyarrow.parquet as pq
 import pytest
 
 import bench
-from mapreduce_server_spark import registry
+from mapreduce_server_spark import cache, registry
 from mapreduce_server_spark.operators import _memo
 from mapreduce_server_spark.operators import similarity as sim
 from mapreduce_server_spark.registry import REGISTRY
@@ -55,6 +55,29 @@ def log_copy(tmp_path):
     return d
 
 
+def _append_events(sf_dir: str, part: int) -> None:
+    """Append a copy of sf0.001's events as part file ``part``, with
+    event ids shifted past every earlier part's."""
+    events = pq.read_table(_table(SF0001, "events"))
+    grown = events.set_column(
+        0, "event_id", pc.add(events.column("event_id"), part * 1_000_000)
+    )
+    pq.write_table(grown, os.path.join(_table(sf_dir, "events"), f"part-{part:05d}.parquet"))
+
+
+def _rotate_embeddings(sf_dir: str) -> None:
+    """Every vec_id takes the next row's vector: the query vector, the
+    IVF seeds and the k-center seed all change."""
+    path = _table(sf_dir, "embeddings")
+    emb = pq.read_table(path)
+    vecs = emb.column("embedding").to_pylist()
+    i = emb.schema.get_field_index("embedding")
+    rotated = emb.set_column(
+        i, emb.schema.field(i), pa.array(vecs[1:] + vecs[:1], emb.schema.field(i).type)
+    )
+    pq.write_table(rotated, path)
+
+
 def test_appended_part_file_and_rewritten_table_rebuild(spark, log_copy):
     key = "stream_tumbling"
     first = REGISTRY[key].fn(spark, log_copy)
@@ -62,11 +85,7 @@ def test_appended_part_file_and_rewritten_table_rebuild(spark, log_copy):
     assert REGISTRY[key].fn(spark, log_copy) is first  # unchanged → hit
 
     # append a day's worth of new events as a second part file
-    events = pq.read_table(_table(SF0001, "events"))
-    grown = events.set_column(
-        0, "event_id", pc.add(events.column("event_id"), 1_000_000)
-    )
-    pq.write_table(grown, os.path.join(_table(log_copy, "events"), "part-00001.parquet"))
+    _append_events(log_copy, 1)
     second = REGISTRY[key].fn(spark, log_copy)
     con = make_duck(log_copy)
     assert_parity(second, con, REGISTRY[key].oracle, key)
@@ -76,13 +95,13 @@ def test_appended_part_file_and_rewritten_table_rebuild(spark, log_copy):
     q1 = "q1_pricing_summary"
     before = REGISTRY[q1].fn(spark, log_copy)
     before.collect()
-    stats = registry.plan_cache_stats()
+    stats = cache.stats()["plan"]
     li = pq.read_table(_table(log_copy, "lineitem"))
     pq.write_table(li.slice(0, li.num_rows // 2), _table(log_copy, "lineitem"))
     after = REGISTRY[q1].fn(spark, log_copy)
     assert_parity(after, con, REGISTRY[q1].oracle, q1)
     assert after is not before
-    assert registry.plan_cache_stats()["stale"] == stats["stale"] + 1
+    assert cache.stats()["plan"]["stale"] == stats["stale"] + 1
 
 
 def test_stale_keys_rebuild_against_the_pin(spark, log_copy, monkeypatch):
@@ -91,12 +110,7 @@ def test_stale_keys_rebuild_against_the_pin(spark, log_copy, monkeypatch):
     its plan eagerly, as a tracer's plan capture does."""
     keys = ["stream_tumbling", "cohort_retention"]
     scheduler.run_shared(spark, log_copy, keys)
-
-    events = pq.read_table(_table(SF0001, "events"))
-    grown = events.set_column(
-        0, "event_id", pc.add(events.column("event_id"), 1_000_000)
-    )
-    pq.write_table(grown, os.path.join(_table(log_copy, "events"), "part-00001.parquet"))
+    _append_events(log_copy, 1)
 
     def planned_eagerly(raw):
         def build(s, sf_dir):
@@ -138,30 +152,82 @@ def test_rewritten_embeddings_rebuild_the_value_memos(spark, log_copy):
     data."""
     for key in EMBEDDING_MEMO_KEYS:
         REGISTRY[key].fn(spark, log_copy).collect()
-    # every vec_id takes the next row's vector: the query vector, the
-    # IVF seeds and the k-center seed all change
-    path = _table(log_copy, "embeddings")
-    emb = pq.read_table(path)
-    vecs = emb.column("embedding").to_pylist()
-    i = emb.schema.get_field_index("embedding")
-    rotated = emb.set_column(
-        i, emb.schema.field(i), pa.array(vecs[1:] + vecs[:1], emb.schema.field(i).type)
-    )
-    pq.write_table(rotated, path)
+    _rotate_embeddings(log_copy)
     con = make_duck(log_copy)
     for key in EMBEDDING_MEMO_KEYS:
         assert_parity(REGISTRY[key].fn(spark, log_copy), con, REGISTRY[key].oracle, key)
 
 
+def test_appends_replace_the_log_scan(spark, log_copy):
+    """Each append to the log replaces the table's scan memo entry
+    instead of adding one, and the new scan reads every part."""
+    loader.load_table(spark, log_copy, "events")
+    entries = len(loader._SCAN_CACHE)
+    for part in range(1, 6):
+        _append_events(log_copy, part)
+        df = loader.load_table(spark, log_copy, "events")
+        assert len(loader._SCAN_CACHE) == entries, part
+    assert df.count() == 6 * pq.read_metadata(_table(SF0001, "events")).num_rows
+
+
+def test_fan_out_probe_is_memoized(spark, monkeypatch):
+    """A second fan-out over the same files reuses the partition count
+    without translating a plan to an RDD again."""
+    df = loader.load_table(spark, SF0001, "orders")
+    loader.fan_out_scan(df, spark)
+    monkeypatch.setattr(type(df), "rdd", property(lambda _: pytest.fail("translated")))
+    loader.fan_out_scan(df.select("o_orderkey"), spark)
+
+
+#: one key through every fingerprinted memo: the event log's scan, its
+#: measure-contract check and plan (stream_tumbling), the query vector
+#: (knn_bruteforce), the IVF centroids, assignment and index
+#: (knn_ivf_pruned), the k-center coreset (sample_kcenter) and a
+#: session frame over documents (quality_drift_psi)
+EVERY_MEMO_KEYS = [
+    "stream_tumbling",
+    "knn_bruteforce",
+    "knn_ivf_pruned",
+    "sample_kcenter",
+    "quality_drift_psi",
+]
+
+
+def test_every_memo_rebuilds_after_its_inputs_change(spark, log_copy, monkeypatch):
+    """Rewriting embeddings and documents and appending to the log makes
+    every memo that records reads rebuild; every key still matches its
+    oracle."""
+    monkeypatch.setenv("SPARK_GRAFT_VALIDATE_MEASURES", "1")
+    for key in EVERY_MEMO_KEYS:
+        REGISTRY[key].fn(spark, log_copy).collect()
+    before = cache.stats()
+
+    _rotate_embeddings(log_copy)
+    docs = pq.read_table(_table(log_copy, "documents"))
+    pq.write_table(docs.slice(0, docs.num_rows - 10), _table(log_copy, "documents"))
+    _append_events(log_copy, 1)
+
+    con = make_duck(log_copy)
+    for key in EVERY_MEMO_KEYS:
+        assert_parity(REGISTRY[key].fn(spark, log_copy), con, REGISTRY[key].oracle, key)
+    after = cache.stats()
+    not_rebuilt = [
+        name
+        for name in after
+        if name != "fanout" and after[name]["stale"] <= before[name]["stale"]
+    ]
+    assert not_rebuilt == []
+
+
 def test_counters_split_hits_misses_and_stale(spark, log_copy):
     key = "agg_group"
-    s0 = registry.plan_cache_stats()
+    s0 = cache.stats()["plan"]
     REGISTRY[key].fn(spark, log_copy)
     REGISTRY[key].fn(spark, log_copy)
     orders = _table(log_copy, "orders")
     pq.write_table(pq.read_table(orders).slice(0, 10), orders)
     REGISTRY[key].fn(spark, log_copy)
-    s1 = registry.plan_cache_stats()
+    s1 = cache.stats()["plan"]
     assert {k: s1[k] - s0[k] for k in s1} == {"hits": 1, "misses": 1, "stale": 1}
 
 
@@ -189,14 +255,24 @@ def test_memo_hits_still_record_their_table(spark):
     )
     sim._query_vector(spark, SF0001)
     try:
-        with loader.recording() as reads:
+        with cache.recording() as reads:
             _memo.session_cache(spark, SF0001, tag, lambda: pytest.fail("rebuilt"))
             sim._query_vector(spark, SF0001)
         assert set(reads) == {(SF0001, "documents"), (SF0001, "embeddings")}
     finally:
         app = spark.sparkContext.applicationId
-        for k in [k for k in _memo._FRAME_CACHE if k[:3] == (app, SF0001, tag)]:
-            _memo._FRAME_CACHE.pop(k).unpersist()
+        _memo._FRAME_CACHE.pop((app, SF0001, tag)).value.unpersist()
+
+
+def test_clear_frames_releases_every_cached_frame(spark):
+    frame = _memo.session_cache(
+        spark, SF0001, "test_clear_frames",
+        lambda: loader.load_table(spark, SF0001, "documents").limit(1),
+    )
+    assert frame.storageLevel.useMemory
+    cache.clear_frames()
+    assert len(_memo._FRAME_CACHE) == len(sim._IVF_ASSIGN_CACHE) == 0
+    assert not frame.storageLevel.useMemory
 
 
 def test_concurrent_builds_record_apart(spark, monkeypatch):

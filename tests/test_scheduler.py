@@ -3,7 +3,7 @@ the executed plans, semantically transparent, and cleaned up."""
 
 from __future__ import annotations
 
-from mapreduce_server_spark import REGISTRY, registry
+from mapreduce_server_spark import REGISTRY, cache, registry
 from mapreduce_server_spark.serving import scheduler
 
 from .conftest import SF001
@@ -61,10 +61,10 @@ def test_run_shared_matches_solo_and_uses_cache(spark):
     # inputs unchanged: the next batch re-collects every memoized plan
     # as it is (each counted as a plan-cache hit), pins nothing, and
     # returns the same rows
-    hits = registry.plan_cache_stats()["hits"]
+    hits = cache.stats()["plan"]["hits"]
     results, report = scheduler.run_shared(spark, SF001, BATCH, min_share=2)
     assert report.reused == BATCH
-    assert registry.plan_cache_stats()["hits"] == hits + len(BATCH)
+    assert cache.stats()["plan"]["hits"] == hits + len(BATCH)
     assert report.shared_tables == []
     assert report.used_cache == {}
     for k in BATCH:

@@ -10,9 +10,9 @@ Round-14 methodology fix (VERDICT r13 #2 — the r13 instrument's warm-up
 filled ``.cache()``'d subtrees, so its "full recompute" excluded cache
 fills): each timed run now measures a genuinely COLD execution —
 
-- ``spark.catalog.clearCache()`` + the operator-layer frame memos
-  (operators._memo.clear_frame_cache, the IVF assignment cache) are
-  cleared BEFORE the timed region, and
+- ``spark.catalog.clearCache()`` + the memoized cached frames
+  (``cache.clear_frames``: the operator frame memo and the IVF
+  assignment) are cleared BEFORE the timed region, and
 - the timed region is a FRESH plan build (``spec.raw_fn``) plus the
   noop write, so plan analysis/codegen, every in-query cache FILL, and
   any build-time driver-side work (e.g. knn_mmr's K-bounded collects)
@@ -20,10 +20,11 @@ fills): each timed run now measures a genuinely COLD execution —
   deployment actually pays per query.
 
 Deliberately kept WARM across runs (the documented ingest-time
-artifacts, not per-query work): driver-side training memos
-(_QV_CACHE / _IVF_CACHE centroids / _KCENTER_CACHE — small collected
-VALUES built once per corpus) and the on-disk IVF index
-(tags=("side_effects",) materialization). The boundary is "Spark-side
+artifacts, not per-query work): the memos that hold no cached frame —
+the driver-side value memos (query vector, IVF centroids, k-center
+coreset: small collected VALUES built once per corpus), the on-disk IVF
+index (tags=("side_effects",) materialization), the table scans, the
+fan-out partition counts and the measure-contract checks. The boundary is "Spark-side
 cached frames are per-query cost; ingest-time artifacts are not", and
 it is symmetric before/after within this round's sweeps.
 
@@ -48,25 +49,17 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from mapreduce_server_spark import REGISTRY  # noqa: E402
-from mapreduce_server_spark.operators import _memo  # noqa: E402
-from mapreduce_server_spark.operators import similarity  # noqa: E402
+from mapreduce_server_spark import REGISTRY, cache  # noqa: E402
 from mapreduce_server_spark.session import get_spark  # noqa: E402
 
 
 def clear_query_caches(spark) -> None:
     """Drop every Spark-side cached frame so the next build re-registers
-    and the next action pays the fill: the catalog cache (covers bare
-    in-operator ``.cache()`` sites of the frame about to be rebuilt),
-    the _memo session frames, and the IVF assignment cache. Driver-side
-    value memos and disk indexes stay warm (module docstring)."""
-    _memo.clear_frame_cache()
-    for _, d in list(similarity._IVF_ASSIGN_CACHE.values()):
-        try:
-            d.unpersist()
-        except Exception:
-            pass
-    similarity._IVF_ASSIGN_CACHE.clear()
+    and the next action pays the fill: the memoized frames and the
+    catalog cache (covers bare in-operator ``.cache()`` sites of the
+    frame about to be rebuilt). The other memos stay warm (module
+    docstring)."""
+    cache.clear_frames()
     spark.catalog.clearCache()
 
 
