@@ -1,23 +1,36 @@
-"""Vector math over array<float> embedding columns — JVM-side only.
+"""Vector math over array embedding columns, emitted as Spark SQL text.
 
-Elements are cast float→double (exact) before multiplying so the
-arithmetic is bit-identical to the DuckDB oracle's
-``list_zip``/``list_sum`` form; see scalar_array for the proven pattern.
+Every dot product, norm, cosine and squared distance in the package is
+built here as SQL text and used through ``F.expr``: Spark parses the
+whole expression in one call, where building it node by node from
+Columns costs one py4j round trip per node (about a second for one
+64-dim cosine).
 
-Round-13 optimization (guide §1.2 "per-task work"): Spark's
-higher-order functions (``aggregate``/``zip_with``/``transform``) are
-NOT whole-stage-codegen'd — every element evaluates an interpreted
-lambda, and the noop-sink sweep showed the fold cost dominating the
-similarity/ML-knn tier (knn_join_lsh 20 s, knn_recall 14 s,
-ml_eval_confusion 9.5 s full recompute at sf0.1). ``dot``/``norm`` now
-take a SIZE-GUARDED fast path: when both arrays have the fixture
-dimensionality (64), an unrolled left-associated expression computes
-the identical sequential double fold under codegen; any other length
-(or NULL) falls back to the original fold. Bit-identity was verified
-element-wise over 100k pairs (struct.pack comparison, probe in
-OPTIMIZATION_r13.md): the unrolled sum performs the SAME double ops in
-the SAME order, so no oracle can tell the difference. Measured 0.88 →
-0.36 s per 100k dots (median of 3, noop sink).
+Rules every builder keeps:
+
+- **Order.** The sum is a sequential left fold in element order, seeded
+  with 0.0 (0 for the int64 distance) — the order of the DuckDB
+  oracle's ``list_sum``, so the doubles are bit-identical to it. The
+  seed matters: 0.0 + (-0.0) is +0.0, so an all-negative-zero product
+  chain must start from the same literal.
+- **Width.** Elements are cast to DOUBLE before any arithmetic
+  (float→double is exact).
+- **Operands.** Each operand is column SQL text or a literal vector.
+  Literal elements go through :func:`_dlit`, which the JVM parses to
+  the identical bits. A literal vector's norm is folded once in Python
+  (:func:`py_norm`, the same double ops in the same order) and emitted
+  as one literal.
+- **Unroll.** ``unroll=True`` adds a size-guarded unroll: when every
+  column operand has ``FAST_DIM`` elements, the same ops in the same
+  order written out as one expression, which whole-stage codegen
+  compiles (higher-order functions evaluate an interpreted lambda per
+  element). Any other length, or NULL, takes the fold. It pays where a
+  plan evaluates one such expression per row over many rows (pair
+  rescoring, the ml_* scans; 0.88 → 0.36 s per 100k dots). The fold is
+  the default because plans that stack many literal-vector expressions
+  in one projection (LSH planes, IVF centroids) fall out of codegen
+  with the unroll and run slower than the fold (knn_join_lsh's 32-plane
+  bucketing: 5.2 s unrolled, 0.45 s fold).
 
 Scale: a dot product is O(dim) per row with zero shuffle; the expensive
 part of any similarity operator is the candidate-pair generation, which is
@@ -27,15 +40,19 @@ query vector, knn-join bounds candidates per key, LSH buckets first.
 
 from __future__ import annotations
 
-from math import isinf, isnan
+from collections.abc import Callable, Sequence
+from math import isinf, isnan, sqrt
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: dimensionality of the committed embedding fixtures — the unrolled
-#: codegen fast path is generated for exactly this length; every other
-#: length takes the general fold (same values, interpreted speed).
+#: dimensionality of the committed embedding fixtures — the unroll is
+#: generated for exactly this length; every other length takes the fold
+#: (same values, interpreted speed).
 FAST_DIM = 64
+
+#: an operand: column SQL text, or a literal vector
+Vec = str | Sequence[float]
 
 
 def fsum(arr: Column) -> Column:
@@ -43,187 +60,119 @@ def fsum(arr: Column) -> Column:
     return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def _dot_fold(a: Column, b: Column) -> Column:
-    return fsum(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")))
-
-
-def _dot_unrolled(a: Column, b: Column, dim: int) -> Column:
-    # starts from literal 0.0 exactly like the fold — NOT from the bare
-    # first product: 0.0 + (-0.0) is +0.0, so an all-negative-zero
-    # product chain must accumulate the same signed zeros as the fold
-    acc = F.lit(0.0) + a.getItem(0).cast("double") * b.getItem(0).cast("double")
-    for i in range(1, dim):
-        acc = acc + a.getItem(i).cast("double") * b.getItem(i).cast("double")
-    return acc
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Dot product in double precision (left fold order; codegen fast
-    path at FAST_DIM — bit-identical, see module docstring)."""
-    return F.when(
-        (F.size(a) == FAST_DIM) & (F.size(b) == FAST_DIM),
-        _dot_unrolled(a, b, FAST_DIM),
-    ).otherwise(_dot_fold(a, b))
-
-
-def _norm_fold(a: Column) -> Column:
-    return F.sqrt(fsum(F.transform(a, lambda x: x.cast("double") * x.cast("double"))))
-
-
-def _norm_unrolled(a: Column, dim: int) -> Column:
-    x0 = a.getItem(0).cast("double")
-    acc = F.lit(0.0) + x0 * x0  # signed-zero parity with the fold
-    for i in range(1, dim):
-        xi = a.getItem(i).cast("double")
-        acc = acc + xi * xi
-    return F.sqrt(acc)
-
-
-def norm(a: Column) -> Column:
-    """L2 norm in double precision (same fast-path discipline as dot)."""
-    return F.when(F.size(a) == FAST_DIM, _norm_unrolled(a, FAST_DIM)).otherwise(
-        _norm_fold(a)
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity in double precision."""
-    return dot(a, b) / (norm(a) * norm(b))
-
-
-# ---------------------------------------------------------------------------
-# Literal-vector fast builders (round 14).
-#
-# dot(col, F.lit(vec)) constructs the guarded unrolled expression node by
-# node over py4j: ~300 JVM round-trips per call. Harmless once, but the
-# plane/centroid operators build DOZENS of literal-vector dots per plan —
-# knn_join_lsh's 32 planes measured 28-32 s of pure DRIVER build time per
-# fresh plan (vs ~10 s to actually EXECUTE the query at sf0.1). These
-# builders emit the equivalent expression as ONE SQL string parsed
-# server-side in a single py4j call (~ms): the sequential 0.0-seeded
-# fold, whose result is bit-for-bit the same as dot()'s on every input
-# (the unroll ≡ fold identity pinned in round 13, re-pinned for these
-# builders by tests/test_r14_optimizations.py over every
-# (vector, plane) pair of the fixture corpus).
-# ---------------------------------------------------------------------------
-
-
 def _dlit(v: float) -> str:
     """Exact Spark SQL DOUBLE literal: repr round-trips the double and
     Spark's parser is correctly rounded, so the JVM sees the identical
-    bits. Finite values only (planes/centroids/embeddings): NaN and ±Inf
-    have no SQL literal, so they raise ValueError (also under -O)."""
+    bits. Finite values only: NaN and ±Inf have no SQL literal, so they
+    raise ValueError (also under -O)."""
     v = float(v)
     if isnan(v) or isinf(v):
         raise ValueError(f"no exact SQL literal for non-finite {v!r}")
     return repr(v) + "D"
 
 
-def dot_lit_sql(col_sql: str, vec: list[float]) -> str:
-    """SQL text of ``dot(F.expr(col_sql), F.lit(vec))`` — emitted as the
-    sequential FOLD, not the FAST_DIM unroll. Bit-identical to dot()
-    either way (the r13 pin: the unroll performs the same double ops in
-    the same order as the fold), but these builders exist for plans
-    that stack MANY literal-vector distances into one projection
-    (32 LSH planes, 16 IVF centroids), where the unrolled form's
-    thousands of expression nodes threw Janino out of whole-stage
-    codegen and ran INTERPRETED-unrolled — measured 5.2 s vs the
-    fold's 0.45 s for knn_join_lsh's bucketing pass, and 3.3 s vs
-    0.5 s for the 16-centroid IVF distance array (A/B in
-    OPTIMIZATION_r14.md). The per-row unroll win is real only where a
-    plan evaluates ONE such distance (the Column-built FAST_DIM path
-    above keeps it); per-plan × per-literal, the fold is the fast
-    path."""
-    arr = "array(" + ", ".join(_dlit(v) for v in vec) + ")"
-    return (
-        f"aggregate(zip_with({col_sql}, {arr}, "
-        f"(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        f"0.0D, (acc, x) -> acc + x)"
-    )
+def _ilit(v: int) -> str:
+    """Exact Spark SQL BIGINT literal."""
+    return f"{int(v)}L"
 
 
-def norm_sql(col_sql: str) -> str:
-    """SQL text of ``norm(F.expr(col_sql))`` — the sequential
-    square-sum fold under sqrt (fold-not-unroll per dot_lit_sql)."""
-    return (
-        f"sqrt(aggregate(transform({col_sql}, "
-        f"x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-        f"0.0D, (acc, x) -> acc + x))"
-    )
-
-
-def norm_lit_sql(vec: list[float]) -> str:
-    """SQL text of ``norm(F.lit(vec))`` — emitted over the literal
-    array so the ENGINE constant-folds it (never pre-computed in
-    Python: the engine's own fold is the value of record)."""
-    arr = "array(" + ", ".join(_dlit(v) for v in vec) + ")"
-    return (
-        f"sqrt(aggregate(transform({arr}, "
-        f"x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-        f"0.0D, (acc, x) -> acc + x))"
-    )
-
-
-def dot_cols_sql(a_sql: str, b_sql: str, *, unroll: bool = False) -> str:
-    """SQL text of ``dot(F.expr(a_sql), F.expr(b_sql))`` for NAMED
-    columns — one py4j parse instead of ~300 node-building round-trips.
-    ``unroll=True`` emits dot()'s exact guarded FAST_DIM unroll
-    (bit-identical by the r13 pin) for plans that evaluate ONE such dot
-    per row at high volume under whole-stage codegen (knn_join_lsh's
-    million-pair rescore); the default fold is right everywhere else
-    (see dot_lit_sql on why stacked unrolls backfire)."""
-    fold = (
-        f"aggregate(zip_with({a_sql}, {b_sql}, "
-        f"(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        f"0.0D, (acc, x) -> acc + x)"
-    )
-    if not unroll:
+def _fold(
+    term: Callable[..., str],
+    vecs: Sequence[Vec],
+    *,
+    unroll: bool = False,
+    lit: Callable = _dlit,
+    zero: str = "0.0D",
+) -> str:
+    """SQL text of Σ term(elements) over one or two operands: the
+    ``zero``-seeded sequential left fold, or with ``unroll`` the same
+    sum written out for FAST_DIM elements under a size guard on every
+    column operand (module docstring). ``term`` maps the SQL text of
+    one element per operand to the SQL text of its summand."""
+    arrays = [
+        v if isinstance(v, str) else "array(" + ", ".join(map(lit, v)) + ")"
+        for v in vecs
+    ]
+    if len(vecs) == 1:
+        src = f"transform({arrays[0]}, x -> {term('x')})"
+    else:
+        src = f"zip_with({arrays[0]}, {arrays[1]}, (x, y) -> {term('x', 'y')})"
+    fold = f"aggregate({src}, {zero}, (acc, x) -> acc + x)"
+    cols = [v for v in vecs if isinstance(v, str)]
+    if not unroll or not cols or any(
+        len(v) != FAST_DIM for v in vecs if not isinstance(v, str)
+    ):
         return fold
-    unrolled = "0.0D + " + " + ".join(
-        f"CAST({a_sql}[{i}] AS DOUBLE) * CAST({b_sql}[{i}] AS DOUBLE)"
+    terms = " + ".join(
+        term(*(f"{v}[{i}]" if isinstance(v, str) else lit(v[i]) for v in vecs))
         for i in range(FAST_DIM)
     )
+    guard = " AND ".join(f"(size({c}) = {FAST_DIM})" for c in cols)
+    return f"CASE WHEN {guard} THEN ({zero} + {terms}) ELSE ({fold}) END"
+
+
+def _mul(x: str, y: str) -> str:
+    return f"CAST({x} AS DOUBLE) * CAST({y} AS DOUBLE)"
+
+
+def _sq_diff(x: str, y: str) -> str:
+    d = f"(CAST({x} AS DOUBLE) - CAST({y} AS DOUBLE))"
+    return f"{d} * {d}"
+
+
+def py_dot(a: Sequence[float], b: Sequence[float]) -> float:
+    """Driver-side twin of :func:`dot_sql`'s fold: the same double ops
+    in the same order, so the value is bit-identical."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += float(x) * float(y)
+    return acc
+
+
+def py_norm(a: Sequence[float]) -> float:
+    """Driver-side twin of :func:`norm_sql`'s fold (``math.sqrt`` and
+    the JVM's ``Math.sqrt`` are both correctly rounded)."""
+    return sqrt(py_dot(a, a))
+
+
+def dot_sql(a: Vec, b: Vec, *, unroll: bool = False) -> str:
+    """Dot product in double precision."""
+    return _fold(_mul, (a, b), unroll=unroll)
+
+
+def norm_sql(a: Vec, *, unroll: bool = False) -> str:
+    """L2 norm in double precision; a literal vector's is one literal."""
+    if not isinstance(a, str):
+        return _dlit(py_norm(a))
+    return f"sqrt({_fold(lambda x: _mul(x, x), (a,), unroll=unroll)})"
+
+
+def cosine_sql(a: Vec, b: Vec, *, unroll: bool = False) -> str:
+    """Cosine similarity: dot / (norm · norm)."""
     return (
-        f"CASE WHEN (size({a_sql}) = {FAST_DIM}) "
-        f"AND (size({b_sql}) = {FAST_DIM}) "
-        f"THEN ({unrolled}) ELSE ({fold}) END"
+        f"({dot_sql(a, b, unroll=unroll)}) / "
+        f"(({norm_sql(a, unroll=unroll)}) * ({norm_sql(b, unroll=unroll)}))"
     )
 
 
-def cosine_lit_sql(col_sql: str, vec: list[float]) -> str:
-    """SQL text of ``cosine(F.expr(col_sql), F.lit(vec))``: same
-    dot/(norm·norm) composition, every piece the fold form."""
-    return (
-        f"({dot_lit_sql(col_sql, vec)}) / "
-        f"(({norm_sql(col_sql)}) * ({norm_lit_sql(vec)}))"
+def sq_dist_sql(a: Vec, b: Vec, *, unroll: bool = False) -> str:
+    """Squared L2 distance in double precision."""
+    return _fold(_sq_diff, (a, b), unroll=unroll)
+
+
+def sq_dist_int_sql(a: Vec, b: Vec) -> str:
+    """Exact int64 squared L2 distance between BIGINT arrays (literal
+    vectors are integers); always the fold."""
+    return _fold(
+        lambda x, y: f"({x} - {y}) * ({x} - {y})", (a, b), lit=_ilit, zero="0L"
     )
 
 
-def cosine_cols_sql(a_sql: str, b_sql: str) -> str:
-    """SQL text of ``cosine`` over two NAMED columns."""
-    return (
-        f"({dot_cols_sql(a_sql, b_sql)}) / "
-        f"(({norm_sql(a_sql)}) * ({norm_sql(b_sql)}))"
-    )
-
-
-def l2sq_int_lit_sql(col_sql: str, centroid: list[int]) -> str:
-    """SQL text of the exact int64 squared L2 distance between a
-    micro-unit BIGINT array column and a literal integer centroid — the
-    same zip_with/aggregate fold the py4j builder produced, emitted as
-    one parseable string. Fold-not-unroll for the same measured reason
-    as :func:`dot_lit_sql` (K stacked centroid distances threw the
-    unroll out of codegen)."""
-    arr = "array(" + ", ".join(f"{int(c)}L" for c in centroid) + ")"
-    return (
-        f"aggregate(zip_with({col_sql}, {arr}, "
-        f"(x, y) -> (x - y) * (x - y)), 0L, (acc, x) -> acc + x)"
-    )
-
-
-#: DuckDB oracle fragment mirroring :func:`dot` exactly (same fold order).
+#: DuckDB oracle fragment for :func:`dot_sql` (same fold order). The
+#: oracle fragments are written by hand on purpose: generating them from
+#: the engine's emitter would let one bug pass both sides.
 DUCK_DOT = (
     "list_sum(list_transform(list_zip({a}, {b}), p -> p[1]::DOUBLE * p[2]::DOUBLE))"
 )
-#: DuckDB oracle fragment mirroring :func:`norm`.
+#: DuckDB oracle fragment for :func:`norm_sql`.
 DUCK_NORM = "sqrt(list_sum(list_transform({a}, x -> x::DOUBLE * x::DOUBLE)))"

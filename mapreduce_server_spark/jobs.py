@@ -147,21 +147,11 @@ def knn_topk(
 ) -> DataFrame:
     """Exact top-k by cosine against one query vector: the vector ships as
     a literal (broadcast), the scan is shuffle-free, and the top-k is
-    TakeOrderedAndProject — linear in corpus size at any scale."""
-    import math
+    TakeOrderedAndProject — linear in corpus size at any scale.
+    ``vec_col`` is column SQL text; ``query`` must be finite."""
+    from .functions.vector import cosine_sql
 
-    q = F.lit([float(x) for x in query]).cast("array<double>")
-    acc = 0.0
-    for x in query:
-        acc += float(x) * float(x)
-    v = F.col(vec_col).cast("array<double>")
-    dot = F.aggregate(
-        F.zip_with(v, q, lambda a, b: a * b), F.lit(0.0), lambda s, x: s + x
-    )
-    nrm = F.sqrt(
-        F.aggregate(F.transform(v, lambda a: a * a), F.lit(0.0), lambda s, x: s + x)
-    )
-    sim = dot / (nrm * F.lit(math.sqrt(acc)))
+    sim = F.expr(cosine_sql(vec_col, query))
     return (
         df.select(F.col(id_col).alias("id"), sim.alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), F.asc("id"))

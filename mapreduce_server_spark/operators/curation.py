@@ -489,7 +489,8 @@ def _kcenter_centers(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[i
 
 
 def _select_centers(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[int]]]:
-    from .similarity import _l2sq_int, _micro
+    from ..functions.vector import sq_dist_int_sql
+    from .similarity import _micro
 
     e = Tables(spark, sf_dir).embeddings.select(
         "vec_id", _micro(F.col("embedding")).alias("vi")
@@ -500,7 +501,7 @@ def _select_centers(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[in
     seed = seed_rows[0]
     centers = [(int(seed[0]), [int(x) for x in seed[1]])]
     for _ in range(K_CENTERS - 1):
-        dcols = [_l2sq_int("vi", c) for _, c in centers]
+        dcols = [F.expr(sq_dist_int_sql("vi", c)) for _, c in centers]
         d = F.least(*dcols) if len(dcols) > 1 else dcols[0]
         sel_ids = [vid for vid, _ in centers]
         rows = (
@@ -590,7 +591,8 @@ def sample_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     array_position semantics ≡ the oracle's ORDER BY d, rk) + ONE
     ≤K-group aggregate. No shuffle of vectors — the wide argmin is
     narrow per-row work and the aggregate carries K rows."""
-    from .similarity import _l2sq_int, _micro
+    from ..functions.vector import sq_dist_int_sql
+    from .similarity import _micro
 
     cents = _kcenter_centers(spark, sf_dir)
     if not cents:  # empty corpus → no centers, no partition to audit
@@ -602,7 +604,7 @@ def sample_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = Tables(spark, sf_dir).embeddings.select(
         "vec_id", _micro(F.col("embedding")).alias("vi")
     )
-    dists = F.array(*[_l2sq_int("vi", c) for _, c in cents])
+    dists = F.array(*[F.expr(sq_dist_int_sql("vi", c)) for _, c in cents])
     mn = F.array_min(dists)
     rk = (F.array_position(dists, mn) - 1).cast("int")
     vid_lut = F.lit([vid for vid, _ in cents]).cast("array<long>")

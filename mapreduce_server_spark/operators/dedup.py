@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import DUCK_DOT, DUCK_NORM, cosine
+from ..functions.vector import DUCK_DOT, DUCK_NORM, cosine_sql
 from ..registry import REGISTRY, query
 from ..sources.loader import Tables
 from ._memo import session_cache
@@ -447,7 +447,7 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Float discipline: BLAS prunes with an epsilon-relaxed threshold only;
     the surviving pairs (a vanishing fraction of n²) are re-scored JVM-side
-    with the sequential-fold ``cosine()``, whose fold order is bit-identical
+    with the sequential-fold ``cosine_sql``, whose fold order is bit-identical
     to the DuckDB oracle — so the ≥ 0.5 cut and the 6-dp rounding are
     decided by the same arithmetic on both engines."""
     import numpy as np
@@ -488,7 +488,7 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ea = e.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"))
     eb = e.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"))
-    sim = cosine(F.col("emb_a"), F.col("emb_b"))
+    sim = F.expr(cosine_sql("emb_a", "emb_b", unroll=True))
     return (
         cand.join(F.broadcast(ea), "vec_a")
         .join(F.broadcast(eb), "vec_b")

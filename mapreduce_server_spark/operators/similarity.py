@@ -26,14 +26,11 @@ from ..functions.pairs import skew_safe_pairs
 from ..functions.vector import (
     DUCK_DOT,
     DUCK_NORM,
-    cosine,
-    cosine_cols_sql,
-    cosine_lit_sql,
-    dot,
-    dot_cols_sql,
-    dot_lit_sql,
-    l2sq_int_lit_sql,
-    norm,
+    cosine_sql,
+    dot_sql,
+    norm_sql,
+    py_dot,
+    sq_dist_int_sql,
 )
 from ..registry import query
 from ..sources.loader import Tables, fan_out_scan
@@ -94,34 +91,18 @@ def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-10 by cosine vs one query vector: the vector is fetched
     once driver-side and inlined as a literal (broadcast to all tasks);
     scan + TakeOrderedAndProject, no shuffle of the corpus."""
-    import math
-
     e = Tables(spark, sf_dir).embeddings
     qv = _query_vector(spark, sf_dir)
     if qv is None:  # no query row → oracle's q CTE empties the query
         return spark.createDataFrame([], "vec_id bigint, cos_sim double")
-    q = F.lit(qv).cast("array<float>")
-    # query norm precomputed driver-side with the same sequential double
-    # fold the oracle uses (bit-identical), saving one O(dim) fold per row
-    acc = 0.0
-    for x in qv:
-        acc += float(x) * float(x)
-    q_norm = math.sqrt(acc)
-    # round-13: this key deliberately keeps the INTERPRETED fold, not
-    # the FAST_DIM unrolled path (bit-identical either way). The
-    # serving path re-collects a memoized no-shuffle plan, and each
-    # execution regenerates the whole-stage source before the codegen
-    # cache lookup — for the ~130-term unrolled dot+norm that fixed
-    # cost exceeds the per-row win on a 2k-row scan (A/B med 0.14 s
-    # fold vs 0.23+ s unrolled, 3 alternations; r12 FULLBENCH 0.076 s
-    # fold vs r13's 0.126 s unrolled corroborates). The heavy
-    # million-pair consumers (ml_knn_label, knn_join_lsh...) keep the
-    # fast path where it pays 3-11x.
-    from ..functions.vector import _dot_fold, _norm_fold
-
-    sim = _dot_fold(F.col("embedding"), q) / (
-        _norm_fold(F.col("embedding")) * F.lit(q_norm)
-    )
+    # this key deliberately keeps the fold, not the FAST_DIM unroll
+    # (bit-identical either way). The serving path re-collects a
+    # memoized no-shuffle plan, and each execution regenerates the
+    # whole-stage source before the codegen cache lookup — for the
+    # ~130-term unrolled dot+norm that fixed cost exceeds the per-row
+    # win on a 2k-row scan (A/B med 0.14 s fold vs 0.23+ s unrolled).
+    # The query's norm is one literal (vector.norm_sql).
+    sim = F.expr(cosine_sql("embedding", qv))
     return (
         e.filter(F.col("vec_id") != QUERY_VEC_ID)
         .select("vec_id", F.round(sim, 6).alias("cos_sim"))
@@ -163,7 +144,7 @@ def knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Float discipline: BLAS only PRUNES (top-10 candidates per vector, a
     margin over k=3 that summation-order ulps cannot cross); the final
     score and the (score DESC, nbr_id) ranking are computed JVM-side with
-    the sequential-fold ``dot()`` that matches the DuckDB oracle
+    the sequential-fold ``dot_sql`` that matches the DuckDB oracle
     bit-for-bit."""
     import numpy as np
     import pandas as pd
@@ -202,7 +183,7 @@ def knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "nbr_id",
             F.expr(
-                f"round({dot_cols_sql('emb_a', 'emb_b', unroll=True)}, 6)"
+                f"round({dot_sql('emb_a', 'emb_b', unroll=True)}, 6)"
             ).alias("score"),
         )
     )
@@ -221,10 +202,10 @@ def _bucket_expr(col_sql: str):
     SQL text and builds the whole bucket as ONE server-side-parsed
     expression (round 14 — the py4j node-by-node construction of
     literal-plane dots was measured at ~1 s of driver time PER PLANE on
-    every fresh plan build; vector.dot_lit_sql docstring)."""
+    every fresh plan build)."""
     return F.expr(
         " + ".join(
-            f"(CASE WHEN ({dot_lit_sql(col_sql, _hyperplane(p))}) >= 0"
+            f"(CASE WHEN ({dot_sql(col_sql, _hyperplane(p))}) >= 0"
             f" THEN {1 << p} ELSE 0 END)"
             for p in range(N_PLANES)
         )
@@ -239,7 +220,7 @@ def _plane_sql(p: int) -> str:
 def _lsh_oracle() -> str:
     """Full SQL replay of knn_lsh: the hyperplanes are static md5-derived
     literals, the bucket is a sum of sign-bit CASEs over the SAME
-    sequential-fold dot product (DUCK_DOT ≡ functions.vector.dot), and
+    sequential-fold dot product (DUCK_DOT ≡ functions.vector.dot_sql), and
     multi-probe membership is bucket == qbucket or a 1-bit XOR."""
     bucket_expr = lambda a: " + ".join(
         f"CASE WHEN {DUCK_DOT.format(a=a, b=_plane_sql(p))} >= 0"
@@ -286,16 +267,11 @@ def knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "vec_id bigint, bucket int, cos_sim double"
         )
-    q = F.lit(qv).cast("array<float>")
     # the query's bucket is a pure function of known floats — computed
-    # driver-side (same double arithmetic as the executor fold)
-    q_bucket = 0
-    for p in range(N_PLANES):
-        acc = 0.0
-        for x, c in zip(qv, _hyperplane(p)):
-            acc += float(x) * c
-        if acc >= 0:
-            q_bucket += 1 << p
+    # driver-side (py_dot: the executor fold's double arithmetic)
+    q_bucket = sum(
+        1 << p for p in range(N_PLANES) if py_dot(qv, _hyperplane(p)) >= 0
+    )
     # multi-probe: also search the N_PLANES Hamming-1 neighbor buckets —
     # vectors near a hyperplane land on either side, so probing adjacent
     # sign-flips recovers most of the recall LSH loses at bucket edges
@@ -307,7 +283,7 @@ def knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "bucket",
-            F.expr(f"round({cosine_lit_sql('embedding', qv)}, 6)").alias(
+            F.expr(f"round({cosine_sql('embedding', qv)}, 6)").alias(
                 "cos_sim"
             ),
         )
@@ -357,8 +333,6 @@ def multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal record assembly: text features ⋈ vector features in one
     frame (north-star multimodal columns; ids align 1:1 per FIXTURES.md)."""
     t = Tables(spark, sf_dir)
-    from ..functions.vector import norm
-
     return (
         t.documents.join(t.embeddings, F.col("doc_id") == F.col("vec_id"))
         .select(
@@ -366,7 +340,9 @@ def multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
             F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
             "label",
-            F.round(norm(F.col("embedding")), 6).alias("emb_norm"),
+            F.expr(f"round({norm_sql('embedding', unroll=True)}, 6)").alias(
+                "emb_norm"
+            ),
         )
     )
 
@@ -396,15 +372,6 @@ def _micro(emb_col):
             "long"
         ),
     )
-
-
-def _l2sq_int(micro_col_sql: str, centroid: list[int]):
-    """Squared L2 distance between a micro-unit vector column (named by
-    SQL text) and a literal integer centroid — exact int64, built as ONE
-    server-side-parsed expression (round 14: the K×dim py4j fold
-    construction cost seconds of driver time per fresh plan;
-    vector.l2sq_int_lit_sql)."""
-    return F.expr(l2sq_int_lit_sql(micro_col_sql, centroid))
 
 
 def _ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]] | None:
@@ -602,7 +569,7 @@ def _ivf_index(
     return out
 
 
-#: SQL twins of _micro and _l2sq_int (int64-exact, order-free).
+#: SQL twins of _micro and vector.sq_dist_int_sql (int64-exact, order-free).
 _IVF_MICRO_SQL = "list_transform({a}, x -> floor(x::DOUBLE * 1000000 + 0.5)::BIGINT)"
 _IVF_DIST_SQL = (
     "list_sum(list_transform(generate_series(1, 64), "
@@ -712,7 +679,6 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "vec_id bigint, cluster int, cos_sim double"
         )
     probes = _probe_cells(cents, qv)
-    q = F.lit(qv).cast("array<float>")
     return (
         _ivf_assigned(spark, sf_dir, cents)
         .filter(F.col("vec_id") != QUERY_VEC_ID)
@@ -720,7 +686,9 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "cluster",
-            F.round(cosine(F.col("embedding"), q), 6).alias("cos_sim"),
+            F.expr(
+                f"round({cosine_sql('embedding', qv, unroll=True)}, 6)"
+            ).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(10)
@@ -849,7 +817,6 @@ def knn_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     probes = _probe_cells(cents, qv)
     out = _ivf_index(spark, sf_dir, cents)  # written once per session
-    q = F.lit(qv).cast("array<float>")
     back = spark.read.schema(_IVF_INDEX_SCHEMA).parquet(out)
     return (
         back.filter(F.col("cluster").isin(probes))
@@ -857,7 +824,9 @@ def knn_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             F.col("cluster").cast("int").alias("cluster"),
-            F.round(cosine(F.col("embedding"), q), 6).alias("cos_sim"),
+            F.expr(
+                f"round({cosine_sql('embedding', qv, unroll=True)}, 6)"
+            ).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(10)
@@ -877,7 +846,7 @@ def _cell_assign_cols(micro_col_sql: str, cents: list[list[int]]):
     MATERIALIZED micro-unit column (round 14): quantize once per row in
     a separate projection, not once per centroid inside the distance
     expressions."""
-    dists = F.array(*[_l2sq_int(micro_col_sql, c) for c in cents])
+    dists = F.array(*[F.expr(sq_dist_int_sql(micro_col_sql, c)) for c in cents])
     dmin = F.array_min(dists)
     cluster = (F.array_position(dists, dmin) - 1).cast("int")
     return cluster, dmin
@@ -1120,8 +1089,8 @@ def knn_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("nrm_b"),
         F.col("csim").alias("csim_b"),
     )
-    pair_cos = dot(F.col("emb_a"), F.col("emb_b")) / (
-        F.col("nrm_a") * F.col("nrm_b")
+    pair_cos = F.expr(
+        f"({dot_sql('emb_a', 'emb_b', unroll=True)}) / (nrm_a * nrm_b)"
     )
     # per qualifying pair the member LARGER in the (csim, vec_id) total
     # order is dropped — ≡ the oracle's EXISTS-a-smaller-neighbor rule
@@ -1174,14 +1143,13 @@ def _join_bucket_exprs(col_sql: str):
     from one shared deterministic plane family. Takes the column as SQL
     text: each table's bucket is ONE server-side-parsed expression
     (round 14 — 32 py4j-built literal-plane dots cost 28-32 s of driver
-    time per fresh knn_join_lsh build; vector.dot_lit_sql docstring).
-    Bit-identical to the old F.when/dot chain by the dot_lit_sql pin."""
+    time per fresh knn_join_lsh build)."""
     out = []
     for t in range(N_TABLES):
         out.append(
             F.expr(
                 " + ".join(
-                    f"(CASE WHEN ({dot_lit_sql(col_sql, _hyperplane(t * PLANES_PER_TABLE + j))}) >= 0"
+                    f"(CASE WHEN ({dot_sql(col_sql, _hyperplane(t * PLANES_PER_TABLE + j))}) >= 0"
                     f" THEN {1 << j} ELSE 0 END)"
                     for j in range(PLANES_PER_TABLE)
                 )
@@ -1304,7 +1272,7 @@ def knn_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "nbr_id",
             F.expr(
-                f"round({dot_cols_sql('emb_a', 'emb_b', unroll=True)}, 6)"
+                f"round({dot_sql('emb_a', 'emb_b', unroll=True)}, 6)"
             ).alias("score"),
         )
     )
@@ -1635,31 +1603,6 @@ MMR_CAND = 10  # relevance candidates entering the greedy stage
 MMR_LAMBDA = 0.5  # relevance vs diversity trade-off
 
 
-def _round6(x: float) -> float:
-    """Driver-side replica of Spark's ``round(double, 6)``: Java
-    ``BigDecimal.valueOf(x)`` parses ``Double.toString(x)`` — the
-    shortest decimal rendering, which is exactly Python ``repr`` — then
-    ``setScale(6, HALF_UP)`` (ties away from zero). Using Python's
-    builtin ``round`` here would be WRONG twice over (banker's
-    rounding, and on the binary value rather than the shortest decimal
-    rendering).
-
-    Round 14: no operator depends on this anymore (knn_mmr's greedy now
-    selects among Spark-computed rounded values), which closes the
-    JDK-version caveat — pre-JDK-19 ``Double.toString`` may emit a
-    non-shortest rendering on rare values (JDK-4511638), so repr parity
-    is only observed-JVM-guaranteed. Retained as the tested reference
-    (tests/test_r13_optimizations.py) for any future driver-side
-    rounding need."""
-    import decimal
-
-    return float(
-        decimal.Decimal(repr(x)).quantize(
-            decimal.Decimal("1E-6"), rounding=decimal.ROUND_HALF_UP
-        )
-    )
-
-
 @query("knn_mmr", category="J.sim", oracle=_mmr_oracle())
 def knn_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal Marginal Relevance — DIVERSIFIED top-k retrieval, the
@@ -1692,9 +1635,7 @@ def knn_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "pick bigint, vec_id bigint, rel double, mmr double"
         )
-    # server-side-parsed cosine (round 14: the py4j-built cosine cost
-    # ~2-3 s of driver time per fresh build; bit-identical fold form)
-    rel = F.expr(f"round({cosine_lit_sql('embedding', qv)}, 6)")
+    rel = F.expr(f"round({cosine_sql('embedding', qv)}, 6)")
     cand = (
         e.filter(F.col("vec_id") != QUERY_VEC_ID)
         .select("vec_id", "embedding", rel.alias("rel"))
@@ -1704,7 +1645,7 @@ def knn_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a, b = cand.alias("a"), cand.alias("b")
     sim6 = F.expr(
-        f"round({cosine_cols_sql('a.embedding', 'b.embedding')}, 6)"
+        f"round({cosine_sql('a.embedding', 'b.embedding')}, 6)"
     )
     # round-14 hardening (VERDICT r13 #8): the candidate mmr for ANY
     # chosen set is round(λ·rel_c − (1−λ)·max_sim, 6) where max_sim is
@@ -1712,7 +1653,7 @@ def knn_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ever emit is precomputed here, IN SPARK, per (c, s) pair. The
     # driver then only compares and selects engine-computed doubles;
     # no driver-side rounding remains, which removes the JDK-dependent
-    # repr ≡ Double.toString assumption _round6 documented.
+    # repr ≡ Double.toString assumption a driver-side round needs.
     pairs = (
         a.join(b, F.col("a.vec_id") != F.col("b.vec_id"))
         .select(
@@ -1863,8 +1804,6 @@ def rank_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     rankings order on 6-dp-ROUNDED scores with id tiebreaks before
     ranks are assigned, so every rank — hence the whole fusion — is
     deterministic (the argmax-determinism recipe)."""
-    import math
-
     from .text import text_bm25
 
     lex_base = text_bm25(spark, sf_dir)
@@ -1881,14 +1820,7 @@ def rank_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         # guard empties only this leg, not the whole operator
         sem = spark.createDataFrame([], "doc_id bigint, sem_rank bigint")
     else:
-        acc = 0.0
-        for x in qv:
-            acc += float(x) * float(x)
-        q_norm = math.sqrt(acc)
-        q = F.lit(qv).cast("array<float>")
-        sim = dot(F.col("embedding"), q) / (
-            norm(F.col("embedding")) * F.lit(q_norm)
-        )
+        sim = F.expr(cosine_sql("embedding", qv, unroll=True))
         ws = Window.orderBy(F.col("cos_sim").desc(), F.col("doc_id"))
         sem = (
             e.filter(F.col("vec_id") != QUERY_VEC_ID)
@@ -2120,7 +2052,6 @@ def knn_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     probes = _probe_cells(cents, qv, nprobe=FILTER_NPROBE)
     out = _ivf_index(spark, sf_dir, cents)  # written once per session
-    q = F.lit(qv).cast("array<float>")
     return (
         spark.read.schema(_IVF_INDEX_SCHEMA)
         .parquet(out)
@@ -2133,7 +2064,9 @@ def knn_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "label",
             F.col("cluster").cast("int").alias("cluster"),
-            F.round(cosine(F.col("embedding"), q), 6).alias("cos_sim"),
+            F.expr(
+                f"round({cosine_sql('embedding', qv, unroll=True)}, 6)"
+            ).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(10)

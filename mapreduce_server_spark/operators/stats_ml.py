@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.vector import dot_sql, fsum, norm_sql, sq_dist_sql
 from ..registry import query
 from ..sources.loader import Tables, fan_out_scan
 
@@ -219,47 +220,17 @@ _KM_K = 8
 _KM_DIM = 64
 
 
-def _sq_dist(e: Column, c: Column) -> Column:
-    """Left-fold squared L2 over dimension order — deterministic, and
-    identical to the oracle's list_reduce(list_prepend(0.0, …)) fold.
-
-    Round-13: size-guarded unrolled fast path at the fixture
-    dimensionality (the functions/vector.py dot/norm discipline —
-    higher-order functions are interpreted, not codegen'd; the unroll
-    performs the SAME double ops in the SAME order, starting from the
-    fold's literal 0.0 so even signed zeros match)."""
-    from ..functions.vector import FAST_DIM
-
-    def unrolled(dim: int) -> Column:
-        d0 = e.getItem(0) - c.getItem(0)
-        acc = F.lit(0.0) + d0 * d0
-        for i in range(1, dim):
-            di = e.getItem(i) - c.getItem(i)
-            acc = acc + di * di
-        return acc
-
-    fold = F.aggregate(
-        F.zip_with(e, c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda s, x: s + x,
-    )
-    return F.when(
-        (F.size(e) == FAST_DIM) & (F.size(c) == FAST_DIM), unrolled(FAST_DIM)
-    ).otherwise(fold)
-
-
 def _km_assign(emb: DataFrame, cents_row: DataFrame) -> DataFrame:
     """Nearest-centroid assignment, entirely map-side: the (cid, cvec)
     list arrives as ONE broadcast row, each vector folds over it and
     takes the lexicographic struct-min (distance, then cid — a total
-    order, so ties can't flip with partitioning)."""
+    order, so ties can't flip with partitioning). The squared distance
+    is the left fold in dimension order, identical to the oracle's
+    list_reduce(list_prepend(0.0, …)) fold."""
     scored = emb.crossJoin(F.broadcast(cents_row))
-    dists = F.transform(
-        F.col("cents"),
-        lambda c: F.struct(
-            _sq_dist(F.col("emb"), c.getField("cvec")).alias("d"),
-            c.getField("cid").alias("cid"),
-        ),
+    dists = F.expr(
+        "transform(cents, c -> struct("
+        f"{sq_dist_sql('emb', 'c.cvec', unroll=True)} AS d, c.cid AS cid))"
     )
     return scored.select(
         "vec_id", "emb", F.array_min(dists).getField("cid").alias("cid")
@@ -956,7 +927,7 @@ def ml_knn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "nbr",
         "n_label",
-        _sq_dist(F.col("t_emb"), F.col("r_emb")).alias("dist"),
+        F.expr(sq_dist_sql("t_emb", "r_emb", unroll=True)).alias("dist"),
     )
     wk = Window.partitionBy("vec_id").orderBy("dist", "nbr")
     topk = d.withColumn("rn", F.row_number().over(wk)).filter(
@@ -1127,12 +1098,9 @@ def ml_centroid_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     test = e.filter(F.col("vec_id") % 2 == 1)
     scored = test.crossJoin(F.broadcast(cents))
-    dists = F.transform(
-        F.col("cents"),
-        lambda cc: F.struct(
-            _sq_dist(F.col("emb"), cc.getField("cvec")).alias("d"),
-            cc.getField("label").alias("label"),
-        ),
+    dists = F.expr(
+        "transform(cents, cc -> struct("
+        f"{sq_dist_sql('emb', 'cc.cvec', unroll=True)} AS d, cc.label AS label))"
     )
     # name the argmin ONCE — two textual references would run the whole
     # centroid fold twice per row (expression-inlining trap)
@@ -1282,8 +1250,6 @@ def ml_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: more iterations are more scans, never more state; the
     deflation step for further components reuses the same plan.
     """
-    from ..functions.vector import dot, fsum
-
     e = Tables(spark, sf_dir).embeddings.select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
@@ -1304,14 +1270,14 @@ def ml_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return row.select(
             F.transform(
-                "wv", lambda x: F.round(x / F.sqrt(fsum(F.transform("wv", lambda y: y * y))), 6)
+                "wv", lambda x: F.round(x / F.expr(norm_sql("wv")), 6)
             ).alias("vv")
         )
 
     s1 = e.select("emb", F.col("emb").getItem(0).alias("s"))
     v1 = step(s1)
     s2 = e.crossJoin(F.broadcast(v1)).select(
-        "emb", dot(F.col("emb"), F.col("vv")).alias("s")
+        "emb", F.expr(dot_sql("emb", "vv", unroll=True)).alias("s")
     )
     # final projection re-derives (dim, loading) from the aggregate, not
     # a second explode of the one-row vector, to keep dims typed long
@@ -1641,8 +1607,6 @@ def ml_logreg_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     epochs are more scans with (dim)-bounded state, i.e. exactly how
     MLlib's LBFGS/GD treemalized gradients work. Returns (dim, w1, w2).
     """
-    from ..functions.vector import dot
-
     e = Tables(spark, sf_dir).embeddings.select(
         F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
         (F.col("label") % 2).cast("double").alias("y"),
@@ -1659,7 +1623,7 @@ def ml_logreg_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("wl")
     )
     scored = e.crossJoin(F.broadcast(wv)).select(
-        "y", "emb", dot(F.col("emb"), F.col("wl")).alias("z")
+        "y", "emb", F.expr(dot_sql("emb", "wl", unroll=True)).alias("z")
     )
     probs = scored.select(
         "y", "emb", (F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("z")))).alias("prob")
@@ -1746,8 +1710,6 @@ def ml_pca_deflate(spark: SparkSession, sf_dir: str) -> DataFrame:
     The pc1 hand-off is the 6-dp rounded unit vector, so the oracle
     replays pc1, the projection, and both pc2 iterations bit-for-bit.
     """
-    from ..functions.vector import dot, fsum
-
     e = Tables(spark, sf_dir).embeddings.select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
@@ -1759,7 +1721,10 @@ def ml_pca_deflate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("vv")
     )
     sc = e.crossJoin(F.broadcast(pc1_row)).select(
-        "vec_id", "emb", "vv", dot(F.col("emb"), F.col("vv")).alias("t")
+        "vec_id",
+        "emb",
+        "vv",
+        F.expr(dot_sql("emb", "vv", unroll=True)).alias("t"),
     )
     d = sc.select(
         "vec_id",
@@ -1786,16 +1751,14 @@ def ml_pca_deflate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform(
             "wv",
             lambda x: F.round(
-                F.try_divide(
-                    x, F.sqrt(fsum(F.transform("wv", lambda y: y * y)))
-                ),
+                F.try_divide(x, F.expr(norm_sql("wv"))),
                 6,
             ),
         ).alias("vv")
     )
     b2 = agg_dir(
         d.crossJoin(F.broadcast(u1)).select(
-            "emb", dot(F.col("emb"), F.col("vv")).alias("s")
+            "emb", F.expr(dot_sql("emb", "vv", unroll=True)).alias("s")
         )
     )
     m2 = b2.agg(
@@ -1882,8 +1845,6 @@ def ml_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast); scoring is one shuffle keyed by (doc, class); training
     is one token-count aggregation — the engine's wordcount with a class
     key."""
-    from ..functions.vector import fsum
-
     # round-13: fan_out_scan A/B'd and REJECTED here — the train token
     # pass is cached (one fill), so the added exchange only delayed the
     # cache fill (median 3.7 s vs 2.9 s without; the cost lives in the
@@ -3978,8 +3939,6 @@ def stat_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion — same single-row-group rationale and partition-order-
     free-state audit as stat_permtest (weighted decimal sums + integer
     weight sums; the across-replicate fold is replicate-ordered)."""
-    from ..functions.vector import fsum
-
     li = fan_out_scan(Tables(spark, sf_dir).lineitem, spark)
     base = li.select(
         F.col("l_returnflag").alias("flag"),
@@ -4382,8 +4341,6 @@ def stat_jackknife(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost one partial-agg shuffle. se² = (B−1)/B · Σ(m_b − m̄)², with the
     50 leave-out means 6-dp-pinned and folded in BLOCK order on both
     engines (fsum ≡ list ORDER BY + list_sum)."""
-    from ..functions.vector import fsum
-
     li = Tables(spark, sf_dir).lineitem
     g = li.groupBy(
         F.col("l_returnflag").alias("flag"),
@@ -5919,8 +5876,6 @@ def stat_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("z").alias("sz"),
         F.sum((F.col("z") * F.col("z")).cast("decimal(38,12)")).alias("szz"),
     )
-    from ..functions.vector import fsum
-
     one = g.agg(
         F.count(F.lit(1)).alias("k"),
         F.sum("ng").alias("n"),

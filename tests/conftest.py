@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from decimal import ROUND_HALF_UP, Decimal
 
 import duckdb
 import pytest
@@ -64,6 +65,17 @@ def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     s = get_spark(app_name="mrss-tests", shuffle_partitions=8)
     yield s
+
+
+def round6(x: float) -> float:
+    """Spark's ``round(double, 6)`` in Python: Java
+    ``BigDecimal.valueOf(x)`` parses ``Double.toString(x)`` — the
+    shortest decimal rendering, which is Python's ``repr`` — then
+    ``setScale(6, HALF_UP)`` (ties away from zero). Python's builtin
+    ``round`` is wrong twice over: banker's rounding, applied to the
+    binary value rather than the shortest decimal rendering. DuckDB's
+    ``round`` agrees on the fixture values."""
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
 
 
 def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -257,3 +257,22 @@ def test_base_table_scan_multiplicity_is_pinned(spark):
                 bad.append((key, f"{n} real scans of {t} (ceiling "
                                  f"{max(2, ceiling.get(t, 0))})"))
     assert not bad, bad
+
+
+def test_every_mutation_target_occurs_once():
+    """tools/mutation_audit.py plants each bug by replacing its ``old``
+    text, which must occur exactly once in its file — a refactor that
+    moves the target line silently disarms the mutant otherwise."""
+    import importlib.util
+
+    tool = os.path.join(os.path.dirname(PKG), "tools", "mutation_audit.py")
+    spec = importlib.util.spec_from_file_location("mutation_audit", tool)
+    audit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(audit)
+    drifted = {}
+    for mut in audit.MUTATIONS:
+        with open(os.path.join(PKG, mut["file"]), encoding="utf-8") as f:
+            n = f.read().count(mut["old"])
+        if n != 1:
+            drifted[mut["mid"]] = n
+    assert not drifted, f"mutation targets not found exactly once: {drifted}"

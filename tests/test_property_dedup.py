@@ -26,7 +26,6 @@ import hashlib
 import os
 import shutil
 import tempfile
-from decimal import ROUND_HALF_UP, Decimal
 
 import pandas as pd
 import pyarrow as pa
@@ -42,6 +41,8 @@ from mapreduce_server_spark.operators.dedup import (
     dedup_minhash,
     dedup_ngram_jaccard,
 )
+
+from .conftest import round6
 
 VOCAB = ["alpha", "beta", "gamma", "delta", "eps", "zeta"]
 
@@ -108,10 +109,6 @@ def _jac(a: set[str], b: set[str]) -> float:
     return inter / (len(a) + len(b) - inter)
 
 
-def _round6(x: float) -> float:
-    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
-
-
 def _mh(s: int, shingle: str) -> int:
     return int(hashlib.md5(f"mh{s}:{shingle}".encode()).hexdigest()[:8], 16)
 
@@ -137,7 +134,7 @@ def _minhash_replay(docs: list[list[str]]) -> set[tuple[int, int, float]]:
         if a < b
     }
     return {
-        (a, b, _round6(j))
+        (a, b, round6(j))
         for a, b in cand
         if (j := _jac(sh[a], sh[b])) >= 0.8
     }
@@ -176,7 +173,7 @@ def test_minhash_matches_pure_python_replay(spark, corpus):
         assert got == want
         sh = {i: _shingles(t) for i, t in enumerate(docs)}
         for a, b, j in got:
-            assert _round6(_jac(sh[a], sh[b])) == j >= 0.8
+            assert round6(_jac(sh[a], sh[b])) == j >= 0.8
         for a in range(len(docs)):
             for b in range(a + 1, len(docs)):
                 if sh[a] == sh[b]:

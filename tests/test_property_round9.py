@@ -22,7 +22,6 @@ import math
 import os
 import shutil
 import tempfile
-from decimal import ROUND_HALF_UP, Decimal
 
 import pandas as pd
 import pyarrow as pa
@@ -38,15 +37,13 @@ from mapreduce_server_spark.operators.curation import (
 from mapreduce_server_spark.operators.quality import KANON_K, quality_kanon
 from mapreduce_server_spark.operators.sources_ops import scan_zonemap
 
+from .conftest import round6
+
 SETTINGS = settings(
     max_examples=6,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-
-
-def _round6(x: float) -> float:
-    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
 
 
 def _tmpdir(prefix: str) -> str:
@@ -331,7 +328,7 @@ def test_sample_dsir_property(spark, docs):
             acc = 0.0
             for b in sorted(f.get(i, {})):
                 acc += float(f[i][b]) * lam[b]
-            w6[i] = _round6(acc)
+            w6[i] = round6(acc)
         expect = sorted(w6, key=lambda d: (-w6[d], d))[:25]
 
         got = sample_dsir(spark, sf_dir).collect()

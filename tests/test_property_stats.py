@@ -23,7 +23,7 @@ import math
 import os
 import shutil
 import tempfile
-from decimal import ROUND_HALF_UP, Decimal
+from decimal import Decimal
 
 import pandas as pd
 import pyarrow as pa
@@ -36,6 +36,8 @@ from mapreduce_server_spark.operators.stats_ml import (
     stat_mannwhitney,
     stat_spearman,
 )
+
+from .conftest import round6
 
 SETTINGS = settings(
     max_examples=6,
@@ -56,10 +58,6 @@ LI_ROWS = st.lists(
 )
 
 BASE_DAY = datetime.datetime(1996, 1, 1)
-
-
-def _round6(x: float) -> float:
-    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
 
 
 def _write_lineitem(rows) -> str:
@@ -98,7 +96,7 @@ def _safe_div6(num: float, den: float):
     throw, which is exactly why the operators use try_divide)."""
     if den == 0.0:
         return None
-    return _round6(num / den)
+    return round6(num / den)
 
 
 def _eq(a, b) -> bool:

@@ -7,36 +7,24 @@ formulation it replaced:
 - ``fan_out_scan`` (sources/loader.py): conditional round-robin
   repartition — no-op when the scan already splits, multiset-identical
   when it fans out.
-- ``functions/vector.py`` dot/norm + stats_ml ``_sq_dist``: the
-  FAST_DIM unrolled codegen path must be BIT-identical to the
-  interpreted fold it shadows (same ops, same order, same signed
-  zeros), including the NULL and wrong-length fallbacks.
 - ``dedup_exact``: the struct-min aggregate must reproduce the old
   two-window survivor plan row for row (including the NULL-text group).
-- ``knn_mmr._round6``: the driver-side replica of Spark's
+- ``conftest.round6``: the tests' replica of Spark's
   ``round(double, 6)`` must match the engine on ties, negatives and
-  binary-noise reprs (the greedy stage moved driver-side this round).
+  binary-noise reprs (the property tests replay 6-dp rounds with it).
+
+The vector unroll ≡ fold pins live in tests/test_vector.py.
 """
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from mapreduce_server_spark.functions.vector import (
-    FAST_DIM,
-    _dot_fold,
-    _norm_fold,
-    dot,
-    norm,
-)
 from mapreduce_server_spark.operators.dedup import dedup_exact
-from mapreduce_server_spark.operators.similarity import _round6
-from mapreduce_server_spark.operators.stats_ml import _sq_dist
 from mapreduce_server_spark.sources.loader import Tables, fan_out_scan
 
-from .conftest import SF001
+from .conftest import SF001, round6
 
 
 def test_fan_out_scan_fans_single_partition_scan(spark):
@@ -59,76 +47,6 @@ def test_fan_out_scan_noop_when_already_split(spark):
     assert fan_out_scan(wide, spark) is wide  # untouched, zero plan nodes
     wider = spark.range(1000).repartition(target + 3)
     assert fan_out_scan(wider, spark) is wider
-
-
-@pytest.fixture(scope="module")
-def emb_pairs(spark):
-    """Adjacent-row 64-dim embedding pairs from the committed fixture —
-    real float32 payloads, deterministic order."""
-    e = Tables(spark, SF001).embeddings.select("vec_id", "embedding")
-    a = e.select(F.col("vec_id").alias("ka"), F.col("embedding").alias("ea"))
-    b = e.select(
-        (F.col("vec_id") - 1).alias("ka"), F.col("embedding").alias("eb")
-    )
-    return a.join(b, "ka").cache()
-
-
-def _bits(col):
-    # shortest-decimal rendering distinguishes -0.0 from 0.0 and every
-    # distinct double from its neighbours — a bit-identity proxy that
-    # stays inside the engine
-    return col.cast("string")
-
-
-def test_dot_fast_path_bit_identical_to_fold(emb_pairs):
-    q = emb_pairs.select(
-        _bits(dot(F.col("ea"), F.col("eb"))).alias("fast"),
-        _bits(_dot_fold(F.col("ea"), F.col("eb"))).alias("fold"),
-    )
-    assert q.where(~F.col("fast").eqNullSafe(F.col("fold"))).count() == 0
-
-
-def test_norm_fast_path_bit_identical_to_fold(emb_pairs):
-    q = emb_pairs.select(
-        _bits(norm(F.col("ea"))).alias("fast"),
-        _bits(_norm_fold(F.col("ea"))).alias("fold"),
-    )
-    assert q.where(~F.col("fast").eqNullSafe(F.col("fold"))).count() == 0
-
-
-def test_sq_dist_fast_path_bit_identical_to_fold(emb_pairs):
-    fold = F.aggregate(
-        F.zip_with(
-            F.col("ea"), F.col("eb"), lambda x, y: (x - y) * (x - y)
-        ),
-        F.lit(0.0),
-        lambda s, x: s + x,
-    )
-    q = emb_pairs.select(
-        _bits(_sq_dist(F.col("ea"), F.col("eb"))).alias("fast"),
-        _bits(fold).alias("fold"),
-    )
-    assert q.where(~F.col("fast").eqNullSafe(F.col("fold"))).count() == 0
-
-
-def test_fast_path_fallbacks(spark):
-    # wrong length -> general fold; NULL array / NULL element -> NULL
-    # exactly like the fold the fast path shadows
-    df = spark.createDataFrame(
-        [
-            ([1.0] * 32, [2.0] * 32),  # not FAST_DIM
-            (None, [2.0] * FAST_DIM),  # NULL side
-            ([1.0] * FAST_DIM, [None] + [2.0] * (FAST_DIM - 1)),  # NULL elt
-        ],
-        "a: array<double>, b: array<double>",
-    )
-    got = df.select(
-        dot(F.col("a"), F.col("b")).alias("d"),
-        _dot_fold(F.col("a"), F.col("b")).alias("f"),
-    ).collect()
-    assert got[0].d == got[0].f == 64.0  # 32 * (1*2)
-    assert got[1].d is None and got[1].f is None
-    assert got[2].d is None and got[2].f is None
 
 
 def test_dedup_exact_matches_old_window_formulation(spark):
@@ -174,4 +92,4 @@ def test_round6_matches_spark_round(spark):
     df = spark.createDataFrame([(v,) for v in vals], "x: double")
     got = df.select(F.round(F.col("x"), 6).alias("r")).collect()
     for v, row in zip(vals, got):
-        assert _round6(v) == row.r, (v, _round6(v), row.r)
+        assert round6(v) == row.r, (v, round6(v), row.r)

@@ -124,40 +124,6 @@ def test_skew_safe_pairs_bounds_per_chunk_generation(spark):
     assert "_chunk" in plan and "Exchange hashpartitioning" in plan
 
 
-def test_dot_lit_sql_bit_identical_to_dot(spark):
-    """The one-py4j-call SQL builder must be BIT-identical to the
-    py4j-built dot() it replaces — same guarded unrolled sum, same fold
-    fallback — over every (vector, plane) pair of the fixture corpus,
-    plus the fallback cases (NULL, short array)."""
-    import struct as _struct
-
-    from mapreduce_server_spark.functions.vector import dot, dot_lit_sql
-    from mapreduce_server_spark.operators.similarity import _hyperplane
-
-    e = Tables(spark, SF001).embeddings
-    planes = [_hyperplane(p) for p in (0, 7, 31)]
-    cols = []
-    for i, pl in enumerate(planes):
-        cols.append(dot(F.col("embedding"), F.lit(pl)).alias(f"old{i}"))
-        cols.append(F.expr(dot_lit_sql("embedding", pl)).alias(f"new{i}"))
-    rows = e.select(*cols).collect()
-    for r in rows:
-        for i in range(len(planes)):
-            a, b = r[f"old{i}"], r[f"new{i}"]
-            assert _struct.pack("d", a) == _struct.pack("d", b)
-    # fallback parity: short array and NULL take the fold on both forms
-    odd = spark.createDataFrame(
-        [([1.5, -2.25, 0.5],), (None,)], "embedding array<float>"
-    )
-    short_plane = [1.0, -1.0, 1.0]
-    got = odd.select(
-        dot(F.col("embedding"), F.lit(short_plane)).alias("old"),
-        F.expr(dot_lit_sql("embedding", short_plane)).alias("new"),
-    ).collect()
-    assert [r["old"] for r in got] == [r["new"] for r in got]
-    assert got[1]["new"] is None
-
-
 def test_knn_join_lsh_cell_form_matches_self_join_candidates(spark):
     """Round-14 candidate stage: cell-local directed pair generation
     must yield the IDENTICAL distinct candidate set as the round-13

@@ -20,7 +20,7 @@ from mapreduce_server_spark.operators.similarity import (
 )
 from mapreduce_server_spark.registry import REGISTRY
 
-from .conftest import SF001
+from .conftest import SF001, round6
 
 
 def _fold_dot(a, b):
@@ -30,20 +30,10 @@ def _fold_dot(a, b):
     return acc
 
 
-def _r6(x: float) -> float:
-    """HALF_UP round at 6 dp on the shortest decimal repr — what Spark's
-    round() (BigDecimal HALF_UP) and DuckDB's round() do. Python's
-    built-in round() is half-EVEN and disagrees exactly when the value
-    lands on .xxxxxx5, which λ = 0.5 times 6-dp operands hits often."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
-
-
 def _cos(a, b):
     import math
 
-    return _r6(
+    return round6(
         _fold_dot(a, b) / (math.sqrt(_fold_dot(a, a)) * math.sqrt(_fold_dot(b, b)))
     )
 
@@ -66,7 +56,7 @@ def test_mmr_matches_pure_python_greedy(spark):
     for i in range(2, MMR_K + 1):
         rest = [c for c in cand if c not in selected]
         scores = {
-            c: _r6(
+            c: round6(
                 MMR_LAMBDA * rel[c]
                 - (1 - MMR_LAMBDA) * max(sims[(c, s)] for s in selected)
             )

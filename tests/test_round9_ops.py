@@ -12,19 +12,12 @@ from __future__ import annotations
 
 import hashlib
 import math
-from decimal import ROUND_HALF_UP, Decimal
 
 import duckdb
 
 from mapreduce_server_spark.registry import REGISTRY
 
-from .conftest import SF001
-
-
-def _d6(x: float) -> float:
-    return float(
-        Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-    )
+from .conftest import SF001, round6
 
 
 def _docs(cols: str = "doc_id, lang, text"):
@@ -191,7 +184,7 @@ def test_sample_dsir_full_replay(spark):
         acc = 0.0
         for b in sorted(f.get(doc_id, {})):
             acc += float(f[doc_id][b]) * lam[b]
-        w6[doc_id] = _d6(acc)
+        w6[doc_id] = round6(acc)
 
     expect = sorted(w6, key=lambda d: (-w6[d], d))[:25]
     got = REGISTRY["sample_dsir"].fn(spark, SF001).collect()
@@ -234,7 +227,7 @@ def _bm25_replay() -> list[int]:
                 * (t_f * 2.2)
                 / (t_f + 1.2 * (1 - 0.75 + 0.75 * dl[d] / avgdl))
             )
-        score[d] = _d6(acc)
+        score[d] = round6(acc)
     return sorted(score, key=lambda d: (-score[d], d))[:20]
 
 
@@ -256,7 +249,7 @@ def _sem_replay() -> list[int]:
         for a, b in zip(v, qv):
             dot += float(a) * float(b)
             nn += float(a) * float(a)
-        cos[vid] = _d6(dot / (math.sqrt(nn) * qn))
+        cos[vid] = round6(dot / (math.sqrt(nn) * qn))
     return sorted(cos, key=lambda d: (-cos[d], d))[:20]
 
 
@@ -273,7 +266,7 @@ def test_rank_rrf_full_replay(spark):
             s += 1.0 / (60 + lex[d])
         if d in sem:
             s += 1.0 / (60 + sem[d])
-        fused[d] = _d6(s)
+        fused[d] = round6(s)
     expect = sorted(fused, key=lambda d: (-fused[d], d))[:10]
 
     got = REGISTRY["rank_rrf"].fn(spark, SF001).collect()
@@ -368,7 +361,7 @@ def test_rank_ndcg_full_replay(spark):
             s += 1.0 / (60 + lex[d])
         if d in sem:
             s += 1.0 / (60 + sem[d])
-        fused[d] = _d6(s)
+        fused[d] = round6(s)
     audited = sorted(fused, key=lambda d: (-fused[d], d))[:10]
     grades = {d: 11 - (i + 1) for i, d in enumerate(_sem_replay()[:10])}
 
@@ -386,9 +379,9 @@ def test_rank_ndcg_full_replay(spark):
     assert len(got) == 1
     r = got[0]
     assert r["n_overlap"] == n_overlap
-    assert r["dcg"] == _d6(dcg)
-    assert r["idcg"] == _d6(idcg)
-    assert r["ndcg"] == _d6(dcg / idcg)
+    assert r["dcg"] == round6(dcg)
+    assert r["idcg"] == round6(idcg)
+    assert r["ndcg"] == round6(dcg / idcg)
     assert 0.0 < r["ndcg"] <= 1.0
 
 
@@ -441,7 +434,7 @@ def test_knn_filter_replay_and_recall(spark):
         for a, b in zip(v, qv):
             dot += float(a) * float(b)
             nn += float(a) * float(a)
-        cs = _d6(dot / (math.sqrt(nn) * qn))
+        cs = round6(dot / (math.sqrt(nn) * qn))
         if lab in FILTER_LABELS:
             filtered_exact[vid] = cs
             if cell in probes:

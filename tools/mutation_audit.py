@@ -60,8 +60,8 @@ MUTATIONS = [
         mid="M02_drop_null_filter",
         cls="NULL-text filter dropped",
         file="operators/dedup.py",
-        old="return d.where(F.col(\"text\").isNotNull())",
-        new="return d",
+        old="return fan_out_scan(d.where(F.col(\"text\").isNotNull()), d.sparkSession)",
+        new="return fan_out_scan(d, d.sparkSession)",
         fixture="nulltext",
         keys=["dedup_ngram_jaccard"],
     ),
@@ -151,8 +151,8 @@ MUTATIONS = [
         mid="M12_cosine_to_dot",
         cls="cosine → unnormalized dot product",
         file="operators/similarity.py",
-        old="sim = dot(F.col(\"embedding\"), q) / (norm(F.col(\"embedding\")) * F.lit(q_norm))",
-        new="sim = dot(F.col(\"embedding\"), q)",
+        old="sim = F.expr(cosine_sql(\"embedding\", qv))",
+        new="sim = F.expr(dot_sql(\"embedding\", qv))",
         # the committed corpus is unit-normalized (dot == cosine at
         # 6 dp): survived 'base' in the first audit run — the vecscale
         # axis exists because of that survivor
