@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int
 from ..functions.numeric import davg, dsum
 from ..registry import query
 from ..sources.loader import Tables, fan_out_scan
@@ -766,7 +767,7 @@ def sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact groupBy's state is the full key set but the sketch's is 2 KB
     per partition, combined map-side like any partial agg.
 
-    Hashes are md5-derived (``conv(substr(md5(i:key),1,8),16,10) % w``)
+    Hashes are md5-derived (``md5_int(i, ":", key) % W``)
     so the WHOLE sketch is a deterministic pure function of the data —
     no RNG, bit-identical across engines, which is what lets DuckDB
     replay the exact sketch and the driver hash-compare it (vs the
@@ -785,18 +786,13 @@ def sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         Tables(spark, sf_dir).lineitem.select("l_partkey"), spark
     )
 
-    def bucket(i: F.Column | int, key: F.Column) -> F.Column:
-        istr = F.lit(str(i)) if isinstance(i, int) else i.cast("string")
-        h = F.md5(F.concat(istr, F.lit(":"), key.cast("string")).cast("binary"))
-        return F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % W
-
     rows = li.select(
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(i).alias("i"),
-                        bucket(i, F.col("l_partkey")).alias("b"),
+                        (md5_int(i, ":", F.col("l_partkey")) % W).alias("b"),
                     )
                     for i in range(D)
                 ]
@@ -820,7 +816,7 @@ def sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
                 *[
                     F.struct(
                         F.lit(i).alias("i"),
-                        bucket(i, F.col("l_partkey")).alias("b"),
+                        (md5_int(i, ":", F.col("l_partkey")) % W).alias("b"),
                     )
                     for i in range(D)
                 ]
@@ -973,9 +969,7 @@ def sketch_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = Tables(spark, sf_dir).events
     hashes = ev.select(
         "event_type",
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        .alias("h"),
+        md5_int(F.col("user_id")).alias("h"),
     ).distinct()
     w = Window.partitionBy("event_type").orderBy("h")
     ranked = hashes.withColumn("rn", F.row_number().over(w)).cache()
@@ -1066,9 +1060,7 @@ def sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = Tables(spark, sf_dir).events
     hashes = ev.select(
         "event_type",
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        .alias("h"),
+        md5_int(F.col("user_id")).alias("h"),
     ).distinct()
     w = Window.partitionBy("event_type").orderBy("h")
     sk = (

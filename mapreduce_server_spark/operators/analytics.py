@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.pairs import skew_safe_pairs
+from ..functions.series import hourly_counts
 from ..registry import query
 from ..sources.loader import Tables
 
@@ -1482,20 +1483,8 @@ def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     densify-then-compute rule — series length is calendar-bounded, not
     data-bounded, at any SF)."""
     ev = Tables(spark, sf_dir).events
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(
-            F.sequence(F.col("h0"), F.col("h1"), F.expr("interval 1 hour"))
-        ).alias("h")
-    )
-    c = ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    series = grid.join(c, "h", "left").select(
-        "h", F.coalesce(F.col("n"), F.lit(0)).cast("double").alias("x")
+    series = hourly_counts(ev, name="x").select(
+        "h", F.col("x").cast("double").alias("x")
     )
     xs = F.transform(
         F.sort_array(F.collect_list(F.struct("h", "x"))),

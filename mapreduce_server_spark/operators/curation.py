@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..cache import Memo
+from ..functions.hashing import md5_int
 from ..registry import query
 from ..sources.loader import Tables, fan_out_scan
 
@@ -208,19 +209,7 @@ def sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("th"),
         )
     )
-    h16 = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(F.lit("tmp:"), F.col("doc_id").cast("string")).cast(
-                    "binary"
-                )
-            ),
-            1,
-            4,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h16 = md5_int("tmp:", F.col("doc_id"), hex_digits=4)
     extra = (
         d.select("lang", h16.alias("h16"))
         .join(F.broadcast(pol.select("lang", "th")), "lang")
@@ -441,11 +430,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape) at one extra shuffle."""
     ev = Tables(spark, sf_dir).events
     counts = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    frac = F.conv(
-        F.substring(F.md5(F.col("event_id").cast("string").cast("binary")), 1, 8),
-        16,
-        10,
-    ).cast("double") / F.lit(4294967296.0)
+    frac = md5_int(F.col("event_id")) / F.lit(4294967296.0)
     rate = F.least(F.lit(1.0), F.lit(100.0) / F.col("n"))
     return (
         ev.join(F.broadcast(counts), "event_type")
@@ -710,7 +695,6 @@ def sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     point at 100 TB — feature space is fixed at B buckets regardless
     of vocabulary, exactly as in the paper."""
     from ..functions.vector import fsum
-    from .scale_patterns import _md5_int
     from .text import tokens
 
     # round-13: fan out the single-row-group scan before the bigram
@@ -742,7 +726,7 @@ def sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.groupBy(
             "doc_id",
             "lang",
-            (_md5_int("dsir:", F.col("bg")) % DSIR_B).alias("b"),
+            (md5_int("dsir:", F.col("bg")) % DSIR_B).alias("b"),
         )
         .agg(F.count(F.lit(1)).alias("cnt"))
         .cache()

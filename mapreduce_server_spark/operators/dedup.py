@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int
 from ..functions.vector import DUCK_DOT, DUCK_NORM, cosine_sql
 from ..registry import REGISTRY, query
 from ..sources.loader import Tables
@@ -213,12 +214,10 @@ def _jaccard_pairs(d: DataFrame, threshold: float = 0.5) -> DataFrame:
 
 
 def _mh_hash(s: int, shingle: F.Column) -> F.Column:
-    """Minhash permutation s of a shingle: first 8 md5 hex digits as a
-    BIGINT (the sketch_countmin hash discipline) — a pure function of
+    """Minhash permutation s of a shingle — a pure function of
     (s, shingle) both engines compute identically, so the WHOLE minhash
     signature is DuckDB-replayable."""
-    h = F.md5(F.concat(F.lit(f"mh{s}:"), shingle).cast("binary"))
-    return F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
+    return md5_int(f"mh{s}:", shingle)
 
 
 def minhash_signatures(d: DataFrame) -> DataFrame:
@@ -385,7 +384,7 @@ FROM votes GROUP BY doc_id
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash fingerprint per document: per-token hash bits,
     tf-weighted ±1 votes per bit position, sign-packed. The token hash
-    is the md5-derived 32-bit int (``_mh_hash`` discipline), and votes /
+    is the md5-derived 32-bit int (``md5_int``), and votes /
     packing are pure integer arithmetic — so the fingerprints are a
     deterministic function of the data and DuckDB replays them exactly
     (upgraded from rows-only; exact-duplicate fingerprint equality
@@ -395,18 +394,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
         .groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .withColumn(
-            "h",
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("simhash:"), F.col("word")).cast("binary")),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long"),
-        )
+        .withColumn("h", md5_int("simhash:", F.col("word")))
     )
     bit_votes = [
         F.sum(

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int
 from ..registry import query
 from ..sources.loader import Tables, fan_out_scan
 
@@ -591,22 +592,7 @@ def pipeline_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(
             F.concat(F.lit("shuf:"), F.col("doc_id").cast("string")).cast("binary")
         ).alias("k"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("shard:"), F.col("doc_id").cast("string")
-                        ).cast("binary")
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 8
-        ).alias("shard"),
+        (md5_int("shard:", F.col("doc_id")) % 8).alias("shard"),
     )
     wp = Window.partitionBy("shard").orderBy("k", "doc_id")
     pos = keyed.withColumn("pos", F.row_number().over(wp))

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int
 from ..registry import query
 from ..sources.loader import Tables
 from ._memo import session_cache
@@ -692,22 +693,7 @@ def quality_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def fingerprint(df: DataFrame, cnt: str, fp: str) -> DataFrame:
-        h = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("rc:"),
-                        F.col("o_orderkey").cast("string"),
-                        F.lit("|"),
-                        F.col("price").cast("string"),
-                    ).cast("binary")
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        h = md5_int("rc:", F.col("o_orderkey"), "|", F.col("price"))
         return df.groupBy("blk").agg(
             F.count(F.lit(1)).alias(cnt), F.sum(h).cast("long").alias(fp)
         )
@@ -904,7 +890,7 @@ def quality_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     against a 100 TB corpus — the join ships no corpus bytes); per-doc
     hit and size counts are two partial-agg shuffles over doc_id. The
     8-gram join key rides as the raw string here (exact, like GPT-3);
-    at petabyte scale hash it to 8 bytes first (_md5_int discipline) —
+    at petabyte scale hash it to 8 bytes first (``md5_int``) —
     same plan, smaller shuffle rows, bloom-style false positives only
     ever over-flag. Counts are exact integers; hit_frac is one
     identical double division (denominator ≥ 1 by the greatest()

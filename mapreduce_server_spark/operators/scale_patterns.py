@@ -9,10 +9,9 @@ cost ladder. ``sketch_bloom`` exposes the filter itself as data (the
 membership confusion matrix), next to ``sketch_countmin``/
 ``sketch_kmv``'s frequency/cardinality sketches in aggregates.py.
 
-Determinism discipline: every hash is md5-derived (the dedup_minhash
-recipe — ``conv(substring(md5(..), 1, 8), 16, 10)`` ≡ DuckDB
-``('0x' || substr(md5(..), 1, 8))::BIGINT``), so bloom contents replay
-bit-for-bit in SQL; no RNG anywhere.
+Determinism discipline: every hash is ``functions.hashing.md5_int``
+(≡ DuckDB ``('0x' || substr(md5(..), 1, 8))::BIGINT``), so bloom
+contents replay bit-for-bit in SQL; no RNG anywhere.
 """
 
 from __future__ import annotations
@@ -20,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int
 from ..registry import query
 from ..sources.loader import Tables
 
@@ -28,16 +28,9 @@ BLOOM_M = 2048
 BLOOM_K = 3
 
 
-def _md5_int(prefix: str, col) -> F.Column:
-    """First 8 md5 hex digits of ``prefix + str(col)`` as a BIGINT —
-    the engine-portable uniform hash (dedup.py:155 recipe)."""
-    h = F.md5(F.concat(F.lit(prefix), col.cast("string")).cast("binary"))
-    return F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-
-
 def _md5_int_sql(prefix: str, expr: str) -> str:
-    """DuckDB twin of :func:`_md5_int` — the sketch_bloom oracle is
-    BUILT from this helper so the two engines' hash spellings are one
+    """DuckDB spelling of ``md5_int(prefix, expr)`` — the sketch_bloom
+    oracle is BUILT from this helper so the two engines' hash spellings are one
     definition apart, not two (round-7 ADVICE: an inlined copy could
     drift silently)."""
     return f"('0x' || substr(md5('{prefix}' || ({expr})::VARCHAR), 1, 8))::BIGINT"
@@ -97,7 +90,7 @@ def join_bloom_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(
                 F.array(
                     *[
-                        (_md5_int(f"bf{i}:", F.col("c_custkey")) % BLOOM_M).alias(
+                        (md5_int(f"bf{i}:", F.col("c_custkey")) % BLOOM_M).alias(
                             f"b{i}"
                         )
                         for i in range(BLOOM_K)
@@ -109,9 +102,9 @@ def join_bloom_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     o = t.orders
     probed = o.crossJoin(F.broadcast(bits)).filter(
-        F.array_contains("bits", _md5_int("bf0:", F.col("o_custkey")) % BLOOM_M)
-        & F.array_contains("bits", _md5_int("bf1:", F.col("o_custkey")) % BLOOM_M)
-        & F.array_contains("bits", _md5_int("bf2:", F.col("o_custkey")) % BLOOM_M)
+        F.array_contains("bits", md5_int("bf0:", F.col("o_custkey")) % BLOOM_M)
+        & F.array_contains("bits", md5_int("bf1:", F.col("o_custkey")) % BLOOM_M)
+        & F.array_contains("bits", md5_int("bf2:", F.col("o_custkey")) % BLOOM_M)
     )
     exact = probed.join(
         F.broadcast(dim), probed.o_custkey == dim.c_custkey, "left_semi"
@@ -166,25 +159,9 @@ def sketch_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits = (
         members.select(F.explode(ks).alias("k"), "o_custkey")
         .select(
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit("bm"),
-                                F.col("k").cast("string"),
-                                F.lit(":"),
-                                F.col("o_custkey").cast("string"),
-                            ).cast("binary")
-                        ),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % BLOOM_M
-            ).alias("bit")
+            (md5_int("bm", F.col("k"), ":", F.col("o_custkey")) % BLOOM_M).alias(
+                "bit"
+            )
         )
         .agg(F.array_sort(F.collect_set("bit")).alias("bits"))
     )
@@ -200,13 +177,13 @@ def sketch_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_custkey",
             (
                 F.array_contains(
-                    "bits", _md5_int("bm0:", F.col("c_custkey")) % BLOOM_M
+                    "bits", md5_int("bm0:", F.col("c_custkey")) % BLOOM_M
                 )
                 & F.array_contains(
-                    "bits", _md5_int("bm1:", F.col("c_custkey")) % BLOOM_M
+                    "bits", md5_int("bm1:", F.col("c_custkey")) % BLOOM_M
                 )
                 & F.array_contains(
-                    "bits", _md5_int("bm2:", F.col("c_custkey")) % BLOOM_M
+                    "bits", md5_int("bm2:", F.col("c_custkey")) % BLOOM_M
                 )
             ).alias("in_bloom"),
             F.col("o_custkey").isNotNull().alias("is_member"),

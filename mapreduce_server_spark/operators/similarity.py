@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..cache import Memo, app_id, note_read
+from ..functions.hashing import md5_int
 from ..functions.pairs import skew_safe_pairs
 from ..functions.vector import (
     DUCK_DOT,
@@ -416,12 +417,7 @@ def _train_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]] | None
         # (for n ≤ cap the threshold exceeds 65535, so the oracle applies
         # the SAME filter unconditionally as a no-op — invariant-free)
         keep = max(1, (65536 * IVF_TRAIN_CAP) // n_corpus)
-        bucket = F.conv(
-            F.substring(F.md5(F.col("vec_id").cast("string").cast("binary")), 1, 4),
-            16,
-            10,
-        ).cast("long")
-        samp = samp.filter(bucket < keep)
+        samp = samp.filter(md5_int(F.col("vec_id"), hex_digits=4) < keep)
     rows = samp.orderBy("vec_id").collect()
     if not rows:
         # empty corpus → no quantizer; every IVF-family oracle's CTE

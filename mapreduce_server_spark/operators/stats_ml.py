@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int
+from ..functions.series import hour_grid, hourly_counts
 from ..functions.vector import dot_sql, fsum, norm_sql, sq_dist_sql
 from ..registry import query
 from ..sources.loader import Tables, fan_out_scan
@@ -1027,14 +1029,10 @@ def text_hash_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Tables(spark, sf_dir).documents
     from .text import tokens
 
-    h = F.md5(F.concat(F.lit("feat:"), F.col("w")).cast("binary"))
     return (
         d.select("doc_id", F.explode(tokens()).alias("w"))
         .select(
-            "doc_id",
-            (F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % _HASH_DIM).alias(
-                "bucket"
-            ),
+            "doc_id", (md5_int("feat:", F.col("w")) % _HASH_DIM).alias("bucket")
         )
         .groupBy("doc_id", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -3955,25 +3953,7 @@ def stat_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "key",
         F.explode(F.sequence(F.lit(0), F.lit(31))).alias("rep"),
     )
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("boot:"),
-                        F.col("key"),
-                        F.lit(":"),
-                        F.col("rep").cast("string"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        / F.lit(4294967296.0)
-    )
+    u = md5_int("boot:", F.col("key"), ":", F.col("rep")) / F.lit(4294967296.0)
     w = None
     for c in _POISSON1_CDF:
         ind = F.when(F.col("u") >= F.expr(c), 1).otherwise(0)
@@ -4167,25 +4147,7 @@ def ts_stl(spark: SparkSession, sf_dir: str) -> DataFrame:
     numerator 48n−(sa+sb) stays a BIGINT until the single final rounded
     division; full 25-row frames only (nw = 25) so edges don't dilute."""
     ev = Tables(spark, sf_dir).events
-    bounds = ev.groupBy("event_type").agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        "event_type",
-        F.explode(
-            F.sequence(F.col("h0"), F.col("h1"), F.expr("interval 1 hour"))
-        ).alias("h"),
-    )
-    c = ev.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("h")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    series = (
-        grid.join(c, ["event_type", "h"], "left")
-        .select(
-            "event_type", "h", F.coalesce(F.col("n"), F.lit(0)).alias("n")
-        )
-    )
+    series = hourly_counts(ev, "event_type")
     wspec = Window.partitionBy("event_type").orderBy("h")
     sa = F.sum("n").over(wspec.rowsBetween(-12, 11))
     sb = F.sum("n").over(wspec.rowsBetween(-11, 12))
@@ -4456,24 +4418,9 @@ def ts_acf_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     (statsmodels convention: full-series mean and denominator, partial
     numerator). Both engines divide identical integers, round 6 dp."""
     ev = Tables(spark, sf_dir).events
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(
-            F.sequence(F.col("h0"), F.col("h1"), F.expr("interval 1 hour"))
-        ).alias("h")
-    )
-    c = ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
     series = (
-        grid.join(c, "h", "left")
-        .select("h", F.coalesce(F.col("n"), F.lit(0)).alias("x"))
-        .select(
-            F.row_number().over(Window.orderBy("h")).alias("t"), "x"
-        )
+        hourly_counts(ev, name="x")
+        .select(F.row_number().over(Window.orderBy("h")).alias("t"), "x")
         .cache()  # both sides of the lag join + the moment totals
     )
     tot = series.agg(
@@ -4833,25 +4780,7 @@ def stat_permtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "price",
         "rep",
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("perm:"),
-                            F.col("key"),
-                            F.lit(":"),
-                            F.col("rep").cast("string"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 2
-        ).alias("g"),
+        (md5_int("perm:", F.col("key"), ":", F.col("rep")) % 2).alias("g"),
     )
     g1, g0 = F.col("g") == 1, F.col("g") == 0
     d = p.groupBy("rep").agg(
@@ -4917,22 +4846,7 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     order. The selection uses the UNROUNDED score; the output column is
     rounded at 9 dp for the cross-engine hash."""
     li = Tables(spark, sf_dir).lineitem
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("ws:"),
-                    F.col("l_orderkey").cast("string"),
-                    F.lit("-"),
-                    F.col("l_linenumber").cast("string"),
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_int("ws:", F.col("l_orderkey"), "-", F.col("l_linenumber"))
     qty = F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long")
     # try_divide: a zero integer weight (sub-unit quantity truncates to
     # 0) draws no key — NULL score, ordered after every real key on
@@ -5013,22 +4927,8 @@ def ts_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers, so absolute/squared error sums are BIGINT-exact; each
     metric is one final rounded double division (IEEE-identical)."""
     ev = Tables(spark, sf_dir).events
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(
-            F.sequence(F.col("h0"), F.col("h1"), F.expr("interval 1 hour"))
-        ).alias("h")
-    )
-    c = ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    series = (
-        grid.join(c, "h", "left")
-        .select("h", F.coalesce(F.col("n"), F.lit(0)).alias("x"))
-        .select(F.row_number().over(Window.orderBy("h")).alias("t"), "x")
+    series = hourly_counts(ev, name="x").select(
+        F.row_number().over(Window.orderBy("h")).alias("t"), "x"
     )
     w = Window.orderBy("t")
     e = series.select(
@@ -5106,27 +5006,9 @@ def ts_anomaly_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile is |types|·24 rows broadcast back onto the grid; z² is
     reported (rounded) only for the flagged survivors."""
     ev = Tables(spark, sf_dir).events
-    bounds = ev.groupBy("event_type").agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        "event_type",
-        F.explode(
-            F.sequence(F.col("h0"), F.col("h1"), F.expr("interval 1 hour"))
-        ).alias("h"),
-    )
-    c = ev.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("h")
-    ).agg(F.count(F.lit(1)).alias("n"))
     series = (
-        grid.join(c, ["event_type", "h"], "left")
-        .select(
-            "event_type",
-            "h",
-            F.hour("h").cast("long").alias("hod"),
-            F.coalesce(F.col("n"), F.lit(0)).alias("n"),
-        )
+        hourly_counts(ev, "event_type")
+        .select("event_type", "h", F.hour("h").cast("long").alias("hod"), "n")
         .cache()  # feeds both the slot profile and the flag join
     )
     prof = series.groupBy("event_type", "hod").agg(
@@ -5469,25 +5351,13 @@ def ts_cross_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one final rounded division (statsmodels ccf convention:
     full-series means/variances, partial numerator)."""
     ev = Tables(spark, sf_dir).events
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
+    gh = hour_grid(ev).select(
+        "h", F.row_number().over(Window.orderBy("h")).alias("t")
     )
-    gh = bounds.select(
-        F.explode(
-            F.sequence(F.col("h0"), F.col("h1"), F.expr("interval 1 hour"))
-        ).alias("h")
-    ).select("h", F.row_number().over(Window.orderBy("h")).alias("t"))
-    c = ev.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("h")
-    ).agg(F.count(F.lit(1)).alias("n"))
     types = ev.select("event_type").distinct()
     series = (
-        types.crossJoin(gh)
-        .join(c, ["event_type", "h"], "left")
-        .select(
-            "event_type", "t", F.coalesce(F.col("n"), F.lit(0)).alias("x")
-        )
+        hourly_counts(ev, "event_type", grid=types.crossJoin(gh), name="x")
+        .select("event_type", "t", "x")
         .cache()  # both lag-join sides + the per-type moments
     )
     mom = series.groupBy("event_type").agg(
@@ -5634,25 +5504,13 @@ def ts_granger(spark: SparkSession, sf_dir: str) -> DataFrame:
     operand-for-operand in the oracle; RSS uses the normal-equations
     identity RSS = Σy² − ŵ·X'y (no per-row residual pass)."""
     ev = Tables(spark, sf_dir).events
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
+    gh = hour_grid(ev).select(
+        "h", F.row_number().over(Window.orderBy("h")).alias("t")
     )
-    gh = bounds.select(
-        F.explode(
-            F.sequence(F.col("h0"), F.col("h1"), F.expr("interval 1 hour"))
-        ).alias("h")
-    ).select("h", F.row_number().over(Window.orderBy("h")).alias("t"))
-    cc = ev.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("h")
-    ).agg(F.count(F.lit(1)).alias("n"))
     types = ev.select("event_type").distinct()
     series = (
-        types.crossJoin(gh)
-        .join(cc, ["event_type", "h"], "left")
-        .select(
-            "event_type", "t", F.coalesce(F.col("n"), F.lit(0)).alias("x")
-        )
+        hourly_counts(ev, "event_type", grid=types.crossJoin(gh), name="x")
+        .select("event_type", "t", "x")
         .cache()  # three self-join arms
     )
     y, l, a = series.alias("y"), series.alias("l"), series.alias("a")
@@ -5979,23 +5837,9 @@ def ts_ljungbox(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles on both engines — decision-in-doubles is safe because the
     operands are bit-identical, the ARCHITECTURE §4 rule."""
     ev = Tables(spark, sf_dir).events
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        F.explode(
-            F.sequence(F.col("h0"), F.col("h1"), F.expr("interval 1 hour"))
-        ).alias("h")
-    )
-    c = ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    wt = Window.orderBy("h")
     series = (
-        grid.join(c, "h", "left")
-        .select("h", F.coalesce(F.col("n"), F.lit(0)).alias("x"))
-        .select(F.row_number().over(wt).alias("t"), "x")
+        hourly_counts(ev, name="x")
+        .select(F.row_number().over(Window.orderBy("h")).alias("t"), "x")
         .cache()  # feeds tot + 12-lag self-join (ReuseExchange trap)
     )
     tot = series.agg(

@@ -43,22 +43,7 @@ def get_spark(
         # one-row tasks (pure scheduling overhead at any scale).
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Round-13 measured-and-rejected default (guide §3.1): AQE's
-        # runtime SMJ→shuffled-hash conversion
-        # (maxShuffledHashJoinLocalMapThreshold=64m) won 11-51% on the
-        # SMJ-planned keys in isolation (join_full 0.22→0.11 s,
-        # graph_wcc 0.16→0.12 s, ts_granger 0.35→0.29 s, rank_rrf
-        # 0.68→0.61 s; noop sink, median of 3) — but alternating
-        # bench.py runs at matched calibration showed it adds a uniform
-        # per-collect AQE cost that regressed the 7-query headline
-        # serving path ~35% (ON 0.81/1.25 s vs OFF 0.59/0.85 s). The
-        # default therefore stays OFF (0); a cluster deployment whose
-        # jobs are dominated by large sort-merge joins rather than
-        # repeated short collects can opt in via the env knob.
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "0"),
-        )
+        # AQE's SMJ→hash-join conversion stays off: it cost serving ~35% (r13).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -23,6 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int
 from ..sources.loader import _normalize_events_ts, ensure_confs
 
 
@@ -681,9 +682,7 @@ def kmv(stream: DataFrame, k: int = 32) -> DataFrame:
 
     src = stream.select(
         "event_type",
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        .alias("h"),
+        md5_int(F.col("user_id")).alias("h"),
     )
 
     def fold(key, pdf_iter, state: GroupState):

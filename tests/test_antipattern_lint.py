@@ -57,33 +57,40 @@ TOPANDAS_ALLOWLIST = {
 }
 
 
-def _code_occurrences(path: str, needle: str) -> int:
+def _code_occurrences(path: str, needle: str, keep_strings: bool = False) -> int:
     """Count ``needle`` in CODE tokens only (round-13 ADVICE): docstring
     and comment mentions are prose, not call sites — counting them let a
     new unaudited call site slip in whenever a docstring mention was
     deleted in the same edit, and made comment edits false-positive.
     Strings/comments are blanked via tokenize; remaining tokens are
     joined without whitespace so ``x .cache ()`` still counts and a
-    different attribute (``.cache_hit()``) still doesn't."""
+    different attribute (``.cache_hit()``) still doesn't. With
+    ``keep_strings`` only comments are blanked (string arguments are
+    part of the needle)."""
     src = open(path, encoding="utf-8").read()
+    blank = (tokenize.COMMENT,) if keep_strings else (tokenize.STRING, tokenize.COMMENT)
     parts = []
     for t in tokenize.generate_tokens(io.StringIO(src).readline):
-        parts.append(" " if t.type in (tokenize.STRING, tokenize.COMMENT)
-                     else t.string)
+        parts.append(" " if t.type in blank else t.string)
         parts.append(" ")
     return "".join(parts).replace(" ", "").count(needle)
 
 
-def _pinned_sites(needle: str, allowlist: dict[str, int], label: str) -> None:
+def _sites(needle: str, keep_strings: bool = False) -> dict[str, int]:
     found: dict[str, int] = {}
     for root, _dirs, files in os.walk(PKG):
         for f in files:
             if not f.endswith(".py"):
                 continue
             path = os.path.join(root, f)
-            n = _code_occurrences(path, needle)
+            n = _code_occurrences(path, needle, keep_strings)
             if n:
                 found[os.path.relpath(path, PKG)] = n
+    return found
+
+
+def _pinned_sites(needle: str, allowlist: dict[str, int], label: str) -> None:
+    found = _sites(needle)
     assert found == allowlist, (
         f"new/changed driver-side {label} site(s) — audit that each is "
         f"bounded, then re-pin: {found}"
@@ -96,6 +103,23 @@ def test_collect_sites_are_pinned():
 
 def test_topandas_sites_are_pinned():
     _pinned_sites(".toPandas()", TOPANDAS_ALLOWLIST, ".toPandas()")
+
+
+#: cross-engine recipes written once (ARCHITECTURE §4 rule 9), needle →
+#: its one home: the md5-integer hash and the hour grid's bounds.
+RECIPE_HOMES = {
+    "F.conv(": "functions/hashing.py",
+    'F.sequence(F.col("h0"),F.col("h1"),F.expr("interval1hour"))': (
+        "functions/series.py"
+    ),
+}
+
+
+def test_recipes_are_spelled_once():
+    """A copy of a recipe outside its helper can drift from the DuckDB
+    spelling it must match bit for bit; call the helper instead."""
+    found = {n: _sites(n, keep_strings=True) for n in RECIPE_HOMES}
+    assert found == {n: {home: 1} for n, home in RECIPE_HOMES.items()}
 
 
 #: audited `.cache()` sites, path → CODE occurrence count (tokenize-

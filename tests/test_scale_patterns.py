@@ -11,6 +11,7 @@ from collections import Counter
 import duckdb
 from pyspark.sql import functions as F
 
+from mapreduce_server_spark.functions.hashing import md5_int
 from mapreduce_server_spark.operators.scale_patterns import BLOOM_K, BLOOM_M
 from mapreduce_server_spark.registry import REGISTRY
 from mapreduce_server_spark.sources.loader import Tables
@@ -20,6 +21,47 @@ from .conftest import SF001
 
 def _h(prefix: str, key: int, mod: int) -> int:
     return int(hashlib.md5(f"{prefix}{key}".encode()).hexdigest()[:8], 16) % mod
+
+
+def test_md5_int_matches_hashlib_and_duckdb(spark):
+    """md5_int against a hashlib replay and DuckDB's hand spelling:
+    ASCII and non-ASCII text, int and string parts, Python literal and
+    column parts, 4 and 8 hex digits, and a NULL part. The 4-digit case
+    is the IVF trainer's sampler, which no fixture is large enough to
+    run."""
+    rows = [(0, "abc", 42), (1, "naïve — 日本語", -7), (2, None, 3), (3, "x", None)]
+    s, i = F.col("s"), F.col("i")
+    cases = [  # (engine parts, DuckDB text, hex digits)
+        (("p:", s), "'p:' || s", 8),
+        (("p:", s), "'p:' || s", 4),
+        ((i,), "i::VARCHAR", 8),
+        ((7, ":", i), "'7:' || i::VARCHAR", 8),
+        (("tmp:", i), "'tmp:' || i::VARCHAR", 4),
+        ((s, "|", i), "s || '|' || i::VARCHAR", 8),
+    ]
+    df = spark.createDataFrame(rows, "id int, s string, i int")
+    got = df.orderBy("id").select(
+        *[md5_int(*parts, hex_digits=n) for parts, _, n in cases]
+    ).collect()
+    values = ",".join(f"({r[0]}, {'NULL' if r[1] is None else repr(r[1])}, "
+                      f"{'NULL' if r[2] is None else r[2]})" for r in rows)
+    duck = duckdb.sql(
+        "SELECT "
+        + ", ".join(f"('0x' || substr(md5({t}), 1, {n}))::BIGINT"
+                    for _, t, n in cases)
+        + f" FROM (VALUES {values}) v(id, s, i) ORDER BY id"
+    ).fetchall()
+    want = []
+    for _, sv, iv in rows:
+        row = []
+        for parts, _, n in cases:
+            vals = [sv if p is s else iv if p is i else p for p in parts]
+            text = None if None in vals else "".join(map(str, vals))
+            row.append(None if text is None
+                       else int(hashlib.md5(text.encode()).hexdigest()[:n], 16))
+        want.append(tuple(row))
+    assert [tuple(r) for r in got] == want == duck
+    assert want[2][0] is None and want[3][2] is None
 
 
 def test_bloom_matches_pure_python_and_never_false_negative(spark):

@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Simulate the driver's verification end-to-end: vanilla SparkSession →
-entry() smoke → every queries() key vs oracle_sql() in DuckDB at sf0.01
-(exact compare, stricter than the driver's hash). Exit 1 on any failure.
+entry() smoke → queries() keys vs oracle_sql() in DuckDB (exact compare,
+stricter than the driver's hash). Exit 1 on any failure.
 
-Usage: python tools/driver_sim.py [sf_dir]
+Usage: python tools/driver_sim.py [sf_dir] [key ...]
+  sf_dir defaults to the sf0.01 fixture; no keys means every key.
 """
 
 from __future__ import annotations
@@ -21,33 +22,14 @@ sys.path.insert(0, os.path.join(REPO, "tests"))
 os.environ.setdefault("SPARK_GRAFT_VALIDATE_MEASURES", "1")
 
 
-def _ensure_map_headroom() -> None:
-    """DuckDB 1.0's windowed/grouped aggregates over ~10^5+ partitions
-    retain tens of thousands of allocator mappings, and the distro
-    default vm.max_map_count=65530 then kills the oracle run mid-sweep
-    with a 'bad allocation' OOM at ~6 GB RSS on a 128 GB host (found by
-    the round-13 sf1 run: 84 keys poisoned from ml_naive_bayes onward;
-    with headroom the same sweep peaks at ~1.7k maps). Best-effort
-    raise — harmless if already high; silently skipped if unwritable
-    (then cap DuckDB threads and run heavy oracles in fresh
-    connections instead)."""
-    try:
-        path = "/proc/sys/vm/max_map_count"
-        if int(open(path).read()) < 262144:
-            with open(path, "w") as f:
-                f.write("262144")
-    except OSError:
-        pass
-
-
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    keys = sys.argv[2:]
 
-    import duckdb
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
-    from mapreduce_server_spark.sources.loader import TABLE_NAMES
+    from conftest import make_duck
     from parity import assert_fetch_dtypes, assert_parity
 
     master = os.environ.get("MRSS_MASTER", "local[8]")
@@ -68,8 +50,13 @@ def main() -> int:
     assert len(rows) > 0, "entry() smoke failed"
     print(f"entry(): {len(rows)} rows OK")
 
-    _ensure_map_headroom()
-    con = duckdb.connect()
+    # DuckDB 1.0's windowed/grouped aggregates over ~10^5+ partitions
+    # retain tens of thousands of allocator mappings: at sf1 the distro
+    # default vm.max_map_count=65530 kills the oracle run mid-sweep with
+    # a 'bad allocation' OOM (round 13: 84 keys from ml_naive_bayes on);
+    # with 262144 the same sweep peaks at ~1.7k maps. Raise it on the
+    # host before an sf1 sweep.
+    con = make_duck(sf_dir)
     # spillable oracle: an in-memory DuckDB cannot offload without a
     # temp dir, and sf1-size window/list aggregates need one
     from mapreduce_server_spark.scratch import SCRATCH, owned
@@ -87,15 +74,17 @@ def main() -> int:
     # (ARCHITECTURE §24 "struct-min cliff"; ts_ohlc/ts_m4 now use
     # arg_min over a hugeint composite key).
     con.execute(f"SET memory_limit='{os.environ.get('MRSS_DUCK_MEM', '32GB')}'")
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
 
     import time as _time
 
-    verbose = os.environ.get("MRSS_VERBOSE", "") == "1"
+    verbose = keys or os.environ.get("MRSS_VERBOSE", "") == "1"
     queries, oracles = entrymod.queries(), entrymod.oracle_sql()
+    missing = [k for k in keys if k not in queries]
+    if missing:
+        print(f"NOT REGISTERED: {missing}")
+        return 1
+    if keys:
+        queries = {k: queries[k] for k in keys}
     # Targeted-rerun knob: skip ahead to a key (inclusive) so a fix for
     # a late-sweep failure can be validated in minutes instead of
     # replaying the full 75-minute sf1 sweep. A run that uses this is a

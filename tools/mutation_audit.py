@@ -163,8 +163,8 @@ MUTATIONS = [
         mid="M13_lsh_salt_change",
         cls="LSH hash salt changed (candidate recall)",
         file="operators/dedup.py",
-        old="h = F.md5(F.concat(F.lit(f\"mh{s}:\"), shingle).cast(\"binary\"))",
-        new="h = F.md5(F.concat(F.lit(f\"mx{s}:\"), shingle).cast(\"binary\"))",
+        old="return md5_int(f\"mh{s}:\", shingle)",
+        new="return md5_int(f\"mx{s}:\", shingle)",
         # survived 'base' in the first audit run (planted dups are
         # EXACT — identical signatures under any salt): jacedge now
         # carries a searched pair whose banding collides only under

@@ -20,6 +20,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from mapreduce_server_spark import REGISTRY  # noqa: E402
+from mapreduce_server_spark.plans import plan_string  # noqa: E402
 from mapreduce_server_spark.session import get_spark  # noqa: E402
 
 
@@ -33,11 +34,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     for key in keys:
-        df = REGISTRY[key].fn(spark, sf_dir)
-        # the exact call DataFrame.explain() prints through (PySpark source)
-        plan = spark._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = plan_string(REGISTRY[key].fn(spark, sf_dir))
         path = os.path.join(outdir, f"{key}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(f"-- {key} @ {sf_dir} ({suffix})\n")

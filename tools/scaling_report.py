@@ -20,9 +20,7 @@ from __future__ import annotations
 
 import math
 import os
-import statistics
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -70,17 +68,6 @@ WATCHLIST = [
 ]
 
 
-def _median_time(fn, spark, sf_dir: str, runs: int = 3) -> float:
-    fn(spark, sf_dir).collect()  # warm-up (fills scan caches, JIT)
-    times = []
-    for _ in range(runs):
-        df = fn(spark, sf_dir)
-        t0 = time.perf_counter()
-        df.collect()
-        times.append(time.perf_counter() - t0)
-    return statistics.median(times)
-
-
 def main() -> int:
     from bench import HEADLINE
 
@@ -105,11 +92,9 @@ def main() -> int:
     # key also matches how a user actually runs one query, which is
     # what a per-query scaling exponent claims to measure. Startup
     # (~10 s × ~63 measurements) is excluded: the child times only
-    # collect(), exactly _median_time.
+    # collect() (median of 3 after one warm-up).
     import subprocess
 
-    # the child re-implements _median_time inline (tools/ is not a
-    # package, so it can't import this module by name)
     child_src = (
         "import sys, json, time, statistics\n"
         "sys.path.insert(0, sys.argv[3])\n"
