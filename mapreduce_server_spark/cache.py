@@ -11,6 +11,9 @@ fingerprint and an appended or rewritten table never adds an entry.
 Concurrent builds of one key run once; other keys, and builds nested in
 a build, never wait on each other. A fingerprint is file-system stats
 only, so checking a directory table costs time linear in its part count.
+Storing an entry drops and releases, in every memo, the entries that
+recorded a table whose path is gone since: nothing looks those up again
+(a server's data directories come and go), so nothing else would.
 """
 
 from __future__ import annotations
@@ -127,6 +130,10 @@ class Entry:
         """The tables of ``sf_dir`` the build read."""
         return {t for d, t in self.reads if d == sf_dir}
 
+    def orphaned(self, gone: Callable[[str, str], bool]) -> bool:
+        """Did the build read a table that ``gone`` says is missing now?"""
+        return any(fp is not None and gone(d, t) for (d, t), fp in self.reads.items())
+
 
 #: every memo by name, for :func:`stats` and :func:`clear_frames`
 _MEMOS: dict[str, Memo] = {}
@@ -187,6 +194,7 @@ class Memo(dict):
             self[key] = Entry(value, reads)
         if old is not None:
             self._release(old.value)
+        _drop_orphans()
         return value
 
     def _key_lock(self, key: Hashable) -> threading.Lock:
@@ -204,6 +212,25 @@ class Memo(dict):
             self.release(value)
         except Exception:  # best effort: the value's session may be gone
             pass
+
+
+def _drop_orphans() -> None:
+    """Drop and release every memo's entries that recorded a table whose
+    path no longer exists (each path is checked once per sweep)."""
+    missing: dict[tuple[str, str], bool] = {}
+
+    def gone(d: str, t: str) -> bool:
+        if (d, t) not in missing:
+            missing[(d, t)] = not os.path.exists(table_path(d, t))
+        return missing[(d, t)]
+
+    for m in list(_MEMOS.values()):
+        for key, entry in list(m.items()):
+            # a replacement stored meanwhile by another thread stays
+            if entry.orphaned(gone) and m.get(key) is entry:
+                m.pop(key, None)
+                m._key_locks.pop(key, None)
+                m._release(entry.value)
 
 
 def stats() -> dict[str, dict[str, int]]:

@@ -11,8 +11,14 @@ over the grid at any scale factor.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def hours(lo: Column, hi: Column) -> Column:
+    """The array of every hour from ``lo`` to ``hi`` (hour-aligned
+    timestamps, both included)."""
+    return F.sequence(lo, hi, F.expr("interval 1 hour"))
 
 
 def hour_grid(ev: DataFrame, *keys: str) -> DataFrame:
@@ -22,12 +28,16 @@ def hour_grid(ev: DataFrame, *keys: str) -> DataFrame:
         F.date_trunc("hour", F.min("ts")).alias("h0"),
         F.date_trunc("hour", F.max("ts")).alias("h1"),
     )
-    return bounds.select(
-        *keys,
-        F.explode(
-            F.sequence(F.col("h0"), F.col("h1"), F.expr("interval 1 hour"))
-        ).alias("h"),
-    )
+    return bounds.select(*keys, F.explode(hours(F.col("h0"), F.col("h1"))).alias("h"))
+
+
+def hour_span(hourly: DataFrame, key: str) -> DataFrame:
+    """(key, g): every hour from the first to the last value of the
+    hour-truncated column ``h``, per ``key`` — the dense grid of an
+    already hourly series. One row per key explodes to its own span,
+    never a global calendar crossJoin."""
+    bounds = hourly.groupBy(key).agg(F.min("h").alias("mn"), F.max("h").alias("mx"))
+    return bounds.select(key, F.explode(hours(F.col("mn"), F.col("mx"))).alias("g"))
 
 
 def hourly_counts(

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.pairs import skew_safe_pairs
-from ..functions.series import hourly_counts
+from ..functions.series import hour_span, hourly_counts
 from ..registry import query
 from ..sources.loader import Tables
 
@@ -412,16 +412,7 @@ def ts_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sv"),
     )
-    grid = (
-        hourly.groupBy("user_id")
-        .agg(F.min("h").alias("mn"), F.max("h").alias("mx"))
-        .select(
-            "user_id",
-            F.explode(
-                F.sequence(F.col("mn"), F.col("mx"), F.expr("interval 1 hour"))
-            ).alias("g"),
-        )
-    )
+    grid = hour_span(hourly, "user_id")
     joined = grid.join(
         hourly,
         (grid.user_id == hourly.user_id) & (grid.g == hourly.h),
@@ -667,16 +658,7 @@ def ts_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.count(F.lit(1))
         ).alias("mv"),
     )
-    grid = (
-        hourly.groupBy("user_id")
-        .agg(F.min("h").alias("mn"), F.max("h").alias("mx"))
-        .select(
-            "user_id",
-            F.explode(
-                F.sequence(F.col("mn"), F.col("mx"), F.expr("interval 1 hour"))
-            ).alias("g"),
-        )
-    )
+    grid = hour_span(hourly, "user_id")
     joined = grid.join(
         hourly,
         (grid.user_id == hourly.user_id) & (grid.g == hourly.h),

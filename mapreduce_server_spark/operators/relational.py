@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import dsum
+from ..functions.series import hours
 from ..registry import query
 from ..sources.loader import Tables, fan_out_scan
 
@@ -770,11 +771,7 @@ def join_interval_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "te",
         F.explode(
-            F.sequence(
-                F.date_trunc("hour", "ts"),
-                F.date_trunc("hour", "te"),
-                F.expr("interval 1 hour"),
-            )
+            hours(F.date_trunc("hour", "ts"), F.date_trunc("hour", "te"))
         ).alias("cell"),
     )
     a, b = cells.alias("a"), cells.alias("b")

@@ -9,6 +9,7 @@ show pruning actually reached the scan.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -91,19 +92,16 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@functools.cache
 def _daily_rollup_view() -> "MaterializedView":
     from ..serving.matview import MaterializedView
 
-    def keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ev = Tables(spark, sf_dir).events
+    def keys(ev: DataFrame) -> DataFrame:
         return ev.select(F.to_date("ts").cast("string").alias("day")).distinct()
 
-    def build(spark: SparkSession, sf_dir: str, days: list | None) -> DataFrame:
-        ev = Tables(spark, sf_dir).events
+    def build(ev: DataFrame, days: list | None) -> DataFrame:
         day = F.to_date("ts").cast("string")
         if days is not None:
-            # the pruning predicate: at scale this hits the source's
-            # day-partition layout and reads only the new days
             ev = ev.filter(day.isin(days))
         return ev.groupBy(day.alias("day"), "event_type").agg(
             F.count(F.lit(1)).alias("n"),
@@ -112,7 +110,7 @@ def _daily_rollup_view() -> "MaterializedView":
             ),
         )
 
-    return MaterializedView("daily_rollup", "day", keys, build)
+    return MaterializedView("daily_rollup", "day", "events", keys, build)
 
 
 @query(
@@ -128,13 +126,13 @@ GROUP BY 1, 2
 """,
 )
 def matview_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized daily event rollup, refreshed partition-incrementally
-    and read back (serving/matview.py — the recurring-workload pattern:
-    an hourly dashboard refresh over an append-only log rescans only the
-    days that gained data, via the pushed-down day predicate). The oracle
-    aggregates the source directly, so the value match proves refresh +
-    storage round-trip lost nothing; the incremental path itself is
-    pytest-verified (tests/test_matview.py)."""
+    """Materialized daily event rollup, refreshed incrementally and read
+    back (serving/matview.py — the recurring-workload pattern: an hourly
+    dashboard refresh over an append-only log scans only the parts
+    appended since the last refresh, and rebuilds only the days they
+    bring). The oracle aggregates the source directly, so the value
+    match proves refresh + storage round-trip lost nothing; the
+    incremental path itself is pytest-verified (tests/test_matview.py)."""
     mv = _daily_rollup_view()
     mv.refresh(spark, sf_dir)
     return mv.read(spark, sf_dir)

@@ -1,18 +1,36 @@
-"""Materialized views with partition-incremental refresh.
+"""Materialized views, refreshed at the cost of the appended parts.
 
 The recurring-workload pattern (the VLDB'15 reuse line in PAPERS.md): a
-dashboard aggregate re-run hourly over an append-only 100 TB event log
-should not rescan history — only the partitions that gained data since the
-last refresh. This module materializes an aggregate partitioned on a
-coarse key (e.g. day) and refreshes by set difference:
+dashboard aggregate re-run hourly over an append-only event log should
+pay for the new data, not for the history. This module materializes an
+aggregate partitioned on a coarse key (e.g. day) over one source table
+and refreshes it by set difference:
 
-    new = distinct partition keys in source  −  keys already materialized
+    new = partition keys in the source's new parts  −  keys materialized
 
-then rebuilds ONLY those partitions with the partition predicate pushed
-into the source scan (partition pruning makes the rescan proportional to
-the new data, not to history), and appends them via dynamic partition
-overwrite (idempotent per partition — a re-run of the same refresh
-replaces, never duplicates).
+then rebuilds ONLY those keys from the new parts and writes them by
+dynamic partition overwrite (idempotent per partition — a re-run of the
+same refresh replaces, never duplicates).
+
+**Covered parts.** The view records the source parts its
+materialization covers, each as ``(name, mtime_ns, size)``. A refresh
+lists the source table on the driver; when every covered part is still
+there and unchanged, discovery and rebuild scan only the parts that are
+new since (with the source's recorded schema, so no inference job).
+That is exact under the append-only contract below: every key of a
+covered part was materialized by the refresh that covered it, so a key
+not yet materialized can occur only in a new part. Any covered part
+rewritten or gone, a missing view directory, or ``force=`` makes the new
+parts all parts — a full rediscovery through the same code. The record
+lives beside the materialization: deleting the view directory resets
+it, and the ``cache`` module's sweep drops it once the source is gone.
+
+Why parts and not the key predicate: ``to_date(ts) IN (...)`` cannot
+prune a flat directory of part files, so a predicate-driven refresh read
+the whole log twice per round, discovery and rebuild, to find one
+appended day (ARCHITECTURE §10 has the measured rows and tasks). A
+source laid out by day would let the predicate prune; an append-only
+log of part files does not.
 
 Correctness domain: exact for sources that are append-only at partition
 granularity (closed partitions never gain rows). A source that back-fills
@@ -20,42 +38,104 @@ an already-materialized partition needs the partition marked dirty —
 ``refresh(force=[...])`` — or a watermark-delayed refresh policy; that
 staleness contract is the standard one for log-structured MVs.
 
-Scale notes: the key-discovery scan reads only the partition column
-(column pruning) and aggregates to |distinct keys| rows; the MV listing
-reads parquet partition directories (no data IO). Each refresh shuffles
-only the new partitions' rows, once, on the aggregate's group keys.
+Reading: ``read`` passes the view's schema (recorded from the rebuild's
+analyzed plan) to the reader, and ``session.get_spark`` lists partition
+directories on the driver, so reading the view is the one job that
+scans it — no schema-inference job, no per-directory listing job.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import urllib.parse
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
+from ..cache import Fingerprint, Memo, note_read, note_reads, table_path
 from ..scratch import SCRATCH, owned
+from ..sources.loader import _normalize_events_ts, ensure_confs
 
-#: build(spark, sf_dir, keys) → aggregated DataFrame containing ONLY the
-#: given partition-key values (keys=None → all). The build closure owns
-#: pushing `keys` into its source filter so partition pruning applies.
-BuildFn = Callable[[SparkSession, str, "list | None"], DataFrame]
+#: keys(src) → single-column DataFrame of the distinct partition keys in
+#: the source rows ``src``. Kept separate from build so discovery is a
+#: column-pruned distinct of the partition key alone — never the
+#: full aggregate.
+KeysFn = Callable[[DataFrame], DataFrame]
 
-#: keys(spark, sf_dir) → single-column DataFrame of the source's distinct
-#: partition keys. Kept separate from build so discovery is a column-pruned
-#: scan + distinct of the partition key alone — never the full aggregate.
-KeysFn = Callable[[SparkSession, str], DataFrame]
+#: build(src, keys) → the aggregate of the source rows ``src``, restricted
+#: to the given partition-key values (keys=None → all).
+BuildFn = Callable[[DataFrame, "list | None"], DataFrame]
+
+#: part name (relative to the table path; "" for a single-file table) →
+#: (mtime_ns, size)
+Parts = dict[str, tuple[int, int]]
+
+
+@dataclasses.dataclass(frozen=True)
+class Covered:
+    """What a view's materialization covers."""
+
+    #: the source parts every materialized key was discovered over
+    parts: Parts
+    #: the parquet schema the parts were read with (before normalization)
+    source_schema: StructType | None
+    #: the materialization's read schema
+    view_schema: StructType | None
+
+
+@dataclasses.dataclass(frozen=True)
+class Refresh:
+    """How one :meth:`MaterializedView.refresh` ran."""
+
+    #: "incremental" (new parts only) or "full" (every part)
+    mode: str
+    parts_scanned: int
+    parts_total: int
+    #: the partition keys rebuilt
+    rebuilt: list[str]
+
+
+#: view path → :class:`Covered`, recorded with the source's fingerprint.
+#: Read with ``get`` (an append changes the fingerprint but keeps the
+#: record valid); the memo sweep drops a record whose source is gone.
+_COVERED = Memo("matview")
+
+
+def _parts(fp: Fingerprint) -> Parts:
+    """The parquet parts of a table from its fingerprint, as Spark lists
+    them: every file of a directory except hidden ones (``_SUCCESS``,
+    ``.crc``, staging directories), or the single file itself."""
+    if not fp:
+        return {}
+    if isinstance(fp[0], int):  # a file's (mtime_ns, size)
+        return {"": fp}
+    return {
+        n: (mtime, size)
+        for n, mtime, size in fp
+        if not any(c.startswith(("_", ".")) for c in n.split(os.sep))
+    }
 
 
 class MaterializedView:
     def __init__(
-        self, name: str, partition_col: str, keys: KeysFn, build: BuildFn
+        self,
+        name: str,
+        partition_col: str,
+        source: str,
+        keys: KeysFn,
+        build: BuildFn,
     ):
         self.name = name
         self.partition_col = partition_col
+        #: the source table's name: ``<sf_dir>/<source>.parquet``
+        self.source = source
         self.keys = keys
         self.build = build
+        #: how the last :meth:`refresh` on this object ran
+        self.last_refresh: Refresh | None = None
 
     def path(self, sf_dir: str) -> str:
         # pid-tagged: the MV is process-private serving state (like the
@@ -89,28 +169,114 @@ class MaterializedView:
             if raw != self._NULL_SENTINEL
         }
 
+    def covered(self, sf_dir: str) -> Covered | None:
+        """What the materialization covers; None without one."""
+        path = self.path(sf_dir)
+        entry = _COVERED.get(path)
+        if entry is None or not os.path.isdir(path):
+            return None
+        return entry.value
+
+    def _record(self, sf_dir: str, fp: Fingerprint, **fields) -> None:
+        """Update the covered record; ``fp`` is the source's fingerprint."""
+
+        def fill() -> Covered:
+            note_reads({(sf_dir, self.source): fp})
+            old = self.covered(sf_dir) or Covered({}, None, None)
+            return dataclasses.replace(old, **fields)
+
+        _COVERED.build(self.path(sf_dir), fill)
+
+    def _read_parts(
+        self,
+        spark: SparkSession,
+        sf_dir: str,
+        parts: list[str],
+        schema: StructType | None = None,
+    ) -> DataFrame:
+        """The named source parts as stored; ``schema`` None infers it."""
+        ensure_confs(spark)
+        root = table_path(sf_dir, self.source)
+        files = [os.path.join(root, p) if p else root for p in parts]
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*files)
+
+    def _rows(self, raw: DataFrame) -> DataFrame:
+        """The source rows: ``events`` gets the loader's ts normalization."""
+        return _normalize_events_ts(raw) if self.source == "events" else raw
+
+    def _all_rows(self, spark: SparkSession, sf_dir: str, fp: Fingerprint) -> DataFrame:
+        return self._rows(self._read_parts(spark, sf_dir, sorted(_parts(fp))))
+
     def refresh(
         self, spark: SparkSession, sf_dir: str, force: list[str] | None = None
     ) -> list[str]:
-        """Materialize missing (plus ``force``-dirtied) partitions; returns
-        the partition keys actually rebuilt."""
-        src_keys = {str(r[0]) for r in self.keys(spark, sf_dir).collect()}
+        """Materialize the keys of the source's new parts that are not
+        materialized yet, plus the ``force``-dirtied ones; returns the
+        partition keys actually rebuilt and records how it ran in
+        ``last_refresh``."""
+        # recorded, so a memoized plan over the view rebuilds on an append
+        fp = note_read(sf_dir, self.source)
+        parts = _parts(fp)
+        old = self.covered(sf_dir)
+        full = (
+            bool(force)
+            or old is None
+            or not old.parts
+            or any(parts.get(n) != v for n, v in old.parts.items())
+        )
+        new = sorted(parts if full else parts.keys() - old.parts.keys())
+        src = None
+        src_keys: set[str] = set()
+        if new:
+            raw = self._read_parts(
+                spark, sf_dir, new, None if full else old.source_schema
+            )
+            src = self._rows(raw)
+            src_keys = {str(r[0]) for r in self.keys(src).collect()}
         todo = sorted((src_keys - self.materialized_keys(sf_dir)) | set(force or []))
-        return self.rebuild(spark, sf_dir, todo)
+        rebuilt = self.rebuild(spark, sf_dir, todo, src)
+        if new and os.path.isdir(self.path(sf_dir)):
+            self._record(
+                sf_dir, fp, parts=parts,
+                source_schema=raw.schema if full else old.source_schema,
+            )
+        self.last_refresh = Refresh(
+            "full" if full else "incremental", len(new), len(parts), rebuilt
+        )
+        return rebuilt
 
     def rebuild(
-        self, spark: SparkSession, sf_dir: str, keys: list[str]
+        self,
+        spark: SparkSession,
+        sf_dir: str,
+        keys: list[str],
+        src: DataFrame | None = None,
     ) -> list[str]:
-        """Rebuild exactly the given partition keys (no discovery scan)."""
+        """Rebuild exactly the given partition keys (no discovery scan)
+        from the source rows ``src``, by default the whole source."""
         if not keys:
             return []
-        df = self.build(spark, sf_dir, keys)
+        fp = note_read(sf_dir, self.source)
+        if src is None:
+            src = self._all_rows(spark, sf_dir, fp)
+        out = self.path(sf_dir)
+        fresh = not os.path.isdir(out)
+        df = self.build(src, keys)
         (
             df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(self.partition_col)
-            .parquet(self.path(sf_dir))
+            .parquet(out)
         )
+        # partition columns read back as strings (their directory form),
+        # after the data columns; a new directory covers no parts yet
+        view = StructType(
+            [StructField(f.name, f.dataType) for f in df.schema
+             if f.name != self.partition_col]
+            + [StructField(self.partition_col, StringType())]
+        )
+        self._record(sf_dir, fp, view_schema=view, **({"parts": {}} if fresh else {}))
         return keys
 
     def stream_refresh(
@@ -124,13 +290,13 @@ class MaterializedView:
     ):
         """Streaming incremental maintenance: each micro-batch's distinct
         partition keys become the dirty set, and ONLY those partitions are
-        rebuilt (from the batch source, with the key predicate pushed into
-        the scan) — no key-discovery scan at all; the stream IS the
-        change-capture. foreachBatch + checkpoint make it exactly-once at
-        partition granularity: a replayed batch re-marks the same keys
-        dirty and the dynamic-partition overwrite is idempotent. This is
-        the serving loop a 100 TB dashboard runs: append-only log →
-        dirty-day detection from the stream → partition-pruned rebuild.
+        rebuilt (from the whole source) — no key-discovery scan at all;
+        the stream IS the change-capture. foreachBatch + checkpoint make
+        it exactly-once at partition granularity: a replayed batch
+        re-marks the same keys dirty and the dynamic-partition overwrite
+        is idempotent. This is the serving loop a 100 TB dashboard runs:
+        append-only log → dirty-day detection from the stream → rebuild
+        of the dirty days.
 
         Returns the started StreamingQuery (caller awaits termination);
         ``rebuilt_log`` (if given) collects the per-batch rebuilt keys.
@@ -166,16 +332,21 @@ class MaterializedView:
         caller skipped refresh() (or a refresh failed mid-flight), and
         silently serving zero rows there would be a correctness bug —
         raise instead (round-10 ADVICE)."""
-        if not os.path.isdir(self.path(sf_dir)):
-            if self.keys(spark, sf_dir).limit(1).count() > 0:
+        out = self.path(sf_dir)
+        if not os.path.isdir(out):
+            src = self._all_rows(spark, sf_dir, note_read(sf_dir, self.source))
+            if self.keys(src).limit(1).count() > 0:
                 raise FileNotFoundError(
                     f"materialized view '{self.name}' has no materialization "
-                    f"at {self.path(sf_dir)} but its source has partition "
+                    f"at {out} but its source has partition "
                     "keys — call refresh() before read()"
                 )
-            df = self.build(spark, sf_dir, [])
+            df = self.build(src, [])
         else:
-            df = spark.read.parquet(self.path(sf_dir))
+            cov = self.covered(sf_dir)
+            schema = cov.view_schema if cov is not None else None
+            reader = spark.read if schema is None else spark.read.schema(schema)
+            df = reader.parquet(out)
         return df.withColumn(
             self.partition_col, F.col(self.partition_col).cast("string")
         )

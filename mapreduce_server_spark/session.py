@@ -51,4 +51,16 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
+    if master.startswith("local"):
+        # List partition directories on the driver, however many: above
+        # the default threshold of 32 paths Spark lists them with a job of
+        # one task per directory, which in one JVM only adds scheduling.
+        # Reading a 40-day materialized view (serving/matview.py) on a
+        # 4-vCPU host: 3 jobs, 45 tasks, 0.68-0.82 s at the default; 2
+        # jobs, 5 tasks, 0.26-0.28 s listing on the driver. The job left
+        # infers the schema, which the view's reader skips: 1 job, 4
+        # tasks, 0.14-0.23 s.
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)
+        )
     return builder.getOrCreate()

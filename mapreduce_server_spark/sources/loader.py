@@ -26,6 +26,7 @@ fixtures need on top of ``spark.read.parquet``:
 from __future__ import annotations
 
 import os
+import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -223,9 +224,24 @@ def load_table_fresh(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 #: (applicationId, sorted input files, parallelism) → scan partition
-#: count, for :func:`fan_out_scan`'s conditionality probe. Its builds
-#: read no fixture table, so its entries are always current.
+#: count, for :func:`fan_out_scan`'s conditionality probe. A build
+#: records the tables that own the files: an entry is served while they
+#: are unchanged, and dropped once one is deleted.
 _FANOUT_NPART = Memo("fanout")
+
+
+def _note_owners(files: tuple[str, ...]) -> None:
+    """Record the parquet table of each input-file URI: its
+    ``<name>.parquet`` directory, or the file itself."""
+    owners = set()
+    for u in files:
+        d, f = os.path.split(urllib.parse.unquote(urllib.parse.urlparse(u).path))
+        if d.endswith(".parquet"):
+            d, f = os.path.split(d)
+        if f.endswith(".parquet"):
+            owners.add((d, f[: -len(".parquet")]))
+    for d, name in owners:
+        note_read(d, name)
 
 
 def fan_out_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
@@ -267,7 +283,11 @@ def fan_out_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
     target = spark.sparkContext.defaultParallelism
     files = tuple(sorted(df.inputFiles()))
     if files:
-        n = _FANOUT_NPART((app_id(spark), files, target), lambda: df.rdd.getNumPartitions())
+        def probe() -> int:
+            _note_owners(files)
+            return df.rdd.getNumPartitions()
+
+        n = _FANOUT_NPART((app_id(spark), files, target), probe)
     else:
         n = df.rdd.getNumPartitions()
     if n >= target:

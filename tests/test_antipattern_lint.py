@@ -106,12 +106,12 @@ def test_topandas_sites_are_pinned():
 
 
 #: cross-engine recipes written once (ARCHITECTURE §4 rule 9), needle →
-#: its one home: the md5-integer hash and the hour grid's bounds.
+#: its one home: the md5-integer hash and the hourly sequence that every
+#: hour grid (series.hour_grid, series.hour_span) and hour-cell explode
+#: is built from.
 RECIPE_HOMES = {
     "F.conv(": "functions/hashing.py",
-    'F.sequence(F.col("h0"),F.col("h1"),F.expr("interval1hour"))': (
-        "functions/series.py"
-    ),
+    'F.expr("interval1hour")': "functions/series.py",
 }
 
 
