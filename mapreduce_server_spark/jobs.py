@@ -3,9 +3,10 @@
 The reference's user surface is "submit a job: a map function and a reduce
 function over an input path" [MR04 §2]. These builders are that surface
 re-expressed declaratively: each takes any DataFrame (not just the fixture
-tables) and returns the job's result plan. The registry operators are
-fixture-bound instantiations; these are what a migrating user calls on
-their own data.
+tables) and returns the job's result plan. Each is also the one
+implementation of the registry key(s) it names: the key binds the fixture
+table, its column names and constants, and projects the output, so a user
+job and the registered job run the same plan.
 
 Every builder is a pure plan-constructor — no execution, no collect —
 so Catalyst optimizes the composed pipeline as one query.
@@ -13,58 +14,48 @@ so Catalyst optimizes the composed pipeline as one query.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .functions import vector
+from .functions.tokens import shingles, tokens
 
-def word_count(df: DataFrame, text_col: str, delimiter: str = " ") -> DataFrame:
-    """The canonical MR job [MR04 §2.1]: (word, count) per distinct token."""
+
+def word_count(df: DataFrame, text_col: str) -> DataFrame:
+    """The canonical MR job [MR04 §2.1]: (word, cnt) per distinct token.
+    Bound by ``text_wordcount``."""
     return (
-        df.select(F.explode(F.split(F.col(text_col), delimiter)).alias("word"))
+        df.select(F.explode(tokens(text_col)).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
-def grep(df: DataFrame, pattern: str, *output_cols: str) -> DataFrame:
-    """Distributed grep [MR04 §2.3]: rows whose first string column (or
-    explicit output columns' source) matches the regex."""
-    text_col = output_cols[0] if output_cols else df.columns[0]
-    out = df.filter(F.col(text_col).rlike(pattern))
-    return out.select(*output_cols) if output_cols else out
+def grep(df: DataFrame, text_col: str, pattern: str) -> DataFrame:
+    """Distributed grep [MR04 §2.3]: the rows whose ``text_col`` matches
+    the regex. Bound by ``text_grep`` and ``filter_grep``."""
+    return df.filter(F.col(text_col).rlike(pattern))
 
 
 def inverted_index(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """word → sorted posting list [MR04 §2.3]."""
+    """(word, postings): each token's sorted distinct ``id_col`` values
+    [MR04 §2.3]. Bound by ``text_inverted_index``."""
     return (
-        df.select(id_col, F.explode(F.split(F.col(text_col), " ")).alias("word"))
+        df.select(id_col, F.explode(tokens(text_col)).alias("word"))
         .groupBy("word")
         .agg(F.sort_array(F.collect_set(id_col)).alias("postings"))
     )
 
 
-def total_sort(df: DataFrame, *order: Column) -> DataFrame:
-    """TeraSort [MR04 §5.3]: range-partitioned total order."""
-    return df.orderBy(*order)
-
-
 def top_k(df: DataFrame, k: int, *order: Column) -> DataFrame:
-    """Global top-k without a full sort (TakeOrderedAndProject)."""
+    """Global top-k without a full sort (TakeOrderedAndProject): each
+    partition keeps k rows, the driver merges. Bound by ``topk_global``."""
     return df.orderBy(*order).limit(k)
 
 
-def key_value_aggregate(
-    df: DataFrame,
-    key_cols: list[str],
-    aggs: list[Column],
-) -> DataFrame:
-    """The general MR job shape: shuffle by key, reduce with combiners —
-    ``map`` is whatever projection produced ``df``, ``reduce`` is ``aggs``."""
-    return df.groupBy(*key_cols).agg(*aggs)
-
-
 def histogram(df: DataFrame, value_col: str, bucket_width: float) -> DataFrame:
-    """Value histogram: floor-bucketing + count (bucket as the key)."""
+    """Value histogram: floor-bucketing + count (bucket as the key).
+    Bound by ``agg_histogram``."""
     bucket = F.floor(F.col(value_col) / bucket_width).cast("long").alias("bucket")
     return df.groupBy(bucket).agg(F.count(F.lit(1)).alias("n"))
 
@@ -73,15 +64,22 @@ def histogram(df: DataFrame, value_col: str, bucket_width: float) -> DataFrame:
 
 
 def exact_dedup(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame:
-    """Exact dedup with a deterministic survivor: min ``order_col`` row per
-    duplicate group (never dropDuplicates' arbitrary first-seen)."""
-    from pyspark.sql import Window
+    """Exact dedup with a deterministic survivor: per ``key_cols`` group,
+    the row of least ``order_col`` (unique), plus ``n_copies``, the
+    group's size. Bound by ``dedup_exact``.
 
-    w = Window.partitionBy(*key_cols).orderBy(order_col)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    The survivor is the min of a struct led by ``order_col`` inside an
+    ordinary aggregate, so the map side partial-aggregates and the
+    shuffle moves one row per distinct key per partition, never every
+    row (a window survivor would). ``dropDuplicates`` keeps an arbitrary
+    row. NULL keys form one group."""
+    rest = [c for c in df.columns if c != order_col and c not in key_cols]
+    return df.groupBy(*key_cols).agg(
+        F.min(F.struct(order_col, *rest)).alias("s"),
+        F.count(F.lit(1)).alias("n_copies"),
+    ).select(
+        *(c if c in key_cols else F.col(f"s.{c}").alias(c) for c in df.columns),
+        "n_copies",
     )
 
 
@@ -92,27 +90,30 @@ def near_dedup_jaccard(
     threshold: float = 0.5,
     k: int = 3,
 ) -> DataFrame:
-    """Near-duplicate pairs by exact k-word-shingle Jaccard ≥ threshold.
-    Candidates come from the shingle inverted-index self-join (bounded by
-    shared shingles, never a crossJoin); swap the block for minhash bands
-    past ~10⁷ docs. Returns (id_a < id_b, jaccard)."""
-    toks = F.split(F.col(text_col), " ")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (k - 1), F.lit(1)))
-    shingles = F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
-    )
-    sh = df.select(F.col(id_col).alias("id"), F.explode(shingles).alias("shingle"))
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col("id").alias("id_a"), "shingle")
-    b = sh.select(F.col("id").alias("id_b"), "shingle")
+    """Near-duplicate pairs by exact k-word-shingle Jaccard ≥ threshold:
+    (id_a < id_b, jaccard), unrounded. Candidates come from the shingle
+    inverted-index self-join (bounded by shared shingles, never a
+    crossJoin); swap the block for minhash bands past ~10⁷ docs. Bound
+    by ``dedup_ngram_jaccard``, ``dedup_components`` (the pair graph)
+    and ``dedup_levenshtein`` (the candidate block, threshold 0.3).
+
+    NULL texts are dropped first: a NULL text has no shingles. Without
+    the filter ``concat_ws`` turns a NULL text into the shingle '' and
+    every two NULL-text rows pair at Jaccard 1.0, while SQL's NULL
+    shingle joins nothing."""
+    d = df.where(F.col(text_col).isNotNull())
+    sh = d.select(id_col, F.explode(shingles(text_col, k)).alias("shingle"))
+    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
+    a = sh.select(F.col(id_col).alias("id_a"), "shingle")
+    b = sh.select(F.col(id_col).alias("id_b"), "shingle")
     common = (
         a.join(b, "shingle")
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("nb"))
+    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("na"))
+    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("nb"))
     jac = F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
     return (
         common.join(sa, "id_a")
@@ -123,38 +124,39 @@ def near_dedup_jaccard(
 
 
 def sessionize(
-    df: DataFrame, key_col: str, ts_col: str, gap: str = "30 minutes"
+    df: DataFrame, key_col: str, ts_col: str, tiebreak_col: str, gap_s: int
 ) -> DataFrame:
-    """Gap-based sessionization: adds a deterministic ``session_id``
-    (running count of gap-exceeding starts per key). ``gap`` is any Spark
-    interval string. The streaming twin is ``F.session_window``."""
-    from pyspark.sql import Window
-
-    prev = F.lag(ts_col).over(Window.partitionBy(key_col).orderBy(ts_col))
-    is_new = F.when(
-        prev.isNull() | (F.col(ts_col) - prev > F.expr(f"INTERVAL {gap}")), 1
-    ).otherwise(0)
-    run = (
-        Window.partitionBy(key_col)
-        .orderBy(ts_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    """Gap-based sessionization: adds ``session_id``, per ``key_col`` the
+    running count of rows that start a session — the first row, or one
+    more than ``gap_s`` seconds after the previous row. Rows are ordered
+    by ``ts_col`` (a timestamp) then the unique ``tiebreak_col``, so ids
+    are deterministic (unlike monotonically_increasing_id). Bound by
+    ``stream_session``; the streaming twin is ``F.session_window``."""
+    order = Window.partitionBy(key_col).orderBy(ts_col, tiebreak_col)
+    gap_us = F.unix_micros(ts_col) - F.unix_micros(F.lag(ts_col).over(order))
+    starts = df.withColumn(
+        "__new_session",
+        F.when(gap_us.isNull() | (gap_us > gap_s * 1_000_000), 1).otherwise(0),
     )
-    return df.withColumn("session_id", F.sum(is_new).over(run))
+    run = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return starts.withColumn(
+        "session_id", F.sum("__new_session").over(run)
+    ).drop("__new_session")
 
 
 def knn_topk(
     df: DataFrame, id_col: str, vec_col: str, query: list[float], k: int = 10
 ) -> DataFrame:
-    """Exact top-k by cosine against one query vector: the vector ships as
-    a literal (broadcast), the scan is shuffle-free, and the top-k is
-    TakeOrderedAndProject — linear in corpus size at any scale.
-    ``vec_col`` is column SQL text; ``query`` must be finite."""
-    from .functions.vector import cosine_sql
-
-    sim = F.expr(cosine_sql(vec_col, query))
+    """Exact top-k by cosine against one query vector: (``id_col``,
+    cos_sim rounded to 6 dp), ordered by cos_sim then id. The vector
+    ships as a literal (broadcast), the scan is shuffle-free, and the
+    top-k is TakeOrderedAndProject — linear in corpus size at any scale.
+    ``vec_col`` is column SQL text; ``query`` must be finite. Bound by
+    ``knn_bruteforce``."""
+    sim = F.expr(vector.cosine_sql(vec_col, query))
     return (
-        df.select(F.col(id_col).alias("id"), sim.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("id"))
+        df.select(id_col, F.round(sim, 6).alias("cos_sim"))
+        .orderBy(F.desc("cos_sim"), F.asc(id_col))
         .limit(k)
     )
 
@@ -163,9 +165,8 @@ def forward_fill(
     df: DataFrame, key_col: str, order_col: str, value_cols: list[str]
 ) -> DataFrame:
     """Per-key forward fill: each null carries the last non-null value
-    forward in ``order_col`` order (one window, no self-join)."""
-    from pyspark.sql import Window
-
+    forward in ``order_col`` order (one window, no self-join). Bound by
+    ``ts_fill_forward`` as the fill over its hour grid."""
     w = (
         Window.partitionBy(key_col)
         .orderBy(order_col)

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import jobs
 from ..functions.hashing import md5_int
 from ..functions.numeric import davg, dsum
 from ..registry import query
@@ -612,12 +613,10 @@ GROUP BY 1
 """,
 )
 def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Value histogram by floor-bucketing (the jobs.histogram builder
-    registered over orders) — the bucket key is the group key, so the
-    shuffle carries |buckets| rows per partition."""
-    from ..jobs import histogram
-
-    return histogram(Tables(spark, sf_dir).orders, "o_totalprice", 50000.0)
+    """Value histogram by floor-bucketing: ``jobs.histogram`` over
+    orders' o_totalprice in 50000-wide buckets — the bucket key is the
+    group key, so the shuffle carries |buckets| rows per partition."""
+    return jobs.histogram(Tables(spark, sf_dir).orders, "o_totalprice", 50000.0)
 
 
 @query(

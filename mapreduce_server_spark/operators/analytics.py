@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import jobs
 from ..functions.pairs import skew_safe_pairs
 from ..functions.series import hour_span, hourly_counts
 from ..registry import query
@@ -398,7 +399,8 @@ def ts_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     last observed hourly sum forward (is_filled marks them). The grid is
     generated with `sequence()` per user (one row per user explodes to
     its span — never a global calendar crossJoin), the fill is
-    `last(ignorenulls)` over rows-unbounded-preceding, and hourly sums
+    ``jobs.forward_fill`` over the grid (`last(ignorenulls)` over
+    rows-unbounded-preceding), and hourly sums
     are exact decimal folds (fold-order-free). One shuffle for the
     hourly agg; grid explode and left join stay on the same user_id
     partitioning at scale. This is the batch form of what a streaming
@@ -418,16 +420,11 @@ def ts_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
         (grid.user_id == hourly.user_id) & (grid.g == hourly.h),
         "left",
     ).select(grid.user_id, "g", "n", "sv")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("g")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return joined.select(
+    return jobs.forward_fill(joined, "user_id", "g", ["sv"]).select(
         "user_id",
         F.unix_seconds("g").alias("hour_s"),
         F.coalesce("n", F.lit(0)).alias("n_events"),
-        F.last("sv", ignorenulls=True).over(w).alias("sum_filled"),
+        F.col("sv").alias("sum_filled"),
         F.col("n").isNull().alias("is_filled"),
     )
 

@@ -695,7 +695,7 @@ def sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     point at 100 TB — feature space is fixed at B buckets regardless
     of vocabulary, exactly as in the paper."""
     from ..functions.vector import fsum
-    from .text import tokens
+    from ..functions.tokens import tokens
 
     # round-13: fan out the single-row-group scan before the bigram
     # hashing pass ONLY (guide §2.5; per-(doc,bucket) counts and an

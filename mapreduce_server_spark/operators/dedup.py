@@ -1,7 +1,7 @@
 """Deduplication operators (SURVEY.md §2 cat. J, north star).
 
 Tiers, in ascending fuzziness and scale-cost:
-- ``dedup_exact``        — window survivor over the raw text key;
+- ``dedup_exact``        — struct-min survivor over the raw text key;
 - ``dedup_exact_hash``   — hash-groupBy: shuffle a 16-byte MD5 instead of
   the document body (the 100 TB form of exact dedup);
 - ``dedup_ngram_jaccard``— exact shingle-set Jaccard pairs (quadratic in
@@ -12,7 +12,7 @@ Tiers, in ascending fuzziness and scale-cost:
 - ``dedup_simhash``      — 32-bit SimHash fingerprint per document.
 - ``dedup_embedding``    — embedding-cosine near-dup pairs.
 
-Determinism: survivors are always min-doc_id (window or groupBy-min, never
+Determinism: survivors are always min-doc_id (groupBy-min, never
 ``dropDuplicates``' arbitrary first-seen row); all hashing is seeded
 (xxhash64 with literal salts / MD5) — zero RNG anywhere (the driver
 value-hashes results).
@@ -23,31 +23,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import jobs
 from ..functions.hashing import md5_int
+from ..functions.tokens import shingles
 from ..functions.vector import DUCK_DOT, DUCK_NORM, cosine_sql
 from ..registry import REGISTRY, query
-from ..sources.loader import Tables
+from ..sources.loader import Tables, fan_out_scan
 from ._memo import session_cache
 
 N_HASHES = 16  # minhash permutations
 N_BANDS = 4  # → 4 rows per band; P(candidate | J=0.9) ≈ 1-(1-0.9^4)^4 ≈ 0.986
 
 
-def _shingles(text_col: str = "text", k: int = 3):
-    """k-word shingles as strings (space-joined), deterministic order."""
-    toks = F.split(F.col(text_col), " ")
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
-    )
-
-
 def _nonnull_docs(d: DataFrame) -> DataFrame:
     """The NON-NULL document stream the shingle/minhash tier consumes
-    (round-11 NULL-text axis). Applied exactly once per operator, at
-    the top, so every use of the frame shares one filtered scan
-    subtree (ReuseExchange needs canonical-equal subtrees).
+    (round-11 NULL-text axis: a NULL text has no shingles, but
+    ``shingles`` turns it into ''; ``jobs.near_dedup_jaccard`` has the
+    whole note). Applied exactly once per operator, at the top, so every
+    use of the frame shares one filtered scan subtree (ReuseExchange
+    and cached-frame substitution need canonical-equal subtrees). The
+    filter sits above the fan-out, so this is the very stream
+    ``jobs.near_dedup_jaccard`` derives from ``fan_out_scan(d)``; the
+    optimizer pushes it below the repartition either way.
 
     Round-13 optimization (guide §2.5 unsplittable input): the stream
     is fanned out across the session's cores before the shingle
@@ -62,9 +59,7 @@ def _nonnull_docs(d: DataFrame) -> DataFrame:
     OPTIMIZATION_r13.md. Living INSIDE the canonical helper keeps the
     repartitioned subtree canonical-equal across each operator's
     branches, preserving scan/exchange reuse."""
-    from ..sources.loader import fan_out_scan
-
-    return fan_out_scan(d.where(F.col("text").isNotNull()), d.sparkSession)
+    return fan_out_scan(d, d.sparkSession).where(F.col("text").isNotNull())
 
 
 @query(
@@ -81,13 +76,13 @@ WHERE rn = 1
 """,
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup, deterministic min-doc_id survivor. Emits the
-    surviving row + its duplicate count.
+    """Exact dedup, deterministic min-doc_id survivor: ``jobs.exact_dedup``
+    keyed on text over (doc_id, text, lang, n_chars), emitting the
+    surviving row without its text + its duplicate count.
 
     Round-13 optimization (guide §2.3 "aggregate before you shuffle"):
-    the survivor is a lexicographic STRUCT-min inside an ordinary
-    aggregate keyed on text — doc_id leads the struct and is unique, so
-    min(struct) IS the min-doc_id row (the ts_ohlc discipline). The
+    the survivor is the builder's STRUCT-min aggregate (doc_id leads the
+    struct and is unique, so min(struct) IS the min-doc_id row). The
     previous window form (row_number + count over PARTITION BY text)
     shuffled EVERY document row and sorted each partition; the
     aggregate form partial-aggregates map-side, so the Exchange moves
@@ -96,24 +91,10 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplication factor, and the two window passes disappear
     (plans/r13/dedup_exact_{before,after}.txt: Exchange of all rows +
     Sort + Window×2 → partial SortAggregate + Exchange of survivors +
-    final SortAggregate). ``dropDuplicates`` would keep an arbitrary
-    row and flake the hash gate (SURVEY §2.J); min(struct) keeps it
-    deterministic. NULL texts still form exactly one group (groupBy
-    and PARTITION BY agree on NULL equality)."""
-    d = Tables(spark, sf_dir).documents
-    return (
-        d.groupBy("text")
-        .agg(
-            F.min(F.struct("doc_id", "lang", "n_chars")).alias("s"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-        .select(
-            F.col("s.doc_id").alias("doc_id"),
-            F.col("s.lang").alias("lang"),
-            F.col("s.n_chars").alias("n_chars"),
-            "n_copies",
-        )
-    )
+    final SortAggregate). NULL texts still form exactly one group
+    (groupBy and PARTITION BY agree on NULL equality)."""
+    d = Tables(spark, sf_dir).documents.select("doc_id", "text", "lang", "n_chars")
+    return jobs.exact_dedup(d, ["text"], "doc_id").drop("text")
 
 
 @query(
@@ -167,49 +148,18 @@ WHERE n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common) >= 0.5
 """,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 3-gram Jaccard near-dup pairs (threshold 0.5): shingle
-    inverted-index self-join → common counts → Jaccard. Candidates are
-    bounded by shared shingles (an inverted-index join, not a crossJoin);
-    at 100 TB prefilter rare shingles or switch to dedup_minhash.
-    NULL contract: non-null document stream (_jaccard_pairs note),
-    filtered once here."""
-    d = _nonnull_docs(Tables(spark, sf_dir).documents)
-    return _jaccard_pairs(d).select(
-        "doc_a", "doc_b", F.round(F.col("jac"), 6).alias("jaccard")
-    )
-
-
-def _jaccard_pairs(d: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """(doc_a < doc_b, jac) pairs with exact 3-gram Jaccard ≥ threshold.
-
-    NULL contract (round-11 NULL-text axis): the dedup tier consumes
-    the NON-NULL document stream — a NULL text has no shingles.
-    Without the filter, Spark's concat_ws-built shingle collapses NULL
-    to '' and every NULL-text doc becomes a spurious near-dup of every
-    other, while the oracle's NULL shingle joins nothing (SQL
-    semantics). Callers pass _nonnull_docs(d) — the filter is applied
-    exactly ONCE at each operator's top (a second .where here would
-    de-canonicalize the scan subtree against sibling uses of the same
-    frame and break ReuseExchange; the scan-multiplicity lint caught
-    it). Mirrored by WHERE text IS NOT NULL in the oracles."""
-    sh = d.select("doc_id", F.explode(_shingles()).alias("shingle"))
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    common = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
-    jac = F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jac >= threshold)
-        .select("doc_a", "doc_b", jac.alias("jac"))
+    """Exact 3-gram Jaccard near-dup pairs (threshold 0.5):
+    ``jobs.near_dedup_jaccard`` over the documents (shingle
+    inverted-index self-join → common counts → Jaccard), rounded to 6
+    dp. Candidates are bounded by shared shingles (an inverted-index
+    join, not a crossJoin); at 100 TB prefilter rare shingles or switch
+    to dedup_minhash. NULL contract: the builder's (NULL texts pair with
+    nothing), mirrored by WHERE text IS NOT NULL in the oracle."""
+    d = fan_out_scan(Tables(spark, sf_dir).documents, spark)
+    return jobs.near_dedup_jaccard(d, "doc_id", "text").select(
+        F.col("id_a").alias("doc_a"),
+        F.col("id_b").alias("doc_b"),
+        F.round("jaccard", 6).alias("jaccard"),
     )
 
 
@@ -223,9 +173,8 @@ def _mh_hash(s: int, shingle: F.Column) -> F.Column:
 def minhash_signatures(d: DataFrame) -> DataFrame:
     """doc_id → N_HASHES minhash values (md5-derived salts, no RNG).
     Callers pass _nonnull_docs(d) — one filter application per
-    operator (the _jaccard_pairs NULL note; mirrored in
-    _MH_BANDS_CTE)."""
-    sh = d.select("doc_id", F.explode(_shingles()).alias("shingle"))
+    operator (the _nonnull_docs note; mirrored in _MH_BANDS_CTE)."""
+    sh = d.select("doc_id", F.explode(shingles()).alias("shingle"))
     sigs = [
         F.min(_mh_hash(s, F.col("shingle"))).alias(f"sig{s}")
         for s in range(N_HASHES)
@@ -321,7 +270,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_dedup.py asserts the 8 planted sf0.1 duplicate pairs are
     found with jaccard == 1.0.
 
-    The NON-NULL document filter (the _jaccard_pairs NULL note) is
+    The NON-NULL document filter (the _nonnull_docs note) is
     applied HERE, once, so the banding and the verify stage share one
     filtered scan subtree — filtering only inside minhash_signatures
     would leave the verify path on an unfiltered scan and break
@@ -338,7 +287,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    sh = d.select("doc_id", F.explode(_shingles()).alias("shingle"))
+    sh = d.select("doc_id", F.explode(shingles()).alias("shingle"))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
@@ -545,15 +494,17 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     supernodes the O(log n)-round large-star/small-star alternation
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC'14) is the drop-in replacement — same edge/label frames, the
-    loop body swaps. Edges are localCheckpoint-ed once (computed by the
-    shingle inverted-index join, reused every round with lineage cut);
+    loop body swaps. Edges are localCheckpoint-ed once (the
+    ``jobs.near_dedup_jaccard`` pairs, reused every round with lineage cut);
     labels are checkpointed per round so round k's plan does not nest
     round k-1's. Oracle: DuckDB recursive CTE computing min reachable id.
     """
     d = Tables(spark, sf_dir).documents
-    # edges come from the non-null stream; the walk seeds from ALL docs
+    # the builder pairs non-null texts only; the walk seeds from ALL docs
     # (NULL-text docs are singleton components on both engines)
-    pairs = _jaccard_pairs(_nonnull_docs(d)).select("doc_a", "doc_b")
+    pairs = jobs.near_dedup_jaccard(fan_out_scan(d, spark), "doc_id", "text").select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
+    )
     edges = (
         pairs.union(
             pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
@@ -634,7 +585,8 @@ WHERE levenshtein(ta.text, tb.text) * 5 <= greatest(length(ta.text), length(tb.t
 )
 def dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance near-dup pairs: candidates from the shingle inverted
-    index (Jaccard ≥ 0.3 — a cheap, recall-oriented block), confirmed by
+    index (``jobs.near_dedup_jaccard`` at Jaccard ≥ 0.3 — a cheap,
+    recall-oriented block), confirmed by
     full Levenshtein with a relative cutoff (dist ≤ 20% of the longer
     text, expressed as integer math `5·dist ≤ max_len` so both engines
     compare exact ints — no float threshold to straddle). Levenshtein is
@@ -651,8 +603,11 @@ def dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     (every committed fixture) while non-ASCII parity is pinned by the
     provable relationship char_dist ≤ byte_dist in
     tests/test_empty_fixture.py::test_unicode_levenshtein_relationship."""
-    d = _nonnull_docs(Tables(spark, sf_dir).documents)
-    cand = _jaccard_pairs(d, threshold=0.3).select("doc_a", "doc_b")
+    docs = Tables(spark, sf_dir).documents
+    cand = jobs.near_dedup_jaccard(
+        fan_out_scan(docs, spark), "doc_id", "text", threshold=0.3
+    ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
+    d = _nonnull_docs(docs)  # the builder's own stream: one scan subtree
     ta = d.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"))
     tb = d.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b"))
     # Round-13 optimization (guide §1.2 "per-task work"): the verify is
@@ -712,8 +667,8 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache()d — measured 1.9× at sf0.1 (3.5s → 1.9s), the
     triangles_from_edges precedent.
 
-    NULL contract: non-null document stream (the _jaccard_pairs NULL
-    note); shares dedup_ngram_jaccard's filtered oracle verbatim."""
+    NULL contract: non-null document stream (the _nonnull_docs note);
+    shares dedup_ngram_jaccard's filtered oracle verbatim."""
     t = 0.5
     d = _nonnull_docs(Tables(spark, sf_dir).documents)
     # both caches session-memoized (round-10 ADVICE: no per-call leak)
@@ -721,7 +676,7 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "prefix_shingles",
-        lambda: d.select("doc_id", F.explode(_shingles()).alias("shingle")),
+        lambda: d.select("doc_id", F.explode(shingles()).alias("shingle")),
     )
     df_counts = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     ranked = (
@@ -761,7 +716,7 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     sets = d.select(
-        "doc_id", F.array_sort(_shingles()).alias("sh_set")
+        "doc_id", F.array_sort(shingles()).alias("sh_set")
     )
     sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("set_a"))
     sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("set_b"))

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import jobs
 from ..registry import query
 from ..sources.loader import Tables
 
@@ -110,23 +111,13 @@ GROUP BY user_id, session_id
 """,
 )
 def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization with a 30-minute inactivity gap — the gap-flag →
-    running-sum session-id form (deterministic ids, unlike
-    monotonically_increasing_id; SURVEY §7 M5). Streaming twin:
-    ``F.session_window(ts, '30 minutes')``."""
+    """Sessionization with a 30-minute inactivity gap: ``jobs.sessionize``
+    per user in (ts, event_id) order — the gap-flag → running-sum
+    session-id form (deterministic ids, unlike
+    monotonically_increasing_id; SURVEY §7 M5) — then one row per
+    session. Streaming twin: ``F.session_window(ts, '30 minutes')``."""
     ev = Tables(spark, sf_dir).events
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-    flagged = ev.withColumn(
-        "new_session",
-        F.when(gap_us.isNull() | (gap_us > 30 * 60 * 1_000_000), 1).otherwise(0),
-    )
-    run = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    sessions = flagged.withColumn("session_id", F.sum("new_session").over(run))
+    sessions = jobs.sessionize(ev, "user_id", "ts", "event_id", 30 * 60)
     return sessions.groupBy("user_id", "session_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.unix_seconds(F.min("ts")).alias("start_s"),

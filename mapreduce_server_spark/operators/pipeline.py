@@ -321,8 +321,8 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct shingles once (same inverted-index shape as
     dedup_ngram_jaccard, but one side is small by construction).
     NULL contract: non-null document stream on BOTH sides (the
-    _jaccard_pairs NULL note), mirrored in the oracle."""
-    from .dedup import _shingles
+    ``jobs.near_dedup_jaccard`` NULL note), mirrored in the oracle."""
+    from ..functions.tokens import shingles
 
     # round-13: fan out the single-row-group scan before the 8-gram
     # explode (guide §2.5; hit counts only — partitioning-invariant)
@@ -332,11 +332,11 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bench = (
         d.filter(F.col("doc_id") < 10)
-        .select(F.explode(_shingles(k=8)).alias("sh"))
+        .select(F.explode(shingles(k=8)).alias("sh"))
         .distinct()
     )
     train = d.filter(F.col("doc_id") >= 10).select(
-        "doc_id", F.explode(_shingles(k=8)).alias("sh")
+        "doc_id", F.explode(shingles(k=8)).alias("sh")
     )
     return (
         train.join(F.broadcast(bench), "sh")

@@ -39,10 +39,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_int
+from ..functions.tokens import shingles, tokens
 from ..registry import query
 from ..sources.loader import Tables
 from ._memo import session_cache
-from .text import tokens
 
 #: heavy-hitter parameter: report tokens with freq > n/K (strict, exact
 #: integer compare n_word·K > n — no float threshold).
@@ -896,16 +896,10 @@ def quality_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical double division (denominator ≥ 1 by the greatest()
     window guard, which also keeps sub-8-token docs well-defined:
     their single clamped window IS the doc). NULL contract: non-null
-    document stream on both splits (the _jaccard_pairs NULL note),
-    mirrored by the oracle's docs CTE."""
+    document stream on both splits (the ``jobs.near_dedup_jaccard`` NULL
+    note), mirrored by the oracle's docs CTE."""
     d = Tables(spark, sf_dir).documents.where(F.col("text").isNotNull())
-    toks = F.split(F.col("text"), " ")
-    idx = F.sequence(
-        F.lit(1), F.greatest(F.size(toks) - (DECON_N - 1), F.lit(1))
-    )
-    ngrams = F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, DECON_N)))
-    )
+    ngrams = shingles(k=DECON_N)
     # ONE corpus tokenization feeds eval + train + sizes;
     # session-memoized (round-10 ADVICE: no per-invocation leak)
     ng = session_cache(

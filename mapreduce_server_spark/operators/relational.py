@@ -28,6 +28,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import jobs
 from ..functions.numeric import dsum
 from ..functions.series import hours
 from ..registry import query
@@ -88,11 +89,10 @@ WHERE regexp_matches(text, 'spark (batch|stream)')
 """,
 )
 def filter_grep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed grep [MR04 §2.3]: regex filter, no reduce."""
+    """Distributed grep [MR04 §2.3]: ``jobs.grep`` on the documents'
+    text, a regex filter with no reduce."""
     d = Tables(spark, sf_dir).documents
-    return d.filter(F.col("text").rlike("spark (batch|stream)")).select(
-        "doc_id", "lang", "source"
-    )
+    return jobs.grep(d, "text", "spark (batch|stream)").select("doc_id", "lang", "source")
 
 
 @query(

@@ -21,6 +21,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import jobs
 from ..cache import Memo, app_id, note_read
 from ..functions.hashing import md5_int
 from ..functions.pairs import skew_safe_pairs
@@ -89,8 +90,9 @@ LIMIT 10
 """,
 )
 def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-10 by cosine vs one query vector: the vector is fetched
-    once driver-side and inlined as a literal (broadcast to all tasks);
+    """Exact top-10 by cosine vs one query vector: ``jobs.knn_topk``
+    over the corpus minus the query row. The vector is fetched once
+    driver-side and inlined as a literal (broadcast to all tasks);
     scan + TakeOrderedAndProject, no shuffle of the corpus."""
     e = Tables(spark, sf_dir).embeddings
     qv = _query_vector(spark, sf_dir)
@@ -103,13 +105,8 @@ def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~130-term unrolled dot+norm that fixed cost exceeds the per-row
     # win on a 2k-row scan (A/B med 0.14 s fold vs 0.23+ s unrolled).
     # The query's norm is one literal (vector.norm_sql).
-    sim = F.expr(cosine_sql("embedding", qv))
-    return (
-        e.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .select("vec_id", F.round(sim, 6).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(10)
-    )
+    corpus = e.filter(F.col("vec_id") != QUERY_VEC_ID)
+    return jobs.knn_topk(corpus, "vec_id", "embedding", qv, k=10)
 
 
 @query(

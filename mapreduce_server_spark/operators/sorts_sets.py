@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import jobs
 from ..registry import query
 from ..sources.loader import Tables
 
@@ -63,13 +64,13 @@ LIMIT 20
 )
 def topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-k: per-mapper heap + single merge [HADOOP] ≙ Spark's
-    TakeOrderedAndProject — each partition keeps k rows, driver merges;
-    no shuffle of the full table at any scale."""
+    TakeOrderedAndProject (``jobs.top_k``) — each partition keeps k rows,
+    driver merges; no shuffle of the full table at any scale."""
     li = Tables(spark, sf_dir).lineitem
-    return (
-        li.select("l_orderkey", "l_linenumber", "l_extendedprice")
-        .orderBy(F.desc("l_extendedprice"), F.asc("l_orderkey"), F.asc("l_linenumber"))
-        .limit(20)
+    return jobs.top_k(
+        li.select("l_orderkey", "l_linenumber", "l_extendedprice"),
+        20,
+        F.desc("l_extendedprice"), F.asc("l_orderkey"), F.asc("l_linenumber"),
     )
 
 

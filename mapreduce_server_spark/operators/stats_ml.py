@@ -1027,7 +1027,7 @@ def text_hash_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the shuffle key (doc_id, bucket) is as fine-grained as the
     data, so no hot keys."""
     d = Tables(spark, sf_dir).documents
-    from .text import tokens
+    from ..functions.tokens import tokens
 
     return (
         d.select("doc_id", F.explode(tokens()).alias("w"))
@@ -3082,7 +3082,7 @@ def ml_dtree_multifeature(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly how XGBoost/LightGBM shard split-finding — (feature, bin)
     is the aggregation key, so feature parallelism IS partition
     parallelism."""
-    from ..operators.text import tokens
+    from ..functions.tokens import tokens
 
     # NULL contract: each feature arm keeps only rows where ITS feature
     # is non-null (ml_regression_stump rule), mirrored per-arm in the

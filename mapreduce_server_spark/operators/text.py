@@ -7,8 +7,8 @@ dataflow with the combiner supplied automatically by HashAggregateExec.
 
 Tokenization contract: the fixture corpus is strictly single-space
 separated (FIXTURES.md), and the oracle must split identically, so every
-operator tokenizes with a literal single-space split — never ``\\s+`` —
-to avoid Spark↔DuckDB regex-class drift.
+operator tokenizes with ``functions.tokens`` — a literal single-space
+split, never ``\\s+`` — to avoid Spark↔DuckDB regex-class drift.
 
 Scale notes: explode multiplies rows ~100× before the shuffle, but the
 partial aggregate collapses each partition back to |vocab| rows, so the
@@ -22,13 +22,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import jobs
+from ..functions.tokens import tokens
 from ..registry import query
 from ..sources.loader import Tables
-
-
-def tokens(col: str = "text") -> F.Column:
-    """The engine's single tokenizer: literal single-space split."""
-    return F.split(F.col(col), " ")
 
 
 @query(
@@ -42,13 +39,9 @@ GROUP BY word
 """,
 )
 def text_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WordCount [MR04 §2.1]: split → explode → count per word."""
-    d = Tables(spark, sf_dir).documents
-    return (
-        d.select(F.explode(tokens()).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    """WordCount [MR04 §2.1]: ``jobs.word_count`` over the documents'
+    text (split → explode → count per word)."""
+    return jobs.word_count(Tables(spark, sf_dir).documents, "text")
 
 
 @query(
@@ -60,12 +53,11 @@ WHERE regexp_matches(text, '(merge|sort) (join|window)')
 """,
 )
 def text_grep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed grep over documents [MR04 §2.3] (same operator as
-    filter_grep; registered per the reference's own example-pair)."""
+    """Distributed grep over documents [MR04 §2.3]: ``jobs.grep`` on the
+    text, projected to (doc_id, lang) (the same job as filter_grep;
+    registered per the reference's own example-pair)."""
     d = Tables(spark, sf_dir).documents
-    return d.filter(F.col("text").rlike("(merge|sort) (join|window)")).select(
-        "doc_id", "lang"
-    )
+    return jobs.grep(d, "text", "(merge|sort) (join|window)").select("doc_id", "lang")
 
 
 @query(
@@ -80,15 +72,15 @@ GROUP BY word
 """,
 )
 def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inverted index [MR04 §2.3]: word → sorted posting list of doc_ids."""
-    d = Tables(spark, sf_dir).documents
-    return (
-        d.select("doc_id", F.explode(tokens()).alias("word"))
-        .groupBy("word")
-        .agg(
-            F.array_join(F.transform(F.sort_array(F.collect_set("doc_id")), lambda x: x.cast("string")), ",").alias("doc_ids"),
-            F.countDistinct("doc_id").alias("n_docs"),
-        )
+    """Inverted index [MR04 §2.3]: ``jobs.inverted_index`` over the
+    documents, each sorted posting list rendered as comma-joined doc_ids
+    with its length as n_docs (the list is distinct, so no second
+    distinct aggregate)."""
+    ii = jobs.inverted_index(Tables(spark, sf_dir).documents, "doc_id", "text")
+    return ii.select(
+        "word",
+        F.array_join(F.transform("postings", lambda x: x.cast("string")), ",").alias("doc_ids"),
+        F.size("postings").cast("long").alias("n_docs"),
     )
 
 

@@ -137,14 +137,17 @@ class MaterializedView:
         #: how the last :meth:`refresh` on this object ran
         self.last_refresh: Refresh | None = None
 
-    def path(self, sf_dir: str) -> str:
-        # pid-tagged: the MV is process-private serving state (like the
-        # IVF index) — concurrent applications each refresh their own
-        # copy rather than racing one directory; atexit reclaims it.
+    def _table(self, sf_dir: str) -> tuple[str, str]:
+        """The view's directory as a ``cache`` table ``(dir, name)``, so
+        a read can record it like a fixture table. pid-tagged: the MV is
+        process-private serving state (like the IVF index) — concurrent
+        applications each refresh their own copy rather than racing one
+        directory; atexit reclaims it."""
         tag = os.path.basename(os.path.normpath(sf_dir))
-        return owned(
-            os.path.join(SCRATCH, "matviews", f"{self.name}_{tag}_p{os.getpid()}")
-        )
+        return os.path.join(SCRATCH, "matviews"), f"{self.name}_{tag}_p{os.getpid()}"
+
+    def path(self, sf_dir: str) -> str:
+        return owned(table_path(*self._table(sf_dir)))
 
     #: directory name Spark writes for a NULL partition value — never a
     #: source key string, so it must not enter the set difference
@@ -331,7 +334,12 @@ class MaterializedView:
         source: a missing directory when the source HAS keys means the
         caller skipped refresh() (or a refresh failed mid-flight), and
         silently serving zero rows there would be a correctness bug —
-        raise instead (round-10 ADVICE)."""
+        raise instead (round-10 ADVICE).
+
+        The view directory is recorded as a read, so a memoized plan over
+        the returned frame goes stale once the directory is rewritten or
+        deleted, instead of serving a scan of removed files."""
+        note_read(*self._table(sf_dir))
         out = self.path(sf_dir)
         if not os.path.isdir(out):
             src = self._all_rows(spark, sf_dir, note_read(sf_dir, self.source))

@@ -122,6 +122,25 @@ def test_recipes_are_spelled_once():
     assert found == {n: {home: 1} for n, home in RECIPE_HOMES.items()}
 
 
+def test_every_job_builder_has_an_operator_caller():
+    """Each public ``jobs.py`` builder is the one implementation of a
+    registered key: an operator module calls it as ``jobs.<name>(``. A
+    builder no operator calls is an unbound twin that drifts unseen."""
+    import ast
+
+    with open(os.path.join(PKG, "jobs.py"), encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    builders = [
+        n.name for n in tree.body
+        if isinstance(n, ast.FunctionDef) and not n.name.startswith("_")
+    ]
+    orphans = [
+        b for b in builders
+        if not any(p.startswith("operators" + os.sep) for p in _sites(f"jobs.{b}("))
+    ]
+    assert builders and not orphans, orphans
+
+
 #: audited `.cache()` sites, path → CODE occurrence count (tokenize-
 #: stripped — round-13 ADVICE: the old raw-substring pin conflated
 #: audited call sites with prose mentions). Every

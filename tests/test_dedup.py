@@ -99,7 +99,7 @@ def test_jaccard_prefix_equals_full_join_and_prunes(spark):
     index (≤ ~(1−t)+1/n of postings at t=0.5)."""
     from pyspark.sql import functions as F
 
-    from mapreduce_server_spark.operators.dedup import _shingles
+    from mapreduce_server_spark.functions.tokens import shingles
     from mapreduce_server_spark.sources.loader import Tables
 
     full = sorted(
@@ -111,9 +111,9 @@ def test_jaccard_prefix_equals_full_join_and_prunes(spark):
     assert pref == full and len(pref) > 0
 
     d = Tables(spark, SF01).documents
-    n_postings = d.select(F.explode(_shingles()).alias("s")).count()
+    n_postings = d.select(F.explode(shingles()).alias("s")).count()
     n_docs = d.count()
-    sh = d.select("doc_id", F.explode(_shingles()).alias("shingle"))
+    sh = d.select("doc_id", F.explode(shingles()).alias("shingle"))
     dfc = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     from pyspark.sql import Window
 

@@ -1,5 +1,6 @@
 """Generic job builders over non-fixture DataFrames (the migrating-user
-surface: same jobs, arbitrary input)."""
+surface: same jobs, arbitrary input; the registry keys bind the same
+builders to the fixture tables)."""
 
 from __future__ import annotations
 
@@ -20,8 +21,17 @@ def test_word_count(spark):
 
 
 def test_grep(spark):
-    got = jobs.grep(_corpus(spark), "a b", "body").collect()
+    got = jobs.grep(_corpus(spark), "body", "a b").collect()
     assert [r.body for r in got] == ["a b a"]
+
+
+def test_grep_matches_a_column_it_does_not_return(spark):
+    docs = spark.createDataFrame(
+        [(1, "en", "sort join wins"), (2, "de", "hash join")],
+        "doc_id long, lang string, text string",
+    )
+    got = jobs.grep(docs, "text", "(merge|sort) (join|window)").select("doc_id", "lang")
+    assert [tuple(r) for r in got.collect()] == [(1, "en")]
 
 
 def test_inverted_index(spark):
@@ -29,27 +39,16 @@ def test_inverted_index(spark):
     assert got == {"a": [1, 3], "b": [1, 2], "c": [2, 3]}
 
 
-def test_top_k_and_sort(spark):
+def test_top_k(spark):
     df = spark.createDataFrame([(i, i * 7 % 5) for i in range(20)], "i long, v long")
     top = jobs.top_k(df, 3, F.desc("v"), F.asc("i")).collect()
     assert [(r.i, r.v) for r in top] == sorted(
         [(i, i * 7 % 5) for i in range(20)], key=lambda t: (-t[1], t[0])
     )[:3]
-    full = jobs.total_sort(df, F.asc("v"), F.asc("i")).collect()
-    assert [(r.i, r.v) for r in full] == sorted(
-        [(i, i * 7 % 5) for i in range(20)], key=lambda t: (t[1], t[0])
-    )
 
 
-def test_kv_aggregate_and_histogram(spark):
+def test_histogram(spark):
     df = spark.createDataFrame([(i % 3, float(i)) for i in range(12)], "k long, v double")
-    agg = {
-        (r.k): (r.n, r.s)
-        for r in jobs.key_value_aggregate(
-            df, ["k"], [F.count(F.lit(1)).alias("n"), F.sum("v").alias("s")]
-        ).collect()
-    }
-    assert agg[0] == (4, 0 + 3 + 6 + 9)
     hist = {r.bucket: r.n for r in jobs.histogram(df, "v", 5.0).collect()}
     assert hist == {0: 5, 1: 5, 2: 2}
 
@@ -60,6 +59,14 @@ def test_exact_dedup_min_survivor(spark):
     )
     got = {(r.id, r.body) for r in jobs.exact_dedup(df, ["body"], "id").collect()}
     assert got == {(1, "x"), (2, "y")}
+
+
+def test_exact_dedup_counts_copies_with_one_null_group(spark):
+    df = spark.createDataFrame(
+        [(3, "x"), (1, "x"), (2, "y"), (5, None), (4, None)], "id long, body string"
+    )
+    got = {tuple(r) for r in jobs.exact_dedup(df, ["body"], "id").collect()}
+    assert got == {(1, "x", 2), (2, "y", 1), (4, None, 2)}
 
 
 def test_near_dedup_jaccard_generic(spark):
@@ -78,19 +85,27 @@ def test_near_dedup_jaccard_generic(spark):
     assert not any(4 in pair for pair in rows)
 
 
+def test_near_dedup_jaccard_pairs_no_null_text(spark):
+    df = spark.createDataFrame(
+        [(1, "a b c d"), (2, None), (3, None), (4, "a b c d")], "id long, body string"
+    )
+    got = {tuple(r) for r in jobs.near_dedup_jaccard(df, "id", "body").collect()}
+    assert got == {(1, 4, 1.0)}
+
+
 def test_sessionize_generic(spark):
     df = spark.createDataFrame(
         [
-            (1, "2024-01-01 10:00:00"),
-            (1, "2024-01-01 10:10:00"),
-            (1, "2024-01-01 11:30:00"),  # > 30 min gap → new session
-            (2, "2024-01-01 09:00:00"),
+            (1, 1, "2024-01-01 10:00:00"),
+            (1, 2, "2024-01-01 10:10:00"),
+            (1, 3, "2024-01-01 11:30:00"),  # > 30 min gap → new session
+            (2, 4, "2024-01-01 09:00:00"),
         ],
-        "uid long, ts string",
+        "uid long, eid long, ts string",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     got = {
         (r.uid, r.ts.isoformat(), r.session_id)
-        for r in jobs.sessionize(df, "uid", "ts", "30 minutes").collect()
+        for r in jobs.sessionize(df, "uid", "ts", "eid", 30 * 60).collect()
     }
     assert got == {
         (1, "2024-01-01T10:00:00", 1),

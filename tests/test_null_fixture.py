@@ -251,8 +251,7 @@ def test_jaccard_thresholds_do_not_straddle_engines(spark, jacedge_dir):
     counts) the cut would straddle. Oracle parity for every
     jaccard-consuming key, plus explicit inclusion pins so a both-
     engines-exclude regression can't pass as vacuous parity."""
-    from mapreduce_server_spark import REGISTRY
-    from mapreduce_server_spark.operators.dedup import _jaccard_pairs, _nonnull_docs
+    from mapreduce_server_spark import REGISTRY, jobs
     from mapreduce_server_spark.sources.loader import Tables
 
     from .conftest import make_duck
@@ -275,10 +274,10 @@ def test_jaccard_thresholds_do_not_straddle_engines(spark, jacedge_dir):
 
     # boundary inclusion at 0.3 (the levenshtein candidate block):
     # (3,4) J=3/10 is AT the cut and must be in; (9,10) J=2/7 out
-    d = _nonnull_docs(Tables(spark, jacedge_dir).documents)
+    d = Tables(spark, jacedge_dir).documents
     cand = {
-        (r["doc_a"], r["doc_b"])
-        for r in _jaccard_pairs(d, threshold=0.3).collect()
+        (r["id_a"], r["id_b"])
+        for r in jobs.near_dedup_jaccard(d, "doc_id", "text", threshold=0.3).collect()
     }
     assert cand == {(1, 2), (3, 4), (5, 6), (7, 8), (11, 12)}, cand
 

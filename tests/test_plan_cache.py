@@ -20,6 +20,7 @@ import bench
 from mapreduce_server_spark import cache, registry
 from mapreduce_server_spark.operators import _memo
 from mapreduce_server_spark.operators import similarity as sim
+from mapreduce_server_spark.operators import sources_ops
 from mapreduce_server_spark.registry import REGISTRY
 from mapreduce_server_spark.serving import scheduler
 from mapreduce_server_spark.sources import loader
@@ -221,6 +222,16 @@ def test_every_memo_rebuilds_after_its_inputs_change(spark, log_copy, monkeypatc
         and after[name]["stale"] <= before[name]["stale"]
     ]
     assert not_rebuilt == []
+
+
+def test_deleted_view_directory_rebuilds_the_view_plan(spark, log_copy):
+    """The view's read plan records the view directory: deleting it makes
+    the memoized plan stale, and the rebuild refreshes the view."""
+    key = "matview_daily_rollup"
+    REGISTRY[key].fn(spark, log_copy).collect()
+    shutil.rmtree(sources_ops._daily_rollup_view().path(log_copy))
+    after = REGISTRY[key].fn(spark, log_copy)
+    assert_parity(after, make_duck(log_copy), REGISTRY[key].oracle, key)
 
 
 def test_deleted_data_directories_leave_no_memo_entries(spark, tmp_path):

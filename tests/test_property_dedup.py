@@ -98,7 +98,7 @@ def _write_fixture(docs: list[list[str]]) -> str:
 
 
 def _shingles(toks: list[str], k: int = 3) -> set[str]:
-    """Replay of operators.dedup._shingles: k-word shingles, distinct;
+    """Replay of functions.tokens.shingles: k-word shingles, distinct;
     docs shorter than k yield their whole text as the one shingle."""
     n = len(toks)
     return {" ".join(toks[i : i + k]) for i in range(max(n - (k - 1), 1))}

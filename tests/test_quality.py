@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_server_spark import REGISTRY
 from mapreduce_server_spark.operators.quality import HH_K
-from mapreduce_server_spark.operators.text import tokens
+from mapreduce_server_spark.functions.tokens import tokens
 from mapreduce_server_spark.sources.loader import Tables
 
 from .conftest import SF0001

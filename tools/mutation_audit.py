@@ -50,7 +50,7 @@ MUTATIONS = [
     dict(
         mid="M01_threshold_exclusive",
         cls="threshold boundary (>= → >)",
-        file="operators/dedup.py",
+        file="jobs.py",
         old=".filter(jac >= threshold)",
         new=".filter(jac > threshold)",
         fixture="jacedge",
@@ -59,9 +59,9 @@ MUTATIONS = [
     dict(
         mid="M02_drop_null_filter",
         cls="NULL-text filter dropped",
-        file="operators/dedup.py",
-        old="return fan_out_scan(d.where(F.col(\"text\").isNotNull()), d.sparkSession)",
-        new="return fan_out_scan(d, d.sparkSession)",
+        file="jobs.py",
+        old="d = df.where(F.col(text_col).isNotNull())",
+        new="d = df",
         fixture="nulltext",
         keys=["dedup_ngram_jaccard"],
     ),
@@ -150,9 +150,9 @@ MUTATIONS = [
     dict(
         mid="M12_cosine_to_dot",
         cls="cosine → unnormalized dot product",
-        file="operators/similarity.py",
-        old="sim = F.expr(cosine_sql(\"embedding\", qv))",
-        new="sim = F.expr(dot_sql(\"embedding\", qv))",
+        file="jobs.py",
+        old="sim = F.expr(vector.cosine_sql(vec_col, query))",
+        new="sim = F.expr(vector.dot_sql(vec_col, query))",
         # the committed corpus is unit-normalized (dot == cosine at
         # 6 dp): survived 'base' in the first audit run — the vecscale
         # axis exists because of that survivor
