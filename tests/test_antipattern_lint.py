@@ -105,6 +105,36 @@ def test_topandas_sites_are_pinned():
     _pinned_sites(".toPandas()", TOPANDAS_ALLOWLIST, ".toPandas()")
 
 
+#: differential compare sites outside the package: code tokens of
+#: ``assert_parity(`` and ``_multiset(`` per file under tests/, tools/
+#: and perfbench/. Every "build the key, compare with its oracle" loop
+#: calls ``parity.run_keys``; a hand-kept loop fails here.
+COMPARE_ALLOWLIST = {
+    "tests/parity.py": 5,  # the two definitions and run_keys' compare
+    "tests/test_oracle_parity.py": 1,  # one parametrized key per test
+    "tests/test_plan_cache.py": 5,  # memo-state checks, one plan each
+    # the benchmark's check of already-collected rows; it sits on the
+    # frozen benchmark path and moves onto the runner with its next change
+    "perfbench/oracle.py": 2,
+}
+
+
+def test_compare_loops_go_through_run_keys():
+    found: dict[str, int] = {}
+    for top in ("tests", "tools", "perfbench"):
+        for root, _dirs, files in os.walk(os.path.join(os.path.dirname(PKG), top)):
+            for f in files:
+                if f.endswith(".py"):
+                    path = os.path.join(root, f)
+                    n = sum(_code_occurrences(path, needle)
+                            for needle in ("assert_parity(", "_multiset("))
+                    if n:
+                        found[os.path.relpath(path, os.path.dirname(PKG))] = n
+    assert found == COMPARE_ALLOWLIST, (
+        f"new/changed compare site(s) — call parity.run_keys instead: {found}"
+    )
+
+
 #: cross-engine recipes written once (ARCHITECTURE §4 rule 9), needle →
 #: its one home: the md5-integer hash and the hourly sequence that every
 #: hour grid (series.hour_grid, series.hour_span) and hour-cell explode

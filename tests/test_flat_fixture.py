@@ -13,10 +13,9 @@ quality_drift_ks's single-source rest-side, stat_anova, stat_cramers_v's
 single-category margin, stat_levene, stat_linreg, ts_autocorr), all
 fixed with F.try_divide; this sweep keeps the class closed.
 
-Flattening rules (pure REPLACE projections of the committed sf0.001
-fixture — deterministic, no synthesis; every mutated value carries an
-explicit ::DOUBLE cast because a bare 5.0 literal is DECIMAL(2,1) in
-DuckDB and would silently change the parquet column type):
+Flattening rules (``build_fixture(dest, "flat")``: pure REPLACE
+projections of the committed sf0.001 fixture — deterministic, no
+synthesis):
   * lineitem: l_quantity = 1.0, l_extendedprice = 100.0
   * events:   value = 5.0
   * customer: c_acctbal = 100.0
@@ -25,71 +24,27 @@ DuckDB and would silently change the parquet column type):
 
 from __future__ import annotations
 
-import os
 import shutil
 import tempfile
 
-import duckdb
 import pytest
 
-from mapreduce_server_spark import REGISTRY
-from mapreduce_server_spark.sources.loader import TABLE_NAMES
-
-from .conftest import SF0001, make_duck
-from .parity import assert_parity
+from .parity import run_keys
+from .test_empty_fixture import build_fixture, oracle_builds
 
 #: full-registry parity sweeps are the FULL lane (`pytest` / CI); the
 #: inner-loop lane skips them: `pytest -m 'not sweep'` (~10 min).
 pytestmark = pytest.mark.sweep
 
-_MUT = {
-    "lineitem": (
-        "SELECT * REPLACE (1.0::DOUBLE AS l_quantity, "
-        "100.0::DOUBLE AS l_extendedprice) FROM read_parquet('{p}')"
-    ),
-    "events": "SELECT * REPLACE (5.0::DOUBLE AS value) FROM read_parquet('{p}')",
-    "customer": (
-        "SELECT * REPLACE (100.0::DOUBLE AS c_acctbal) FROM read_parquet('{p}')"
-    ),
-    "documents": (
-        "SELECT doc_id, 'alpha beta alpha' AS text, lang, "
-        "'src0' AS source, 16::BIGINT AS n_chars FROM read_parquet('{p}')"
-    ),
-}
-
 
 @pytest.fixture(scope="module")
 def flat_dir():
     d = tempfile.mkdtemp(prefix="flatfix_")
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        src = os.path.join(SF0001, f"{t}.parquet")
-        if t in _MUT:
-            con.execute(
-                f"COPY ({_MUT[t].format(p=src)}) TO "
-                f"'{os.path.join(d, t + '.parquet')}' (FORMAT PARQUET)"
-            )
-        else:
-            shutil.copy(src, os.path.join(d, f"{t}.parquet"))
+    build_fixture(d, "flat")
     yield d
     shutil.rmtree(d, ignore_errors=True)
 
 
 def test_every_oracle_survives_constant_columns(spark, flat_dir):
-    duck = make_duck(flat_dir)
-    keys = sorted(k for k, s in REGISTRY.items() if s.oracle)
-    assert len(keys) >= 300  # the sweep must cover the whole registry
-    bad: list[tuple[str, str]] = []
-    for k in keys:
-        try:
-            assert_parity(
-                REGISTRY[k].raw_fn(spark, flat_dir),
-                duck,
-                REGISTRY[k].oracle,
-                k,
-            )
-        except AssertionError as e:
-            bad.append((k, f"MISMATCH {str(e)[:160]}"))
-        except Exception as e:  # engine error = worst divergence class
-            bad.append((k, f"{type(e).__name__} {str(e)[:160]}"))
+    bad = run_keys(spark, flat_dir, oracle_builds())
     assert not bad, bad

@@ -62,7 +62,8 @@ import tempfile
 
 import pytest
 
-from .test_empty_fixture import _sweep, build_fixture
+from .parity import run_keys
+from .test_empty_fixture import build_fixture, oracle_builds
 
 #: full-registry parity sweeps are the FULL lane (`pytest` / CI); the
 #: inner-loop lane skips them: `pytest -m 'not sweep'` (~10 min).
@@ -86,12 +87,12 @@ def skew_dir():
 
 
 def test_every_oracle_survives_null_injection(spark, null_dir):
-    bad = _sweep(spark, null_dir)
+    bad = run_keys(spark, null_dir, oracle_builds())
     assert not bad, bad
 
 
 def test_every_oracle_survives_skewed_keys(spark, skew_dir):
-    bad = _sweep(spark, skew_dir)
+    bad = run_keys(spark, skew_dir, oracle_builds())
     assert not bad, bad
 
 
@@ -121,7 +122,7 @@ def test_every_oracle_survives_null_text(spark, nulltext_dir):
     quality_drift_ks, stat_mannwhitney); (d) the oracle's empty-list
     coalesce('') must be CASE-guarded to NULL on NULL input
     (scalar_array_setops)."""
-    bad = _sweep(spark, nulltext_dir)
+    bad = run_keys(spark, nulltext_dir, oracle_builds())
     assert not bad, bad
 
 
@@ -140,7 +141,7 @@ def test_every_oracle_survives_duplicate_heavy_corpus(spark, dupheavy_dir):
     clique, never corpus-n², and every survivor rule is a total order
     (min doc_id), so a half-corpus duplicate group resolves
     deterministically on both engines."""
-    bad = _sweep(spark, dupheavy_dir)
+    bad = run_keys(spark, dupheavy_dir, oracle_builds())
     assert not bad, bad
 
 
@@ -169,7 +170,7 @@ def test_every_oracle_survives_null_skew_combined(spark, nullskew_dir):
     plan carries one giant NULL group while every join/stream-join path
     must drop it — the two semantics in the SAME plan, plus the
     round-11 NULL measures riding along on skewed FK tables."""
-    bad = _sweep(spark, nullskew_dir)
+    bad = run_keys(spark, nullskew_dir, oracle_builds())
     assert not bad, bad
 
 
@@ -188,7 +189,7 @@ def test_every_oracle_survives_null_text_duplicate_combined(spark, nulldup_dir):
     must hold simultaneously (a NULL row must neither join the clique
     nor form a spurious NULL-clique, the round-11 shingle-collapse
     regression shape)."""
-    bad = _sweep(spark, nulldup_dir)
+    bad = run_keys(spark, nulldup_dir, oracle_builds())
     assert not bad, bad
 
 
@@ -209,7 +210,7 @@ def test_every_oracle_survives_dst_boundaries(spark, dst_dir):
     windows over locally-nonexistent (gap) or locally-ambiguous (fold)
     wall times must bucket identically on both engines — divergence
     here would mean one side went tz-aware."""
-    bad = _sweep(spark, dst_dir)
+    bad = run_keys(spark, dst_dir, oracle_builds())
     assert not bad, bad
 
 
@@ -229,7 +230,7 @@ def test_every_oracle_survives_calendar_edges(spark, calendar_dir):
     (year/month/quarter/date_trunc), so the expected yield was zero —
     this sweep pins that adjudication the way the DST axis pinned
     civil-time arithmetic (probe-before-build, STATUS round-12 queue)."""
-    bad = _sweep(spark, calendar_dir)
+    bad = run_keys(spark, calendar_dir, oracle_builds())
     assert not bad, bad
 
 
@@ -254,15 +255,12 @@ def test_jaccard_thresholds_do_not_straddle_engines(spark, jacedge_dir):
     from mapreduce_server_spark import REGISTRY, jobs
     from mapreduce_server_spark.sources.loader import Tables
 
-    from .conftest import make_duck
-    from .parity import assert_parity
-
-    duck = make_duck(jacedge_dir)
-    for k in ("dedup_ngram_jaccard", "dedup_jaccard_prefix",
-              "dedup_minhash", "dedup_levenshtein", "dedup_components"):
-        assert_parity(
-            REGISTRY[k].raw_fn(spark, jacedge_dir), duck, REGISTRY[k].oracle, k
-        )
+    bad = run_keys(spark, jacedge_dir, {
+        k: REGISTRY[k].raw_fn
+        for k in ("dedup_ngram_jaccard", "dedup_jaccard_prefix",
+                  "dedup_minhash", "dedup_levenshtein", "dedup_components")
+    })
+    assert not bad, bad
 
     # boundary inclusion at 0.5: (1,2) J=2/4 and (5,6) J=3/6 are AT the
     # cut and must be in; (7,8) J=0.4 must be out; (11,12) J=0.8 above
@@ -312,5 +310,5 @@ def test_every_oracle_survives_negative_measures(spark, negative_dir):
     engines (out-of-domain → NULL: scalar_math's ln/log10/sqrt guards,
     udf_pandas_scalar's lane mask + oracle CASE), re-verified
     oracle-exact on the real fixture."""
-    bad = _sweep(spark, negative_dir)
+    bad = run_keys(spark, negative_dir, oracle_builds())
     assert not bad, bad

@@ -36,8 +36,8 @@ import pytest
 from mapreduce_server_spark import REGISTRY
 from mapreduce_server_spark.sources.loader import TABLE_NAMES
 
-from .conftest import SF0001, make_duck
-from .parity import assert_parity
+from .conftest import SF0001
+from .parity import run_keys
 
 #: full-registry parity sweeps are the FULL lane (`pytest` / CI); the
 #: inner-loop lane skips them: `pytest -m 'not sweep'` (~10 min).
@@ -99,30 +99,13 @@ def shrunk_rows_dir():
     shutil.rmtree(d, ignore_errors=True)
 
 
-def _sweep(spark, sf_dir: str, keys: list[str]) -> None:
-    duck = make_duck(sf_dir)
-    bad: list[tuple[str, str]] = []
-    for k in keys:
-        try:
-            assert_parity(
-                REGISTRY[k].raw_fn(spark, sf_dir),
-                duck,
-                REGISTRY[k].oracle,
-                k,
-            )
-        except AssertionError as e:
-            bad.append((k, f"MISMATCH {str(e)[:160]}"))
-        except Exception as e:  # engine error = worst divergence class
-            bad.append((k, f"{type(e).__name__} {str(e)[:160]}"))
-    assert not bad, bad
-
-
 def test_every_events_oracle_survives_a_12_hour_fixture(spark, shrunk_dir):
     keys = sorted(
         k for k, s in REGISTRY.items() if s.oracle and "events" in s.oracle
     )
     assert len(keys) >= 80  # the sweep must actually cover the tier
-    _sweep(spark, shrunk_dir, keys)
+    bad = run_keys(spark, shrunk_dir, {k: REGISTRY[k].raw_fn for k in keys})
+    assert not bad, bad
 
 
 def test_every_other_oracle_survives_truncated_tables(spark, shrunk_rows_dir):
@@ -132,4 +115,5 @@ def test_every_other_oracle_survives_truncated_tables(spark, shrunk_rows_dir):
         if s.oracle and "events" not in s.oracle
     )
     assert len(keys) >= 180  # the sweep must actually cover the tier
-    _sweep(spark, shrunk_rows_dir, keys)
+    bad = run_keys(spark, shrunk_rows_dir, {k: REGISTRY[k].raw_fn for k in keys})
+    assert not bad, bad

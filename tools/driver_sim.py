@@ -1,20 +1,25 @@
 #!/usr/bin/env python
 """Simulate the driver's verification end-to-end: vanilla SparkSession →
-entry() smoke → queries() keys vs oracle_sql() in DuckDB (exact compare,
-stricter than the driver's hash). Exit 1 on any failure.
+entry() smoke → every queries() key through ``tests.parity.run_keys``
+(exact compare with its oracle_sql() in DuckDB plus the fetch-dtype
+check, stricter than the driver's hash). Prints one line per key; exit 1
+on any failure.
 
-Usage: python tools/driver_sim.py [sf_dir] [key ...]
+Usage: python tools/driver_sim.py [sf_dir] [key ...] [--log PATH]
   sf_dir defaults to the sf0.01 fixture; no keys means every key.
+  --log PATH appends one JSON line per finished key; a rerun with the
+  same PATH skips the keys it already holds, so a killed sweep resumes
+  where it stopped.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "tests"))
 
 # The verification surface also enforces the measure contract at load
 # (round-13: a sub-quantum/NaN corpus fails loudly at the first scan
@@ -23,14 +28,26 @@ os.environ.setdefault("SPARK_GRAFT_VALIDATE_MEASURES", "1")
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    keys = sys.argv[2:]
+    from tests.conftest import SF001
+
+    ap = argparse.ArgumentParser()
+    ap.add_argument("sf_dir", nargs="?", default=SF001)
+    ap.add_argument("keys", nargs="*")
+    ap.add_argument("--log", help="per-key JSON-lines log to append to and resume from")
+    args = ap.parse_args()
 
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
-    from conftest import make_duck
-    from parity import assert_fetch_dtypes, assert_parity
+    from tests.parity import run_keys
+
+    queries = entrymod.queries()
+    missing = [k for k in args.keys if k not in queries]
+    if missing:
+        print(f"NOT REGISTERED: {missing}")
+        return 1
+    if args.keys:
+        queries = {k: queries[k] for k in args.keys}
 
     master = os.environ.get("MRSS_MASTER", "local[8]")
     # The real driver grades 50 keys; this sim runs the FULL registry in
@@ -55,78 +72,15 @@ def main() -> int:
     # default vm.max_map_count=65530 kills the oracle run mid-sweep with
     # a 'bad allocation' OOM (round 13: 84 keys from ml_naive_bayes on);
     # with 262144 the same sweep peaks at ~1.7k maps. Raise it on the
-    # host before an sf1 sweep.
-    con = make_duck(sf_dir)
-    # spillable oracle: an in-memory DuckDB cannot offload without a
-    # temp dir, and sf1-size window/list aggregates need one
-    from mapreduce_server_spark.scratch import SCRATCH, owned
-
-    spill = owned(os.path.join(SCRATCH, f"duck_spill_p{os.getpid()}"))
-    os.makedirs(spill, exist_ok=True)
-    con.execute(f"SET temp_directory='{spill}'")
-    # Defense-in-depth: DuckDB's default memory_limit is ~80% of
-    # physical RAM, so a runaway oracle starves the host before it
-    # ever spills. NOTE this cap is NOT sufficient for every operator:
-    # DuckDB 1.0's min(STRUCT) aggregate state bypasses the buffer
-    # manager (observed round 13: ts_ohlc at sf1 OOM-killed the sweep
-    # at 118 GB RSS uncapped AND at 63 GB+ with this 32 GB cap) — such
-    # oracles must be rewritten in a scalable spelling instead
-    # (ARCHITECTURE §24 "struct-min cliff"; ts_ohlc/ts_m4 now use
-    # arg_min over a hugeint composite key).
-    con.execute(f"SET memory_limit='{os.environ.get('MRSS_DUCK_MEM', '32GB')}'")
-
-    import time as _time
-
-    verbose = keys or os.environ.get("MRSS_VERBOSE", "") == "1"
-    queries, oracles = entrymod.queries(), entrymod.oracle_sql()
-    missing = [k for k in keys if k not in queries]
-    if missing:
-        print(f"NOT REGISTERED: {missing}")
-        return 1
-    if keys:
-        queries = {k: queries[k] for k in keys}
-    # Targeted-rerun knob: skip ahead to a key (inclusive) so a fix for
-    # a late-sweep failure can be validated in minutes instead of
-    # replaying the full 75-minute sf1 sweep. A run that uses this is a
-    # TAIL validation only — the recorded gate is always a full pass.
-    skip_until = os.environ.get("MRSS_SKIP_UNTIL", "")
-    bad, rows_only = [], []
-    started = not skip_until
-    for i, (key, fn) in enumerate(queries.items()):
-        if not started:
-            if key == skip_until:
-                started = True
-            else:
-                continue
-        if i and i % 40 == 0:
-            # bound cached-block accumulation across the sweep; each
-            # query's correctness is independent of cache residency
-            spark.catalog.clearCache()
-        t0 = _time.perf_counter()
-        try:
-            df = fn(spark, sf_dir)
-            sql = oracles.get(key)
-            if sql is None:
-                rows_only.append((key, df.count()))
-            else:
-                assert_parity(df, con, sql, key=key)
-                assert_fetch_dtypes(df, con, sql, key=key)
-            if verbose:
-                print(f"[{i}] {key}: ok {_time.perf_counter() - t0:.1f}s",
-                      flush=True)
-        except Exception as exc:  # noqa: BLE001 - report, don't abort
-            bad.append((key, str(exc)[:200]))
-            if verbose:
-                print(f"[{i}] {key}: BAD {_time.perf_counter() - t0:.1f}s",
-                      flush=True)
-
-    print(f"rows-only ({len(rows_only)}): {rows_only}")
+    # host before an sf1 sweep; a killed sweep resumes from its --log.
+    bad = run_keys(spark, args.sf_dir, queries, log=args.log)
     if bad:
         print(f"FAILED ({len(bad)}):")
-        for key, msg in bad:
+        for key, msg in bad.items():
             print(f"  {key}: {msg}")
         return 1
-    print(f"ALL {len(queries)} QUERIES OK ({len(queries) - len(rows_only)} oracle-exact)")
+    exact = sum(1 for k in queries if k in entrymod.oracle_sql())
+    print(f"ALL {len(queries)} QUERIES OK ({exact} oracle-exact)")
     return 0
 
 

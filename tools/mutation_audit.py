@@ -13,9 +13,10 @@ package, runs each mutant's affected key(s) against the UNMUTATED
 DuckDB oracle on the axis fixture that claims to cover the class, and
 records the kill.
 
-A mutant is KILLED when any affected key mismatches or errors against
-its oracle; a SURVIVOR is a hole in the oracle surface — fix the
-oracle or add the missing fixture pin, then re-run.
+A mutant is KILLED when ``tests.parity.run_keys`` reports any affected
+key (a mismatch, an error or a fetch-dtype drift against its oracle); a
+SURVIVOR is a hole in the oracle surface — fix the oracle or add the
+missing fixture pin, then re-run.
 
 Each mutant runs in its own subprocess (own Spark JVM) with the
 mutated package shadowing the real one via sys.path; the real repo
@@ -39,7 +40,6 @@ import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(REPO, "mapreduce_server_spark")
-SF0001 = "/root/testdata/sf0.001"
 
 # ---------------------------------------------------------------- mutations
 
@@ -195,100 +195,27 @@ MUTATIONS = [
     ),
 ]
 
-# ---------------------------------------------------------------- fixtures
-
-
-def _build_fixture(kind: str, dest: str) -> None:
-    """Materialize the named axis fixture into ``dest`` (reusing the CI
-    sweep builders so the audit measures the committed axes' kill-power,
-    not bespoke data)."""
-    sys.path.insert(0, REPO)
-    if kind == "base":
-        for f in os.listdir(SF0001):
-            shutil.copy(os.path.join(SF0001, f), os.path.join(dest, f))
-        return
-    if kind == "flat":
-        import duckdb
-
-        from tests.test_flat_fixture import _MUT
-
-        from mapreduce_server_spark.sources.loader import TABLE_NAMES
-
-        con = duckdb.connect()
-        for t in TABLE_NAMES:
-            src = os.path.join(SF0001, f"{t}.parquet")
-            if t in _MUT:
-                con.execute(
-                    f"COPY ({_MUT[t].format(p=src)}) TO "
-                    f"'{os.path.join(dest, t + '.parquet')}' (FORMAT PARQUET)"
-                )
-            else:
-                shutil.copy(src, os.path.join(dest, f"{t}.parquet"))
-        con.close()
-        return
-    if kind == "upper":
-        # mixed/upper-case documents: the case-normalization kill
-        # surface (committed corpora are all-lowercase, which is WHY
-        # this fixture must exist — M09 survives every committed axis)
-        import duckdb
-
-        from mapreduce_server_spark.sources.loader import TABLE_NAMES
-
-        con = duckdb.connect()
-        for t in TABLE_NAMES:
-            src = os.path.join(SF0001, f"{t}.parquet")
-            if t == "documents":
-                con.execute(
-                    "COPY (SELECT doc_id, upper(substr(text, 1, 8)) || "
-                    "substr(text, 9) AS text, lang, source, n_chars "
-                    f"FROM read_parquet('{src}')) TO "
-                    f"'{os.path.join(dest, t + '.parquet')}' (FORMAT PARQUET)"
-                )
-            else:
-                shutil.copy(src, os.path.join(dest, f"{t}.parquet"))
-        con.close()
-        return
-    from tests.test_empty_fixture import build_fixture
-
-    build_fixture(dest, kind)
-
-
 # ---------------------------------------------------------------- child
 
 _CHILD = r"""
-import json, os, sys
-pkg_parent, fixture, keys_csv = sys.argv[1], sys.argv[2], sys.argv[3]
+import json, sys
+pkg_parent, fixture, keys = sys.argv[1], sys.argv[2], sys.argv[3].split(",")
 sys.path.insert(0, pkg_parent)
 sys.path.insert(1, {repo!r})
-sys.path.insert(2, os.path.join({repo!r}, "tests"))
-import duckdb
 from pyspark.sql import SparkSession
 import mapreduce_server_spark
 assert mapreduce_server_spark.__file__.startswith(pkg_parent), (
     "mutant package not shadowing: " + mapreduce_server_spark.__file__)
 from mapreduce_server_spark import REGISTRY
-from mapreduce_server_spark.sources.loader import TABLE_NAMES
-from parity import assert_parity
+from tests.parity import run_keys
 spark = (SparkSession.builder.master("local[4]").appName("mut-audit")
          .config("spark.driver.memory", "3g")
          .config("spark.ui.enabled", "false")
          .config("spark.sql.shuffle.partitions", "8").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
-con = duckdb.connect()
-for t in TABLE_NAMES:
-    con.execute(f"CREATE VIEW {{t}} AS SELECT * FROM "
-                f"read_parquet('{{fixture}}/{{t}}.parquet')")
-out = {{}}
-for k in keys_csv.split(","):
-    try:
-        assert_parity(REGISTRY[k].raw_fn(spark, fixture), con,
-                      REGISTRY[k].oracle, k)
-        out[k] = "SURVIVED"
-    except AssertionError as e:
-        out[k] = "KILLED mismatch: " + str(e)[:150].replace("\n", " ")
-    except Exception as e:
-        out[k] = ("KILLED error: " + type(e).__name__ + " "
-                  + str(e)[:150].replace("\n", " "))
+bad = run_keys(spark, fixture, {{k: REGISTRY[k].raw_fn for k in keys}})
+out = {{k: "KILLED " + bad[k][:150].replace("\n", " ") if k in bad else "SURVIVED"
+        for k in keys}}
 print("RESULT:" + json.dumps(out))
 spark.stop()
 """
@@ -351,6 +278,11 @@ def main() -> int:
             print(f"{m['mid']:28s} {m['fixture']:9s} {m['cls']}")
         return 0
 
+    # the CI sweep builders, so the audit measures the committed axes'
+    # kill-power, not bespoke data
+    sys.path.insert(0, REPO)
+    from tests.test_empty_fixture import build_fixture
+
     root = tempfile.mkdtemp(prefix="mutaudit_")
     results = []
     try:
@@ -359,7 +291,7 @@ def main() -> int:
         for kind in sorted({m["fixture"] for m in muts}):
             d = os.path.join(root, f"fix_{kind}")
             os.makedirs(d)
-            _build_fixture(kind, d)
+            build_fixture(d, kind)
             fixtures[kind] = d
             print(f"fixture {kind}: built")
 
