@@ -11,6 +11,11 @@ fingerprint and an appended or rewritten table never adds an entry.
 Concurrent builds of one key run once; other keys, and builds nested in
 a build, never wait on each other. A fingerprint is file-system stats
 only, so checking a directory table costs time linear in its part count.
+:func:`new_parts` is the one append rule over two listings of a table's
+parts (:func:`parts`): a table whose earlier parts are all still there
+unchanged only gained parts, so a reader may keep what it learned from
+the earlier ones (the loader its recorded schema, a materialized view
+its keys).
 Storing an entry drops and releases, in every memo, the entries that
 recorded a table whose path is gone since: nothing looks those up again
 (a server's data directories come and go), so nothing else would.
@@ -53,6 +58,36 @@ def fingerprint(path: str) -> Fingerprint:
                 continue  # removed mid-walk: the next check sees the change
             files.append((os.path.relpath(p, path), f.st_mtime_ns, f.st_size))
     return tuple(sorted(files))
+
+
+#: part name (relative to the table path; "" for a single-file table) →
+#: (mtime_ns, size)
+Parts = dict[str, tuple[int, int]]
+
+
+def parts(fp: Fingerprint) -> Parts:
+    """The parquet parts of a table from its fingerprint, as Spark lists
+    them: every file of a directory except hidden ones (``_SUCCESS``,
+    ``.crc``, staging directories), or the single file itself."""
+    if not fp:
+        return {}
+    if isinstance(fp[0], int):  # a file's (mtime_ns, size)
+        return {"": fp}
+    return {
+        n: (mtime, size)
+        for n, mtime, size in fp
+        if not any(c.startswith(("_", ".")) for c in n.split(os.sep))
+    }
+
+
+def new_parts(old: Parts, now: Parts) -> list[str] | None:
+    """The append rule: the parts of ``now`` that ``old`` lacks, sorted,
+    when every part of ``old`` is still there unchanged; None when one
+    was rewritten or removed, or ``old`` has none (a reader then has to
+    rediscover the whole table)."""
+    if not old or any(now.get(n) != v for n, v in old.items()):
+        return None
+    return sorted(now.keys() - old.keys())
 
 
 def table_path(sf_dir: str, name: str) -> str:

@@ -557,10 +557,14 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly retention triangle: users are cohorted by their first
     active week; each (cohort, weeks-since) cell counts users still
     active — THE product-analytics query. Plan: one distinct
-    (user, week) reduction (the only pass over raw events), a per-user
-    min, then a join and a small agg — all three shuffles key on
-    user_id, so at scale they collapse onto one partitioning (Exchange
-    reuse), and the final cells are O(weeks²) regardless of user count.
+    (user, week) reduction (the only pass over raw events), then each
+    user's first week as ``min(wk)`` over a ``user_id`` window on those
+    distinct rows — no per-user aggregate joined back, so the weeks
+    subtree is planned and run once — and a small agg. Three exchanges:
+    the distinct on (user_id, wk), the window's on user_id, and the
+    final cells', which are O(weeks²) regardless of user count. Rows
+    with a NULL ``user_id`` are dropped (the oracle's join drops them);
+    a NULL week still counts, in a NULL cell.
 
     Parity notes: both engines truncate weeks to Monday 00:00; the
     week index divides a day difference that is an exact multiple of 7
@@ -568,12 +572,14 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself crosses engines as an integer epoch (ARCHITECTURE.md §4 —
     DuckDB's epoch() rounds, epoch_us // 1e6 truncates like Spark)."""
     ev = Tables(spark, sf_dir).events
-    weeks = ev.select(
-        "user_id", F.date_trunc("week", "ts").alias("wk")
-    ).distinct()
-    cohorts = weeks.groupBy("user_id").agg(F.min("wk").alias("cohort_wk"))
+    weeks = (
+        ev.filter(F.col("user_id").isNotNull())
+        .select("user_id", F.date_trunc("week", "ts").alias("wk"))
+        .distinct()
+    )
+    cohort_wk = F.min("wk").over(Window.partitionBy("user_id"))
     return (
-        weeks.join(cohorts, "user_id")
+        weeks.select("wk", cohort_wk.alias("cohort_wk"))
         .groupBy(
             F.unix_seconds("cohort_wk").alias("cohort_week_s"),
             (F.datediff("wk", "cohort_wk") / 7).cast("long").alias("week_index"),

@@ -5315,13 +5315,16 @@ mom AS (
   SELECT event_type, count(*) AS nn, sum(x) AS s, sum(x * x) AS q
   FROM series GROUP BY 1
 ),
+shifted AS (
+  SELECT s.event_type, s.x, k.lag, s.t + k.lag AS tk
+  FROM series s CROSS JOIN (SELECT unnest(range(-12, 13)) AS lag) k
+),
 lagged AS (
-  SELECT a.event_type AS ta, b.event_type AS tb, k.lag AS k,
+  SELECT a.event_type AS ta, b.event_type AS tb, a.lag AS k,
          count(*) AS m, sum(a.x * b.x) AS cab,
          sum(a.x) AS sha, sum(b.x) AS stb
-  FROM series a
-  CROSS JOIN (SELECT unnest(range(-12, 13)) AS lag) k
-  JOIN series b ON b.t = a.t + k.lag AND a.event_type < b.event_type
+  FROM shifted a
+  JOIN series b ON b.t = a.tk AND a.event_type < b.event_type
   GROUP BY 1, 2, 3
 )
 SELECT l.ta AS type_a, l.tb AS type_b, l.k::BIGINT AS lag,

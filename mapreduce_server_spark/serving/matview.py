@@ -8,22 +8,33 @@ and refreshes it by set difference:
 
     new = partition keys in the source's new parts  −  keys materialized
 
-then rebuilds ONLY those keys from the new parts and writes them by
-dynamic partition overwrite (idempotent per partition — a re-run of the
-same refresh replaces, never duplicates).
+and writes ONLY those keys by dynamic partition overwrite (idempotent
+per partition — a re-run of the same refresh replaces, never
+duplicates).
+
+**One write per refresh.** A refresh writes the aggregate of the
+source rows it scans, filtered on the partition column to the keys not
+materialized yet (Catalyst pushes that filter below the aggregate), in
+one dynamic-overwrite write; the keys rebuilt are the partition
+directories after the write minus those before. No key-discovery job
+runs.
 
 **Covered parts.** The view records the source parts its
 materialization covers, each as ``(name, mtime_ns, size)``. A refresh
-lists the source table on the driver; when every covered part is still
-there and unchanged, discovery and rebuild scan only the parts that are
-new since (with the source's recorded schema, so no inference job).
-That is exact under the append-only contract below: every key of a
-covered part was materialized by the refresh that covered it, so a key
-not yet materialized can occur only in a new part. Any covered part
-rewritten or gone, a missing view directory, or ``force=`` makes the new
-parts all parts — a full rediscovery through the same code. The record
-lives beside the materialization: deleting the view directory resets
-it, and the ``cache`` module's sweep drops it once the source is gone.
+lists the source table on the driver and applies the append rule
+(``cache.new_parts``). When every covered part is still there and
+unchanged, the refresh scans only the new parts, read through
+``loader.load_parts`` with the raw schema of the loader's scan memo,
+which follows the same rule, so no inference job runs. That is exact
+under the append-only contract below: every key of a covered part was
+materialized by the refresh that covered it, so a key not yet
+materialized can occur only in a new part, and all its rows are there.
+Any covered part rewritten or gone, a missing view directory, or
+``force=`` is a full rediscovery instead: the same write over every
+part (the schema inferred again after a rewrite), with the ``force``d
+keys rebuilt as well. The record lives beside the materialization:
+deleting the view directory resets it, and the ``cache`` module's sweep
+drops it once the source is gone.
 
 Why parts and not the key predicate: ``to_date(ts) IN (...)`` cannot
 prune a flat directory of part files, so a predicate-driven refresh read
@@ -49,29 +60,34 @@ from __future__ import annotations
 import dataclasses
 import os
 import urllib.parse
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from ..cache import Fingerprint, Memo, note_read, note_reads, table_path
+from ..cache import (
+    Fingerprint,
+    Memo,
+    Parts,
+    new_parts,
+    note_read,
+    note_reads,
+    parts,
+    table_path,
+)
 from ..scratch import SCRATCH, owned
-from ..sources.loader import _normalize_events_ts, ensure_confs
+from ..sources.loader import load_parts
 
 #: keys(src) → single-column DataFrame of the distinct partition keys in
-#: the source rows ``src``. Kept separate from build so discovery is a
-#: column-pruned distinct of the partition key alone — never the
-#: full aggregate.
+#: the source rows ``src``. Kept separate from build so ``read``'s
+#: empty-source check is a column-pruned distinct of the partition key
+#: alone — never the full aggregate.
 KeysFn = Callable[[DataFrame], DataFrame]
 
 #: build(src, keys) → the aggregate of the source rows ``src``, restricted
 #: to the given partition-key values (keys=None → all).
 BuildFn = Callable[[DataFrame, "list | None"], DataFrame]
-
-#: part name (relative to the table path; "" for a single-file table) →
-#: (mtime_ns, size)
-Parts = dict[str, tuple[int, int]]
 
 
 @dataclasses.dataclass(frozen=True)
@@ -80,8 +96,6 @@ class Covered:
 
     #: the source parts every materialized key was discovered over
     parts: Parts
-    #: the parquet schema the parts were read with (before normalization)
-    source_schema: StructType | None
     #: the materialization's read schema
     view_schema: StructType | None
 
@@ -102,21 +116,6 @@ class Refresh:
 #: Read with ``get`` (an append changes the fingerprint but keeps the
 #: record valid); the memo sweep drops a record whose source is gone.
 _COVERED = Memo("matview")
-
-
-def _parts(fp: Fingerprint) -> Parts:
-    """The parquet parts of a table from its fingerprint, as Spark lists
-    them: every file of a directory except hidden ones (``_SUCCESS``,
-    ``.crc``, staging directories), or the single file itself."""
-    if not fp:
-        return {}
-    if isinstance(fp[0], int):  # a file's (mtime_ns, size)
-        return {"": fp}
-    return {
-        n: (mtime, size)
-        for n, mtime, size in fp
-        if not any(c.startswith(("_", ".")) for c in n.split(os.sep))
-    }
 
 
 class MaterializedView:
@@ -185,31 +184,10 @@ class MaterializedView:
 
         def fill() -> Covered:
             note_reads({(sf_dir, self.source): fp})
-            old = self.covered(sf_dir) or Covered({}, None, None)
+            old = self.covered(sf_dir) or Covered({}, None)
             return dataclasses.replace(old, **fields)
 
         _COVERED.build(self.path(sf_dir), fill)
-
-    def _read_parts(
-        self,
-        spark: SparkSession,
-        sf_dir: str,
-        parts: list[str],
-        schema: StructType | None = None,
-    ) -> DataFrame:
-        """The named source parts as stored; ``schema`` None infers it."""
-        ensure_confs(spark)
-        root = table_path(sf_dir, self.source)
-        files = [os.path.join(root, p) if p else root for p in parts]
-        reader = spark.read if schema is None else spark.read.schema(schema)
-        return reader.parquet(*files)
-
-    def _rows(self, raw: DataFrame) -> DataFrame:
-        """The source rows: ``events`` gets the loader's ts normalization."""
-        return _normalize_events_ts(raw) if self.source == "events" else raw
-
-    def _all_rows(self, spark: SparkSession, sf_dir: str, fp: Fingerprint) -> DataFrame:
-        return self._rows(self._read_parts(spark, sf_dir, sorted(_parts(fp))))
 
     def refresh(
         self, spark: SparkSession, sf_dir: str, force: list[str] | None = None
@@ -220,32 +198,17 @@ class MaterializedView:
         ``last_refresh``."""
         # recorded, so a memoized plan over the view rebuilds on an append
         fp = note_read(sf_dir, self.source)
-        parts = _parts(fp)
+        now = parts(fp)
         old = self.covered(sf_dir)
-        full = (
-            bool(force)
-            or old is None
-            or not old.parts
-            or any(parts.get(n) != v for n, v in old.parts.items())
-        )
-        new = sorted(parts if full else parts.keys() - old.parts.keys())
-        src = None
-        src_keys: set[str] = set()
-        if new:
-            raw = self._read_parts(
-                spark, sf_dir, new, None if full else old.source_schema
-            )
-            src = self._rows(raw)
-            src_keys = {str(r[0]) for r in self.keys(src).collect()}
-        todo = sorted((src_keys - self.materialized_keys(sf_dir)) | set(force or []))
-        rebuilt = self.rebuild(spark, sf_dir, todo, src)
-        if new and os.path.isdir(self.path(sf_dir)):
-            self._record(
-                sf_dir, fp, parts=parts,
-                source_schema=raw.schema if full else old.source_schema,
-            )
+        new = None if force or old is None else new_parts(old.parts, now)
+        scan = sorted(now) if new is None else new
+        rebuilt: list[str] = []
+        if scan:
+            src = load_parts(spark, sf_dir, self.source, new)
+            rebuilt = self.rebuild(spark, sf_dir, None, src, force or [])
+            self._record(sf_dir, fp, parts=now)
         self.last_refresh = Refresh(
-            "full" if full else "incremental", len(new), len(parts), rebuilt
+            "full" if new is None else "incremental", len(scan), len(now), rebuilt
         )
         return rebuilt
 
@@ -253,19 +216,34 @@ class MaterializedView:
         self,
         spark: SparkSession,
         sf_dir: str,
-        keys: list[str],
+        keys: list[str] | None,
         src: DataFrame | None = None,
+        force: Iterable[str] = (),
     ) -> list[str]:
         """Rebuild exactly the given partition keys (no discovery scan)
-        from the source rows ``src``, by default the whole source."""
-        if not keys:
+        from the source rows ``src``, by default the whole source, and
+        return them. ``keys=None`` rebuilds, in one write, every key of
+        ``src`` not materialized yet and the ``force`` ones:
+        ``build(src, None)`` filtered on the partition column (Catalyst
+        pushes the filter below the aggregate); the keys rebuilt are the
+        partition directories the write added, and ``force``."""
+        if keys == []:
             return []
         fp = note_read(sf_dir, self.source)
         if src is None:
-            src = self._all_rows(spark, sf_dir, fp)
+            src = load_parts(spark, sf_dir, self.source)
         out = self.path(sf_dir)
         fresh = not os.path.isdir(out)
-        df = self.build(src, keys)
+        if keys is None:
+            before = self.materialized_keys(sf_dir)
+            keep = sorted(before - set(force))
+            col = F.col(self.partition_col)
+            todo = col.isNotNull()
+            if keep:
+                todo &= ~col.cast("string").isin(keep)
+            df = self.build(src, None).filter(todo)
+        else:
+            df = self.build(src, keys)
         (
             df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -280,6 +258,8 @@ class MaterializedView:
             + [StructField(self.partition_col, StringType())]
         )
         self._record(sf_dir, fp, view_schema=view, **({"parts": {}} if fresh else {}))
+        if keys is None:
+            return sorted((self.materialized_keys(sf_dir) - before) | set(force))
         return keys
 
     def stream_refresh(
@@ -325,10 +305,10 @@ class MaterializedView:
         """The materialized relation; the partition column comes back as
         string (its on-disk directory form) regardless of type inference.
 
-        An EMPTY source never materializes anything (rebuild([]) writes
-        no directory), so a missing path reads as the empty relation in
-        the view's own schema — build() over an empty key list is that
-        frame analysis-time for free (round-10 empty-input sweep).
+        An EMPTY source has nothing to materialize, so a missing path
+        over it reads as the empty relation in the view's own schema —
+        build() over an empty key list is that frame analysis-time for
+        free (round-10 empty-input sweep).
 
         The empty-frame substitution applies ONLY to the genuinely-empty
         source: a missing directory when the source HAS keys means the
@@ -342,7 +322,7 @@ class MaterializedView:
         note_read(*self._table(sf_dir))
         out = self.path(sf_dir)
         if not os.path.isdir(out):
-            src = self._all_rows(spark, sf_dir, note_read(sf_dir, self.source))
+            src = load_parts(spark, sf_dir, self.source)
             if self.keys(src).limit(1).count() > 0:
                 raise FileNotFoundError(
                     f"materialized view '{self.name}' has no materialization "

@@ -27,12 +27,13 @@ from __future__ import annotations
 
 import os
 import urllib.parse
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
+from pyspark.sql.types import LongType, StructType, TimestampNTZType, TimestampType
 
-from ..cache import Memo, app_id, note_read, table_path
+from ..cache import Entry, Memo, app_id, new_parts, note_read, parts, table_path
 
 TABLE_NAMES = (
     "region",
@@ -146,13 +147,19 @@ _RUNTIME_CONFS = {
 }
 
 
-#: table-scan cache: (applicationId, sf_dir, name) → DataFrame. Scans
-#: are immutable plans over a file listing taken when they were made;
-#: caching skips the per-call parquet footer read and schema inference
-#: (~80 ms/table). If the fixture is regenerated or appended to under a
-#: live process (the events timestamp encoding changed between rounds; a
-#: log directory gains part files), the entry is replaced and the
-#: listing and dtype dispatch re-run on the fresh files.
+#: table-scan cache: (applicationId, sf_dir, name) → :class:`_Scan`.
+#: Scans are immutable plans over a file listing taken when they were
+#: made; caching skips the per-call parquet footer read and the schema
+#: inference job (~80 ms/table). If the fixture is regenerated or
+#: appended to under a live process (the events timestamp encoding
+#: changed between rounds; a log directory gains part files), the entry
+#: is replaced and the listing and dtype dispatch re-run on the fresh
+#: files. Under the append rule (``cache.new_parts``: every part the
+#: entry was built over is still there unchanged) the new scan reads
+#: with the recorded raw schema, so an append costs no inference job;
+#: a rewritten or removed part infers the schema again. ``load_parts``
+#: reads single parts with that schema (a view's refresh of the parts an
+#: append added).
 _SCAN_CACHE = Memo("scan")
 
 
@@ -188,10 +195,38 @@ def ensure_confs(spark: SparkSession) -> None:
             spark.conf.set(k, v)
 
 
-def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    note_read(sf_dir, name)  # fingerprinted before Spark lists the files
-    df = spark.read.parquet(table_path(sf_dir, name))
-    return _normalize_events_ts(df) if name == "events" else df
+class _Scan(NamedTuple):
+    frame: DataFrame
+    #: the parquet schema the files were read with (before normalization)
+    schema: StructType
+
+
+def _read(
+    spark: SparkSession, sf_dir: str, name: str, old: Entry | None = None
+) -> _Scan:
+    """Scan ``name``; with the schema of ``old``, a stale scan of it, when
+    the table was only appended to since ``old`` was built."""
+    fp = note_read(sf_dir, name)  # fingerprinted before Spark lists the files
+    reader = spark.read
+    if old is not None:
+        was = parts(old.reads.get((sf_dir, name)))
+        if new_parts(was, parts(fp)) is not None:
+            reader = reader.schema(old.value.schema)
+    raw = reader.parquet(table_path(sf_dir, name))
+    df = _normalize_events_ts(raw) if name == "events" else raw
+    return _Scan(df, raw.schema)
+
+
+def _scan(spark: SparkSession, sf_dir: str, name: str) -> _Scan:
+    """The memoized scan of table ``name``, with the confs pinned."""
+    ensure_confs(spark)
+    key = (app_id(spark), sf_dir, name)
+
+    def scan() -> _Scan:
+        _maybe_validate(spark, sf_dir, name)
+        return _read(spark, sf_dir, name, _SCAN_CACHE.get(key))
+
+    return _SCAN_CACHE(key, scan)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -200,13 +235,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``cache.recording``."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    ensure_confs(spark)
+    return _scan(spark, sf_dir, name).frame
 
-    def scan() -> DataFrame:
-        _maybe_validate(spark, sf_dir, name)
-        return _read(spark, sf_dir, name)
 
-    return _SCAN_CACHE((app_id(spark), sf_dir, name), scan)
+def load_parts(
+    spark: SparkSession, sf_dir: str, name: str, names: list[str] | None = None
+) -> DataFrame:
+    """Table ``name`` (any table of ``sf_dir``, fixture or not) like
+    :func:`load_table`, or only its parts ``names`` (``cache.parts``
+    names) read with the raw schema of its memoized scan. That scan
+    follows the append rule, so reading the parts an append added starts
+    no schema-inference job."""
+    scan = _scan(spark, sf_dir, name)
+    if names is None:
+        return scan.frame
+    root = table_path(sf_dir, name)
+    raw = spark.read.schema(scan.schema).parquet(
+        *(os.path.join(root, n) if n else root for n in names)
+    )
+    return _normalize_events_ts(raw) if name == "events" else raw
 
 
 def load_table_fresh(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -220,7 +267,7 @@ def load_table_fresh(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     ensure_confs(spark)
-    return _read(spark, sf_dir, name)
+    return _read(spark, sf_dir, name).frame
 
 
 #: (applicationId, sorted input files, parallelism) → scan partition

@@ -111,3 +111,35 @@ def test_concurrency_peak_matches_bruteforce(spark):
         .collect()
     }
     assert got == brute and len(got) > 0
+
+
+def test_cohort_retention_drops_null_users_and_counts_null_weeks(spark, tmp_path):
+    """A NULL user_id joins no cohort in the oracle, so its rows drop; a
+    user's NULL week is still a (user, week) row, counted in a NULL
+    week_index cell of that user's cohort."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from .conftest import SF0001
+    from .parity import run_keys
+
+    d = str(tmp_path / "sf")
+    shutil.copytree(SF0001, d)
+    ev = pq.read_table(f"{d}/events.parquet")
+    i = pc.bit_wise_and(ev["event_id"], 7)
+    ev = ev.set_column(
+        ev.schema.get_field_index("user_id"), ev.schema.field("user_id"),
+        pc.if_else(pc.equal(i, 3), pa.scalar(None, ev["user_id"].type), ev["user_id"]),
+    )
+    ev = ev.set_column(
+        ev.schema.get_field_index("ts"), ev.schema.field("ts"),
+        pc.if_else(pc.equal(i, 5), pa.scalar(None, ev["ts"].type), ev["ts"]),
+    )
+    pq.write_table(ev, f"{d}/events.parquet")
+    key = "cohort_retention"
+    assert run_keys(spark, d, {key: REGISTRY[key].fn}) == {}
+    rows = REGISTRY[key].fn(spark, d).collect()
+    assert any(r.week_index is None for r in rows)

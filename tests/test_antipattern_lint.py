@@ -31,7 +31,7 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 #: (tokenize-stripped: docstring/comment mentions don't count).
 COLLECT_ALLOWLIST = {
     "serving/scheduler.py": 1,  # serving layer: materializes registered views
-    "serving/matview.py": 2,  # matview refresh: distinct key lists (bounded)
+    "serving/matview.py": 1,  # stream_refresh: a batch's distinct keys (bounded)
     "streaming/twins.py": 1,  # foreachBatch sink for the streaming twin tests
     # IVF quantizer: capped 10k training sample; knn_mmr greedy stage:
     # two K-bounded fetches (≤ MMR_CAND and ≤ MMR_CAND² rows by
@@ -150,6 +150,25 @@ def test_recipes_are_spelled_once():
     spelling it must match bit for bit; call the helper instead."""
     found = {n: _sites(n, keep_strings=True) for n in RECIPE_HOMES}
     assert found == {n: {home: 1} for n, home in RECIPE_HOMES.items()}
+
+
+#: the append rule, needle → its one home (``cache.parts`` and
+#: ``cache.new_parts``): telling a table's parquet parts from its hidden
+#: files, and the check that every part an earlier read covered is still
+#: there unchanged.
+APPEND_RULE_HOMES = {
+    'startswith(("_","."))': "cache.py",
+    "now.get(n)!=v": "cache.py",
+}
+
+
+def test_the_append_rule_is_spelled_once():
+    """The loader's scan memo and the materialized views decide "only
+    parts were added" by one rule; a second copy of it can drift, and a
+    reader that trusts a stale record (a schema, a key set) after a part
+    was rewritten serves wrong rows. Call ``cache.new_parts`` instead."""
+    found = {n: _sites(n, keep_strings=True) for n in APPEND_RULE_HOMES}
+    assert found == {n: {home: 1} for n, home in APPEND_RULE_HOMES.items()}
 
 
 def test_every_job_builder_has_an_operator_caller():

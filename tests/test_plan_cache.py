@@ -28,6 +28,7 @@ from mapreduce_server_spark.sources import loader
 from .conftest import SF0001, SF001, make_duck
 from .parity import assert_parity
 from .test_concurrent import KEYS as CONCURRENT_KEYS
+from .test_matview import _grouped
 
 #: the recurring dashboard batch (stream + cohort over the event log,
 #: two TPC-H summaries over tables that never change)
@@ -169,6 +170,35 @@ def test_appends_replace_the_log_scan(spark, log_copy):
         df = loader.load_table(spark, log_copy, "events")
         assert len(loader._SCAN_CACHE) == entries, part
     assert df.count() == 6 * pq.read_metadata(_table(SF0001, "events")).num_rows
+
+
+def test_an_append_reuses_the_scan_schema_and_a_rewrite_infers_it(spark, log_copy):
+    """After an append every part the scan was built over is still there
+    unchanged, so the new scan reads with the recorded schema: loading
+    starts no Spark job and serves the new rows. A part rewritten in
+    place or removed may change the schema: the next load infers it
+    again (one job)."""
+    n = pq.read_metadata(_table(SF0001, "events")).num_rows
+    loader.load_table(spark, log_copy, "events")
+
+    def load(group: str):
+        return _grouped(spark, group, lambda: loader.load_table(spark, log_copy, "events"))
+
+    _append_events(log_copy, 1)
+    df, tot = load("load_appended")
+    assert tot["jobs"] == 0, tot
+    assert df.count() == 2 * n
+
+    part0 = os.path.join(_table(log_copy, "events"), "part-00000.parquet")
+    pq.write_table(pq.read_table(part0).slice(0, n // 2), part0)
+    df, tot = load("load_rewritten")
+    assert tot["jobs"] == 1, tot
+    assert df.count() == n // 2 + n
+
+    os.remove(os.path.join(_table(log_copy, "events"), "part-00001.parquet"))
+    df, tot = load("load_removed")
+    assert tot["jobs"] == 1, tot
+    assert df.count() == n // 2
 
 
 def test_fan_out_probe_is_memoized(spark, monkeypatch):

@@ -371,3 +371,19 @@ def test_knn_filter_is_shuffle_free_scan(spark):
         "PartitionFilters" in p
         and "cluster" in p.split("PartitionFilters")[1][:120]
     ), p
+
+
+def test_cohort_retention_is_one_scan_and_three_exchanges(spark):
+    """Each user's first week is a window min over the distinct
+    (user, week) rows, not a per-user aggregate joined back (a second
+    events scan and a fourth exchange): one scan and three exchanges —
+    the distinct, the window's user_id partitioning, the final cells."""
+    import re
+
+    # fresh plan: a collected one prints its final and initial trees
+    from mapreduce_server_spark.operators.analytics import cohort_retention
+
+    p = plan_string(cohort_retention(spark, SF001), "formatted")
+    assert p.count("events.parquet") == 1, p
+    assert "Join" not in p, p
+    assert len(re.findall(r"\(\d+\) (?:Broadcast)?Exchange", p)) == 3, p
