@@ -19,6 +19,10 @@ its keys).
 Storing an entry drops and releases, in every memo, the entries that
 recorded a table whose path is gone since: nothing looks those up again
 (a server's data directories come and go), so nothing else would.
+A memo may also settle an entry on its first hit: replace its value by
+one derived from it, under the same recorded reads (the plan memo keeps
+a plan's result rows), so the derived value goes stale exactly when the
+value it came from would have.
 """
 
 from __future__ import annotations
@@ -30,7 +34,7 @@ import weakref
 from collections.abc import Callable, Hashable, Iterator, Mapping
 from contextlib import contextmanager
 from contextvars import ContextVar
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Any
 
 #: What a table's files looked like: ``(mtime_ns, size)`` for a file, the
@@ -154,6 +158,12 @@ class Entry:
     value: Any
     #: (sf_dir, table) → fingerprint of every fixture table the build read
     reads: Reads
+    #: the memo's first-hit step has run (:meth:`Memo.__call__`): the
+    #: value is served as it is until the reads change
+    settled: bool = False
+    #: driver memory the value retains, as the first-hit step measured it
+    #: (0 when unmeasured)
+    nbytes: int = 0
 
     def current(self) -> bool:
         """Do all the recorded inputs still look as they did? Stats only."""
@@ -180,27 +190,49 @@ class Memo(dict):
     A dict, so evicting or counting entries by key (``pop``, ``clear``,
     ``len``) works as on any dict. ``release`` (e.g.
     ``DataFrame.unpersist``) is run on a value that is replaced or
-    cleared by :func:`clear_frames`. Hit, miss (no entry) and stale
-    (an entry whose inputs changed) counts are kept per memo."""
+    cleared by :func:`clear_frames`. Hit, miss (no entry), stale (an
+    entry whose inputs changed) and fill (a first hit that stored a
+    derived value) counts are kept per memo."""
 
     def __init__(self, name: str, release: Callable[[Any], object] | None = None):
         super().__init__()
         self.name = name
         self.release = release
-        self.counts = {"hits": 0, "misses": 0, "stale": 0}
+        self.counts = {"hits": 0, "misses": 0, "stale": 0, "fills": 0}
         self._lock = threading.Lock()  # guards the counts
         self._key_locks: dict[Hashable, threading.Lock] = {}
         _MEMOS[name] = self
 
-    def __call__(self, key: Hashable, build: Callable[[], Any]) -> Any:
+    def __call__(
+        self,
+        key: Hashable,
+        build: Callable[[], Any],
+        first_hit: Callable[[Entry], tuple[Entry, Any]] | None = None,
+    ) -> Any:
         """The value of ``key`` while its inputs are unchanged, else
-        ``build()``'s, memoized. Concurrent cold callers build once."""
+        ``build()``'s, memoized. Concurrent cold callers build once.
+
+        ``first_hit(entry)`` runs on an entry's first hit, once however
+        many callers hit it together: it returns the entry to keep, which
+        must carry ``entry``'s reads, and the value that hit is served.
+        Every later hit serves the kept entry's value."""
         entry = self.lookup(key)
-        if entry is not None:
+        if entry is None:
+            with self._key_lock(key):
+                entry = self.lookup(key)  # built meanwhile on another thread?
+                if entry is None:
+                    return self._fill(key, build)
+        if first_hit is None or entry.settled:
             return entry.value
         with self._key_lock(key):
-            entry = self.lookup(key)  # built meanwhile on another thread?
-            return entry.value if entry is not None else self._fill(key, build)
+            now = self.get(key)
+            if now is not entry:  # settled or replaced meanwhile
+                return (now or entry).value
+            kept, served = first_hit(entry)
+            self[key] = replace(kept, settled=True)
+        if kept.value is not entry.value:
+            self._count("fills")
+        return served
 
     def lookup(self, key: Hashable) -> Entry | None:
         """The entry of ``key`` if its inputs are unchanged (a counted
@@ -269,8 +301,12 @@ def _drop_orphans() -> None:
 
 
 def stats() -> dict[str, dict[str, int]]:
-    """Hits, misses and stale rebuilds of every memo so far, by name."""
-    return {name: dict(m.counts) for name, m in _MEMOS.items()}
+    """Hits, misses, stale rebuilds and fills of every memo so far, and
+    the driver bytes its entries retain now (``retained_bytes``), by name."""
+    return {
+        name: {**m.counts, "retained_bytes": sum(e.nbytes for e in list(m.values()))}
+        for name, m in _MEMOS.items()
+    }
 
 
 def clear_frames() -> None:

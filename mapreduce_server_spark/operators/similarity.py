@@ -525,29 +525,25 @@ def _ivf_index(
     cell directories, and row predicates push to parquet row groups).
     knn_ivf_pruned and knn_filter read this index; returns the path.
 
-    The directory tag includes the Spark applicationId: each
-    application owns its index, so a second process cold-hitting the
-    same corpus writes a sibling directory instead of overwrite-deleting
-    the one the first process is actively serving reads from (the
-    cross-process race the round-10 judge reproduced with three
+    Every write gets a directory of its own (a random tag), so a write
+    never overwrite-deletes files that a scan still lists: not another
+    process's index over the same corpus (a race reproduced with three
     concurrent Spark apps; the memo's build lock is process-local and
-    cannot guard a machine-global path). Pinned by the two-process
-    cold-cache test in tests/test_concurrent.py."""
-    import hashlib as _hl
+    cannot guard a machine-global path), and not this process's older
+    index, which a running query or a memoized plan may still read after
+    the corpus changed or the memo entry was dropped. Pinned by the
+    two-process cold-cache test in tests/test_concurrent.py."""
     import os as _os
+    import uuid as _uuid
 
     from ..scratch import SCRATCH, owned
 
     app = app_id(spark)
 
     def write() -> str:
-        fp = note_read(sf_dir, "embeddings")
+        note_read(sf_dir, "embeddings")
         assigned = _ivf_assigned(spark, sf_dir, cents)
-        # the fingerprint is in the tag, so a rebuild after the corpus
-        # changed writes a sibling directory instead of deleting one a
-        # running query may still be reading
-        digest = _hl.md5(f"{app}|{sf_dir}|{fp!r}".encode()).hexdigest()[:10]
-        tag = f"{_os.path.basename(_os.path.normpath(sf_dir))}_{digest}"
+        tag = f"{_os.path.basename(_os.path.normpath(sf_dir))}_{_uuid.uuid4().hex[:10]}"
         out = owned(_os.path.join(SCRATCH, f"ivf_index_{tag}"))
         assigned.write.mode("overwrite").partitionBy("cluster").parquet(out)
         return out

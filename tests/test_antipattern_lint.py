@@ -20,7 +20,7 @@ import io
 import os
 import tokenize
 
-from mapreduce_server_spark import REGISTRY
+from mapreduce_server_spark import REGISTRY, registry
 
 from .conftest import SF0001
 
@@ -42,6 +42,16 @@ COLLECT_ALLOWLIST = {
     # k-center selection: seed fetch + K-1 argmax rounds, each a 1-row
     # TakeOrderedAndProject collect (Gonzalez traversal; cached per sf_dir)
     "operators/curation.py": 2,
+}
+
+
+#: audited bounded `.collectAsList()` sites, path → occurrence count.
+#: The plan cache's result fill fetches a request's own result into the
+#: driver JVM, once per memoized plan (what the request's collect()
+#: fetches anyway), and keeps it only up to
+#: spark.sql.autoBroadcastJoinThreshold bytes.
+COLLECT_AS_LIST_ALLOWLIST = {
+    "registry.py": 1,
 }
 
 
@@ -99,6 +109,7 @@ def _pinned_sites(needle: str, allowlist: dict[str, int], label: str) -> None:
 
 def test_collect_sites_are_pinned():
     _pinned_sites(".collect()", COLLECT_ALLOWLIST, ".collect()")
+    _pinned_sites(".collectAsList()", COLLECT_AS_LIST_ALLOWLIST, ".collectAsList()")
 
 
 def test_topandas_sites_are_pinned():
@@ -112,7 +123,7 @@ def test_topandas_sites_are_pinned():
 COMPARE_ALLOWLIST = {
     "tests/parity.py": 5,  # the two definitions and run_keys' compare
     "tests/test_oracle_parity.py": 1,  # one parametrized key per test
-    "tests/test_plan_cache.py": 5,  # memo-state checks, one plan each
+    "tests/test_plan_cache.py": 7,  # memo-state checks, one plan each
     # the benchmark's check of already-collected rows; it sits on the
     # frozen benchmark path and moves onto the runner with its next change
     "perfbench/oracle.py": 2,
@@ -265,7 +276,7 @@ def test_no_cartesian_or_unaudited_bnlj_plans(spark):
     bad: list[tuple[str, str]] = []
     for key in sorted(REGISTRY):
         try:
-            df = REGISTRY[key].fn(spark, SF0001)
+            df = registry.build_plan(spark, SF0001, key)
             p = df._jdf.queryExecution().sparkPlan().toString()
         except Exception as e:  # pragma: no cover - build failure is its own bug
             bad.append((key, f"plan build failed: {e}"))

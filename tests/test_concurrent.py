@@ -94,8 +94,8 @@ def test_two_process_cold_build_does_not_race(spark):
     memo's build lock is process-local, but the directory was keyed by
     sf_dir only and written mode("overwrite"), so process B's build
     deleted the files process A was serving reads from (py4j
-    FileNotFound). The fix keys the directory by (applicationId,
-    sf_dir): each app owns its index. This test spawns two REAL
+    FileNotFound). The fix gives every index write a directory of its
+    own, so no app deletes another's. This test spawns two REAL
     subprocess Spark apps simultaneously, both cold, both over SF001,
     and requires both to return the exact in-process reference rows."""
     import json

@@ -2,7 +2,9 @@
 table its build read still has the fingerprint it had then: an appended
 part file or a rewritten table makes the key rebuild, a hit costs
 file-system stats only, and the recorded reads are complete and kept
-apart per thread."""
+apart per thread. The first hit keeps the plan's result, so later hits
+run no Spark job, unless the result may differ over unchanged inputs or
+is too large to keep."""
 
 from __future__ import annotations
 
@@ -26,7 +28,7 @@ from mapreduce_server_spark.serving import scheduler
 from mapreduce_server_spark.sources import loader
 
 from .conftest import SF0001, SF001, make_duck
-from .parity import assert_parity
+from .parity import assert_parity, run_keys
 from .test_concurrent import KEYS as CONCURRENT_KEYS
 from .test_matview import _grouped
 
@@ -84,14 +86,15 @@ def test_appended_part_file_and_rewritten_table_rebuild(spark, log_copy):
     key = "stream_tumbling"
     first = REGISTRY[key].fn(spark, log_copy)
     first.collect()
-    assert REGISTRY[key].fn(spark, log_copy) is first  # unchanged → hit
+    served = REGISTRY[key].fn(spark, log_copy)  # unchanged → hit, result kept
+    assert REGISTRY[key].fn(spark, log_copy) is served  # from the second hit on
 
     # append a day's worth of new events as a second part file
     _append_events(log_copy, 1)
     second = REGISTRY[key].fn(spark, log_copy)
     con = make_duck(log_copy)
     assert_parity(second, con, REGISTRY[key].oracle, key)
-    assert second is not first
+    assert second is not first and second is not served
 
     # rewrite lineitem in place: q1's memoized plan must not be served
     q1 = "q1_pricing_summary"
@@ -307,12 +310,16 @@ def test_counters_split_hits_misses_and_stale(spark, log_copy):
     pq.write_table(pq.read_table(orders).slice(0, 10), orders)
     REGISTRY[key].fn(spark, log_copy)
     s1 = cache.stats()["plan"]
-    assert {k: s1[k] - s0[k] for k in s1} == {"hits": 1, "misses": 1, "stale": 1}
+    # the hit kept the result; the rebuild replaced it, so no bytes stay
+    assert {k: s1[k] - s0[k] for k in s1} == {
+        "hits": 1, "misses": 1, "stale": 1, "fills": 1, "retained_bytes": 0,
+    }
 
 
 def test_hit_makes_no_py4j_call(spark, monkeypatch):
     key = "q1_pricing_summary"
-    df = REGISTRY[key].fn(spark, SF0001)
+    REGISTRY[key].fn(spark, SF0001)
+    df = REGISTRY[key].fn(spark, SF0001)  # a hit that keeps the result
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
     calls = []
@@ -402,3 +409,167 @@ def test_recorded_reads_cover_the_plan(spark, key):
 @pytest.mark.parametrize("key", sorted(REGISTRY))
 def test_recorded_reads_cover_the_plan_all_keys(spark, key):
     _assert_reads_complete(spark, SF0001, key)
+
+
+def _requests(spark, sf_dir: str, key: str, n: int, tag: str) -> list[tuple[object, int]]:
+    """``n`` requests of ``key`` (``fn(...).collect()``), each under a job
+    group of its own: the served frame and the Spark jobs it ran."""
+    out = []
+    for i in range(n):
+        def request():
+            df = REGISTRY[key].fn(spark, sf_dir)
+            df.collect()
+            return df
+
+        df, tot = _grouped(spark, f"{tag}_{key}_{i}", request)
+        out.append((df, tot["jobs"]))
+    return out
+
+
+def _assert_served_result(spark, sf_dir: str, key: str, tag: str) -> None:
+    """The current entry of ``key`` keeps its result: a request runs no
+    Spark job and its rows equal the oracle."""
+    con = make_duck(sf_dir)
+    _, tot = _grouped(
+        spark, f"{tag}_{key}_served",
+        lambda: assert_parity(REGISTRY[key].fn(spark, sf_dir), con, REGISTRY[key].oracle, key),
+    )
+    assert tot["jobs"] == 0, tot
+    assert registry.plan_entry(spark, sf_dir, key).nbytes > 0
+
+
+def test_a_repeated_request_is_served_its_result(spark, log_copy):
+    """The first request builds and executes the plan; the second runs
+    one job, the plan's result stage, and keeps the rows; the third runs
+    none and returns the oracle's rows."""
+    key = "q1_pricing_summary"
+    (plan, n1), (served, n2), (again, n3) = _requests(spark, log_copy, key, 3, "repeat")
+    assert n1 >= 1 and n2 == 1 and n3 == 0, (n1, n2, n3)
+    assert served is again is not plan
+    _assert_served_result(spark, log_copy, key, "repeat")
+
+
+def test_a_kept_result_goes_stale_with_its_inputs(spark, log_copy):
+    """After an append, a part rewritten in place, or the table's
+    directory deleted and written again, the next request is a fresh
+    build, and the one after keeps the new result."""
+    key = "stream_tumbling"
+    events = _table(log_copy, "events")
+    part0 = os.path.join(events, "part-00000.parquet")
+
+    def rewrite_part():
+        t = pq.read_table(part0)
+        pq.write_table(t.slice(0, t.num_rows // 2), part0)
+
+    def recreate_dir():
+        shutil.rmtree(events)
+        os.mkdir(events)
+        _append_events(log_copy, 7)
+
+    changes = {"appended": lambda: _append_events(log_copy, 1),
+               "rewritten": rewrite_part, "recreated": recreate_dir}
+    _requests(spark, log_copy, key, 2, "stale_fill")
+    _assert_served_result(spark, log_copy, key, "stale_fill")
+    for what, change in changes.items():
+        change()
+        stale = cache.stats()["plan"]["stale"]
+        (fresh, n), = _requests(spark, log_copy, key, 1, f"stale_{what}")
+        assert cache.stats()["plan"]["stale"] == stale + 1, what
+        assert not registry.plan_entry(spark, log_copy, key).settled, what
+        assert n >= 1, what
+        assert_parity(fresh, make_duck(log_copy), REGISTRY[key].oracle, key)
+        _requests(spark, log_copy, key, 1, f"refill_{what}")
+        _assert_served_result(spark, log_copy, key, f"refill_{what}")
+
+
+def _assert_serves_its_plan(spark, sf_dir: str, key: str) -> None:
+    """Every hit of ``key`` serves the memoized plan and runs the jobs of
+    re-collecting it, never more: the entry keeps no result."""
+    (plan, _), = _requests(spark, sf_dir, key, 1, "plan_build")
+    _, recollect = _grouped(spark, f"plan_recollect_{key}", plan.collect)
+    fills = cache.stats()["plan"]["fills"]
+    for df, jobs in _requests(spark, sf_dir, key, 2, "plan_hit"):
+        assert df is plan, key
+        assert jobs == recollect["jobs"] >= 1, (key, jobs, recollect["jobs"])
+    assert cache.stats()["plan"]["fills"] == fills, key
+    entry = registry.plan_entry(spark, sf_dir, key)
+    assert entry.settled and entry.value is plan and entry.nbytes == 0, key
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "heavy_hitters",  # nondeterministic
+        "join_bloom_runtime",  # tagged side_effects
+        "join_bucketed",  # scans scratch tables no build recorded
+    ],
+)
+def test_keys_whose_result_may_change_serve_their_plan(spark, log_copy, key):
+    _assert_serves_its_plan(spark, log_copy, key)
+
+
+def test_a_result_over_the_broadcast_threshold_is_not_kept(spark, log_copy):
+    """A result larger than spark.sql.autoBroadcastJoinThreshold is
+    fetched once, served to the request that fetched it, and not kept:
+    that request runs the jobs of a re-collect, and so does every later
+    one."""
+    key = "q1_pricing_summary"
+    (plan, _), = _requests(spark, log_copy, key, 1, "large_build")
+    _, recollect = _grouped(spark, "large_recollect", plan.collect)
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "100b")  # q1's 4 result rows take 672 bytes
+    try:
+        (fetched, n2), (df3, n3) = _requests(spark, log_copy, key, 2, "large")
+    finally:
+        spark.conf.set(conf, old)
+    assert fetched is not plan and df3 is plan
+    assert n2 == n3 == recollect["jobs"] >= 1, (n2, n3, recollect["jobs"])
+    entry = registry.plan_entry(spark, log_copy, key)
+    assert entry.settled and entry.value is plan and entry.nbytes == 0
+
+
+def test_concurrent_first_hits_fill_once(spark, log_copy, monkeypatch):
+    """Two threads make the first hit together: one executes the plan and
+    keeps its rows, the other waits for them."""
+    key = "agg_group"
+    REGISTRY[key].fn(spark, log_copy).collect()
+    checked = []
+    check = registry._result_is_a_function_of_reads
+
+    def slow_check(*a):
+        checked.append(a)
+        gate.wait(timeout=120)  # the other thread hits while this one fills
+        return check(*a)
+
+    monkeypatch.setattr(registry, "_result_is_a_function_of_reads", slow_check)
+    gate = threading.Barrier(2)
+    fills = cache.stats()["plan"]["fills"]
+    served = [None, None]
+
+    def hit(i):
+        if i:
+            gate.wait(timeout=120)
+        served[i] = REGISTRY[key].fn(spark, log_copy)
+
+    threads = [threading.Thread(target=hit, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert len(checked) == 1
+    assert cache.stats()["plan"]["fills"] == fills + 1
+    assert served[0] is served[1] is registry.plan_entry(spark, log_copy, key).value
+    _assert_served_result(spark, log_copy, key, "concurrent")
+
+
+@pytest.mark.sweep
+@pytest.mark.parametrize("sf_dir", [SF0001, SF001])
+def test_served_results_match_the_oracle_all_keys(spark, sf_dir):
+    """Every key requested twice: the second request's frame (its kept
+    result, where the key keeps one) matches the oracle."""
+
+    def twice(key):
+        return lambda s, d: [REGISTRY[key].fn(s, d) for _ in range(2)][-1]
+
+    assert run_keys(spark, sf_dir, {k: twice(k) for k in sorted(REGISTRY)}) == {}

@@ -3,14 +3,14 @@
 
 from __future__ import annotations
 
-from mapreduce_server_spark import REGISTRY
+from mapreduce_server_spark import REGISTRY, registry
 from mapreduce_server_spark.plans import plan_string
 
 from .conftest import SF001
 
 
 def _plan(spark, key: str, mode: str = "formatted") -> str:
-    return plan_string(REGISTRY[key].fn(spark, SF001), mode)
+    return plan_string(registry.build_plan(spark, SF001, key), mode)
 
 
 def test_scan_project_pushdown_and_pruning(spark):

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from mapreduce_server_spark import REGISTRY
+from mapreduce_server_spark import REGISTRY, registry
 from mapreduce_server_spark.plans import plan_string
 
 from .conftest import SF001
@@ -15,7 +15,7 @@ from .conftest import SF001
 def test_bloom_join_plan_has_runtime_filter(spark):
     """The whole point of join_bloom_runtime: the physical plan probes a
     bloom_filter_agg subquery on the fact scan side."""
-    df = REGISTRY["join_bloom_runtime"].fn(spark, SF001)
+    df = registry.build_plan(spark, SF001, "join_bloom_runtime")
     p = plan_string(df, "extended")
     assert "might_contain" in p
     assert "bloom_filter_agg" in p
@@ -179,7 +179,7 @@ def test_interval_grid_plan_is_equi_join(spark):
     """The whole point: the overlap join must compile to a hash/merge
     EQUI-join on (user_id, cell) — never a nested-loop/cartesian theta
     plan (which is what the oracle's naive SQL would do)."""
-    df = REGISTRY["join_interval_grid"].fn(spark, SF001)
+    df = registry.build_plan(spark, SF001, "join_interval_grid")
     p = plan_string(df, "formatted")
     assert "NestedLoop" not in p and "CartesianProduct" not in p
     assert ("SortMergeJoin" in p) or ("ShuffledHashJoin" in p) or (

@@ -19,7 +19,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from mapreduce_server_spark import REGISTRY  # noqa: E402
+from mapreduce_server_spark import REGISTRY, registry  # noqa: E402
 from mapreduce_server_spark.plans import plan_string  # noqa: E402
 from mapreduce_server_spark.session import get_spark  # noqa: E402
 
@@ -34,7 +34,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     for key in keys:
-        plan = plan_string(REGISTRY[key].fn(spark, sf_dir))
+        plan = plan_string(registry.build_plan(spark, sf_dir, key))
         path = os.path.join(outdir, f"{key}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(f"-- {key} @ {sf_dir} ({suffix})\n")

@@ -80,7 +80,7 @@ BOUNDED_NOTES = {
 
 
 def main() -> None:
-    from mapreduce_server_spark import REGISTRY
+    from mapreduce_server_spark import REGISTRY, registry
     from mapreduce_server_spark.plans import plan_string
     from mapreduce_server_spark.session import get_spark
 
@@ -103,7 +103,7 @@ def main() -> None:
     ]
     for key in sorted(REGISTRY):
         try:
-            df = REGISTRY[key].fn(spark, sf)
+            df = registry.build_plan(spark, sf, key)
             p = plan_string(df, "extended")
             phys = p.split("== Physical Plan ==")[-1]
             n_shuffle = count_live_exchanges(phys)
