@@ -32,7 +32,4 @@ def dsum(col: Column | str, scale: int = 2, precision: int = 18) -> Column:
 def davg(col: Column | str, scale: int = 2, precision: int = 18) -> Column:
     """Exact-sum average: CAST(sum(decimal) AS DOUBLE) / count — both sides
     perform one identical double division on identical exact operands."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(f"decimal({precision},{scale})")).cast("double") / F.count(
-        F.lit(1)
-    )
+    return dsum(col, scale, precision) / F.count(F.lit(1))

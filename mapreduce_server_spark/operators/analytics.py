@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import jobs
+from ..functions.numeric import davg, dsum
 from ..functions.pairs import skew_safe_pairs
 from ..functions.series import hour_span, hourly_counts
 from ..registry import query
@@ -351,10 +352,8 @@ def anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = Tables(spark, sf_dir).events
     stats = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("s"),
-        F.sum((F.col("value") * F.col("value")).cast("decimal(24,4)"))
-        .cast("double")
-        .alias("ssq"),
+        dsum("value").alias("s"),
+        dsum(F.col("value") * F.col("value"), scale=4, precision=24).alias("ssq"),
     )
     mean = F.col("s") / F.col("n")
     std = F.sqrt(F.col("ssq") / F.col("n") - mean * mean)
@@ -412,7 +411,7 @@ def ts_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.date_trunc("hour", "ts").alias("h")
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sv"),
+        dsum("value").alias("sv"),
     )
     grid = hour_span(hourly, "user_id")
     joined = grid.join(
@@ -656,10 +655,7 @@ def ts_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.date_trunc("hour", "ts").alias("h")
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        (
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("mv"),
+        davg("value").alias("mv"),
     )
     grid = hour_span(hourly, "user_id")
     joined = grid.join(
@@ -1059,18 +1055,12 @@ def ts_holt_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").isNotNull() & F.col("value").isNotNull()
     )
     gm = ev.agg(
-        (
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("m")
+        davg("value").alias("m")
     )
     sz = (
         ev.groupBy(F.hour("ts").alias("h"))
         .agg(
-            (
-                F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("hm")
+            davg("value").alias("hm")
         )
         .crossJoin(F.broadcast(gm))
         .select("h", (F.col("hm") - F.col("m")).alias("s"))

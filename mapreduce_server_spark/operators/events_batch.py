@@ -1,8 +1,13 @@
 """Streaming-shaped operators in batch-verifiable form (SURVEY.md §2 cat. I).
 
 The driver's oracle is batch DuckDB SQL, so each operator here is the batch
-DataFrame form the correctness gate grades; :mod:`..streaming.twins` exposes
-the same logic over ``readStream`` with watermarks (pytest-verified only).
+DataFrame form the correctness gate grades. A stateless operator is one
+frame → frame builder (:func:`hourly_totals`, :func:`user_hourly_totals`,
+:func:`sliding_counts`, :func:`click_purchase_pairs`): the registry key
+applies it to the events table, and its streaming form applies the same
+builder to ``events_stream(...).withWatermark("ts", delay)``
+(pytest-verified, tests/test_streaming.py). The stateful operators whose
+streaming form differs by design live in :mod:`..streaming.twins`.
 
 Window-start columns are emitted as epoch seconds (BIGINT) — engine-native
 timestamp types round-trip differently (ns vs µs) through result buffers,
@@ -21,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import jobs
+from ..functions.numeric import dsum
 from ..registry import query
 from ..sources.loader import Tables
 
@@ -39,23 +45,20 @@ GROUP BY 1, 2
 """,
 )
 def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour window × event_type aggregate (streaming twin:
-    identical plan + withWatermark)."""
-    ev = Tables(spark, sf_dir).events
+    """Tumbling 1-hour window × event_type aggregate (:func:`hourly_totals`)."""
+    return hourly_totals(Tables(spark, sf_dir).events, "event_type")
+
+
+def hourly_totals(ev: DataFrame, by: str) -> DataFrame:
+    """Per 1-hour tumbling window × ``by``: event count and exact value
+    sum, the window start as epoch seconds ``ws_s``. The one builder of
+    ``stream_tumbling`` (by event_type) and ``stream_topk``'s
+    pre-aggregate (by user); the streaming form is the same builder over
+    ``events_stream(...).withWatermark("ts", delay)``."""
     return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias(
-                "sum_value"
-            ),
-        )
-        .select(
-            F.unix_seconds(F.col("w.start")).alias("ws_s"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
+        ev.groupBy(F.window("ts", "1 hour").alias("w"), by)
+        .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("sum_value"))
+        .select(F.unix_seconds(F.col("w.start")).alias("ws_s"), by, "n", "sum_value")
     )
 
 
@@ -76,7 +79,12 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding window (1 h length, 15 min slide): each event lands in 4
     overlapping windows (oracle reproduces Spark's epoch-aligned window
     enumeration with an explicit 4-offset expand)."""
-    ev = Tables(spark, sf_dir).events
+    return sliding_counts(Tables(spark, sf_dir).events)
+
+
+def sliding_counts(ev: DataFrame) -> DataFrame:
+    """Event count per (1 h window sliding every 15 min) × event_type,
+    batch or watermarked stream alike."""
     return (
         ev.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -115,14 +123,15 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     per user in (ts, event_id) order — the gap-flag → running-sum
     session-id form (deterministic ids, unlike
     monotonically_increasing_id; SURVEY §7 M5) — then one row per
-    session. Streaming twin: ``F.session_window(ts, '30 minutes')``."""
+    session. Streaming twin: ``twins.session`` (native
+    ``F.session_window(ts, '30 minutes')``)."""
     ev = Tables(spark, sf_dir).events
     sessions = jobs.sessionize(ev, "user_id", "ts", "event_id", 30 * 60)
     return sessions.groupBy("user_id", "session_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.unix_seconds(F.min("ts")).alias("start_s"),
         F.unix_seconds(F.max("ts")).alias("end_s"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
+        dsum("value").alias("sum_value"),
     )
 
 
@@ -140,9 +149,11 @@ WHERE rn = 1
 )
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyed dedup keeping the earliest arrival — the deterministic
-    window form of ``dropDuplicates`` (streaming twin:
-    ``dropDuplicatesWithinWatermark``). Every event_id is unique in the
-    fixtures, so the demo key is (user_id, event_type)."""
+    window form of ``dropDuplicates``. Every event_id is unique in the
+    fixtures, so the demo key is (user_id, event_type). ``twins.dedup``
+    differs from this key: it drops repeated event_ids with
+    ``dropDuplicatesWithinWatermark`` (a first-arrival pick, not the
+    earliest-ts one), so on the fixtures it keeps every row."""
     ev = Tables(spark, sf_dir).events
     w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     return (
@@ -171,7 +182,8 @@ FROM per_day
 def stream_running_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running distinct-user count by day — the batch equivalent of the
     custom stateful streaming operator (per-key state = user first-seen);
-    the streaming twin keeps this state in transformWithStateInPandas."""
+    the streaming twin ``twins.first_seen_users`` keeps that state with
+    ``applyInPandasWithState``."""
     ev = Tables(spark, sf_dir).events
     first_seen = ev.groupBy("user_id").agg(F.min(F.to_date("ts")).alias("first_day"))
     per_day = first_seen.groupBy(F.col("first_day").cast("string").alias("day")).agg(
@@ -198,19 +210,27 @@ FROM events c JOIN events p
 )
 def stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Click→purchase attribution pairs within 24 h per user — the batch
-    form of a stream-stream interval join. In batch this is an equi-join
-    on user_id with a range predicate (one shuffle, range evaluated post-
-    join); the streaming twin (streaming/twins.interval_join) runs the
-    same condition over two watermarked streams, where the time bounds
-    are what let Spark evict join state — an unbounded stream-stream join
-    would hold both streams forever."""
+    form of a stream-stream interval join (:func:`click_purchase_pairs`
+    with the events table on both sides). In batch this is an equi-join
+    on user_id with a range predicate (one shuffle, range evaluated
+    post-join)."""
     ev = Tables(spark, sf_dir).events
-    clicks = ev.filter(F.col("event_type") == "click").select(
+    return click_purchase_pairs(ev, ev)
+
+
+def click_purchase_pairs(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
+    """(click, purchase) pairs of one user with the purchase at most 24 h
+    after the click. Over two streams, each watermarked on ``ts``, this
+    is the stream-stream interval join: the two-sided time bound on p_ts
+    is what lets Spark evict each side's rows once the other side's
+    watermark passes the interval end — without it an inner join of two
+    streams would buffer both forever."""
+    c = clicks.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_user"),
         F.col("event_id").alias("click_id"),
         F.col("ts").alias("c_ts"),
     )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
+    p = purchases.filter(F.col("event_type") == "purchase").select(
         F.col("user_id").alias("p_user"),
         F.col("event_id").alias("purchase_id"),
         F.col("ts").alias("p_ts"),
@@ -223,7 +243,7 @@ def stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag_s = F.floor(
         (F.unix_micros("p_ts") - F.unix_micros("c_ts")) / F.lit(1_000_000)
     )
-    return clicks.join(purchases, cond).select(
+    return c.join(p, cond).select(
         F.col("c_user").alias("user_id"),
         "click_id",
         "purchase_id",
@@ -269,7 +289,7 @@ def ts_rollup_multigrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return b.rollup("day_s", "hour_s").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
+        dsum("value").alias("sum_value"),
     )
 
 
@@ -487,37 +507,24 @@ WHERE rk <= 3
 def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Windowed TOP-K — the trending-items query every event platform
     serves (top users per tumbling hour by activity): tumbling-window
-    pre-aggregate (map-side combined — the shuffle carries one row per
-    (window, user), never raw events), then a per-window row_number
-    top-3 with the (count DESC, user_id) total order. In Structured
-    Streaming the same pre-aggregate runs incrementally under a
-    watermark and the rank-prune runs on the compacted state store
-    per trigger (rank over update-mode output) — the batch plan here
-    IS that per-trigger computation, the events_batch twin discipline.
-    At 100 TB the window agg is the only full-data shuffle; the top-k
-    window runs on |windows|×|active users| aggregated rows.
+    pre-aggregate (:func:`user_hourly_totals`, map-side combined — the
+    shuffle carries one row per (window, user), never raw events), then
+    a per-window row_number top-3 with the (count DESC, user_id) total
+    order. In Structured Streaming the same pre-aggregate runs
+    incrementally under a watermark and the rank-prune runs on the
+    compacted state store per trigger (rank over update-mode output);
+    the batch plan here is that per-trigger computation run once. At
+    100 TB the window agg is the only full-data shuffle; the top-k
+    window runs on |windows|×|active users| aggregated rows."""
+    agg = user_hourly_totals(Tables(spark, sf_dir).events)
+    wr = Window.partitionBy("ws_s").orderBy(F.desc("n"), F.asc("user_id"))
+    return agg.withColumn("rk", F.row_number().over(wr)).filter(F.col("rk") <= 3)
+
+
+def user_hourly_totals(ev: DataFrame) -> DataFrame:
+    """``stream_topk``'s pre-aggregate: :func:`hourly_totals` per user.
 
     NULL contract (round-11 axis): a NULL user_id is not an entity and
     cannot trend — dropped on both engines (it would otherwise rank
     with engine-dependent NULL tiebreak ordering)."""
-    ev = Tables(spark, sf_dir).events.where(F.col("user_id").isNotNull())
-    agg = ev.groupBy(
-        F.window("ts", "1 hour").alias("w"), "user_id"
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias(
-            "sum_value"
-        ),
-    )
-    wr = Window.partitionBy("w").orderBy(F.desc("n"), F.asc("user_id"))
-    return (
-        agg.withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") <= 3)
-        .select(
-            F.unix_seconds(F.col("w.start")).alias("ws_s"),
-            "user_id",
-            "n",
-            "sum_value",
-            "rk",
-        )
-    )
+    return hourly_totals(ev.where(F.col("user_id").isNotNull()), "user_id")

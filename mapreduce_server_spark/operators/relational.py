@@ -1011,7 +1011,7 @@ def join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return attr.groupBy("campaign").agg(
         F.count(F.lit(1)).alias("n_purchases"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("revenue"),
+        dsum("value").alias("revenue"),
     )
 
 
@@ -1049,9 +1049,7 @@ def join_shuffle_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("revenue"),
+            dsum("l_extendedprice").alias("revenue"),
         )
     )
 

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_int
+from ..functions.numeric import dsum
 from ..registry import query
 from ..sources.loader import Tables
 
@@ -111,8 +112,7 @@ def join_bloom_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return exact.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("double")
+        dsum("o_totalprice")
         .alias("total"),
     )
 

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from .. import jobs
 from ..cache import Memo, app_id, note_read
 from ..functions.hashing import md5_int
+from ..functions.numeric import dsum
 from ..functions.pairs import skew_safe_pairs
 from ..functions.vector import (
     DUCK_DOT,
@@ -1373,7 +1374,7 @@ def knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         code(2),
         code(3),
         F.round(
-            F.sum(F.col("d6").cast("decimal(18,6)")).cast("double"), 6
+            dsum("d6", scale=6), 6
         ).alias("qerr"),
     )
 

@@ -15,6 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.numeric import dsum
 from ..registry import query
 from ..scratch import SCRATCH, owned
 from ..sources.loader import Tables
@@ -86,8 +87,7 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         # decimal-sum discipline (ARCHITECTURE §4): a raw double sum is
         # fold-order-dependent once quantities are non-integral
         # (round-12 ×1e-5 axis caught sink_zorder)
-        F.sum(F.col("l_quantity").cast("decimal(18,6)"))
-        .cast("double")
+        dsum("l_quantity", scale=6)
         .alias("sum_qty"),
     )
 
@@ -96,21 +96,12 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _daily_rollup_view() -> "MaterializedView":
     from ..serving.matview import MaterializedView
 
-    def keys(ev: DataFrame) -> DataFrame:
-        return ev.select(F.to_date("ts").cast("string").alias("day")).distinct()
-
-    def build(ev: DataFrame, days: list | None) -> DataFrame:
-        day = F.to_date("ts").cast("string")
-        if days is not None:
-            ev = ev.filter(day.isin(days))
-        return ev.groupBy(day.alias("day"), "event_type").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias(
-                "sum_value"
-            ),
+    def build(ev: DataFrame) -> DataFrame:
+        return ev.groupBy(F.to_date("ts").cast("string").alias("day"), "event_type").agg(
+            F.count(F.lit(1)).alias("n"), dsum("value").alias("sum_value")
         )
 
-    return MaterializedView("daily_rollup", "day", "events", keys, build)
+    return MaterializedView("daily_rollup", "day", "events", build)
 
 
 @query(
@@ -235,8 +226,7 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         # decimal-sum discipline (ARCHITECTURE §4): a raw double sum is
         # fold-order-dependent once quantities are non-integral
         # (round-12 ×1e-5 axis caught sink_zorder)
-        F.sum(F.col("l_quantity").cast("decimal(18,6)"))
-        .cast("double")
+        dsum("l_quantity", scale=6)
         .alias("sum_qty"),
     )
 

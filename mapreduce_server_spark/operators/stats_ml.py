@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_int
+from ..functions.numeric import davg, dsum
 from ..functions.series import hour_grid, hourly_counts
 from ..functions.vector import dot_sql, fsum, norm_sql, sq_dist_sql
 from ..registry import query
@@ -71,11 +72,11 @@ def stat_linreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     x, y = F.col("l_quantity"), F.col("l_extendedprice")
     m = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(x.cast("decimal(18,2)")).cast("double").alias("sx"),
-        F.sum(y.cast("decimal(18,2)")).cast("double").alias("sy"),
-        F.sum((x * y).cast("decimal(30,4)")).cast("double").alias("sxy"),
-        F.sum((x * x).cast("decimal(18,0)")).cast("double").alias("sxx"),
-        F.sum((y * y).cast("decimal(30,4)")).cast("double").alias("syy"),
+        dsum(x).alias("sx"),
+        dsum(y).alias("sy"),
+        dsum(x * y, scale=4, precision=30).alias("sxy"),
+        dsum(x * x, scale=0).alias("sxx"),
+        dsum(y * y, scale=4, precision=30).alias("syy"),
     )
     n = F.col("n")
     cov_n = n * F.col("sxy") - F.col("sx") * F.col("sy")  # n²·cov
@@ -396,10 +397,8 @@ def ts_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("s"),
-        F.sum((F.col("value") * F.col("value")).cast("decimal(24,4)"))
-        .cast("double")
-        .alias("ssq"),
+        dsum("value").alias("s"),
+        dsum(F.col("value") * F.col("value"), scale=4, precision=24).alias("ssq"),
         F.transform(
             F.sort_array(F.collect_list(F.struct("ts", "event_id", "value"))),
             lambda e: e.getField("value"),
@@ -553,10 +552,8 @@ def stat_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g = ranked.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("s"),
-        F.sum((F.col("i") * F.col("value")).cast("decimal(28,2)"))
-        .cast("double")
-        .alias("ws"),
+        dsum("value").alias("s"),
+        dsum(F.col("i") * F.col("value"), precision=28).alias("ws"),
     )
     n = F.col("n")
     return g.select(
@@ -579,10 +576,8 @@ def cusum_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = Tables(spark, sf_dir).events
     g = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("s"),
-        F.sum((F.col("value") * F.col("value")).cast("decimal(24,4)"))
-        .cast("double")
-        .alias("ssq"),
+        dsum("value").alias("s"),
+        dsum(F.col("value") * F.col("value"), scale=4, precision=24).alias("ssq"),
     )
     m = g.select(
         "user_id",
@@ -1423,10 +1418,7 @@ def ts_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     avgs = interior.groupBy("user_id", "b").agg(
         (F.sum("x").cast("double") / F.count(F.lit(1))).alias("xbar"),
-        (
-            F.sum(F.col("y").cast("decimal(18,2)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("ybar"),
+        davg("y").alias("ybar"),
     )
     u = Window.partitionBy("user_id").orderBy("b")
     anchors = avgs.join(ends, "user_id").select(

@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import dsum
+from ..functions.numeric import davg, dsum
 from ..registry import query
 from ..sources.loader import Tables
 from .tpch_shapes import _REV, _rev
@@ -486,8 +486,7 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(pa, F.col("pk") == F.col("l_partkey"))
         .where(F.col("l_quantity") < 0.2 * F.col("avg_qty"))
         .agg(
-            (F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double") / 7.0
-             ).alias("avg_yearly")
+            (dsum("l_extendedprice") / 7.0).alias("avg_yearly")
         )
     )
 
@@ -692,14 +691,8 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     average uses the exact-sum-over-count discipline so the cut is
     engine-identical."""
     t = Tables(spark, sf_dir)
-    avg_bal = (
-        t.customer.filter(F.col("c_acctbal") > 0)
-        .agg(
-            (
-                F.sum(F.col("c_acctbal").cast("decimal(18,2)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("ab")
-        )
+    avg_bal = t.customer.filter(F.col("c_acctbal") > 0).agg(
+        davg("c_acctbal").alias("ab")
     )
     recent = t.orders.filter(
         F.col("o_orderdate") >= F.lit("2001-01-01").cast("timestamp")

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.numeric import davg
 from ..registry import query
 from ..sources.loader import Tables
 
@@ -376,11 +377,7 @@ def win_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.min("value").alias("lo"),
         F.max("value").alias("hi"),
-        F.round(
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("avg_value"),
+        F.round(davg("value"), 6).alias("avg_value"),
     )
 
 

@@ -79,15 +79,9 @@ from ..cache import (
 from ..scratch import SCRATCH, owned
 from ..sources.loader import load_parts
 
-#: keys(src) → single-column DataFrame of the distinct partition keys in
-#: the source rows ``src``. Kept separate from build so ``read``'s
-#: empty-source check is a column-pruned distinct of the partition key
-#: alone — never the full aggregate.
-KeysFn = Callable[[DataFrame], DataFrame]
-
-#: build(src, keys) → the aggregate of the source rows ``src``, restricted
-#: to the given partition-key values (keys=None → all).
-BuildFn = Callable[[DataFrame, "list | None"], DataFrame]
+#: build(src) → the aggregate of the source rows ``src``, the partition
+#: column among its columns.
+BuildFn = Callable[[DataFrame], DataFrame]
 
 
 @dataclasses.dataclass(frozen=True)
@@ -124,14 +118,12 @@ class MaterializedView:
         name: str,
         partition_col: str,
         source: str,
-        keys: KeysFn,
         build: BuildFn,
     ):
         self.name = name
         self.partition_col = partition_col
         #: the source table's name: ``<sf_dir>/<source>.parquet``
         self.source = source
-        self.keys = keys
         self.build = build
         #: how the last :meth:`refresh` on this object ran
         self.last_refresh: Refresh | None = None
@@ -205,7 +197,7 @@ class MaterializedView:
         rebuilt: list[str] = []
         if scan:
             src = load_parts(spark, sf_dir, self.source, new)
-            rebuilt = self.rebuild(spark, sf_dir, None, src, force or [])
+            rebuilt = self.rebuild(spark, sf_dir, src, force or [])
             self._record(sf_dir, fp, parts=now)
         self.last_refresh = Refresh(
             "full" if new is None else "incremental", len(scan), len(now), rebuilt
@@ -216,34 +208,26 @@ class MaterializedView:
         self,
         spark: SparkSession,
         sf_dir: str,
-        keys: list[str] | None,
         src: DataFrame | None = None,
         force: Iterable[str] = (),
     ) -> list[str]:
-        """Rebuild exactly the given partition keys (no discovery scan)
-        from the source rows ``src``, by default the whole source, and
-        return them. ``keys=None`` rebuilds, in one write, every key of
-        ``src`` not materialized yet and the ``force`` ones:
-        ``build(src, None)`` filtered on the partition column (Catalyst
-        pushes the filter below the aggregate); the keys rebuilt are the
-        partition directories the write added, and ``force``."""
-        if keys == []:
-            return []
+        """Rebuild, in one write, every key of the source rows ``src`` (by
+        default the whole source) not materialized yet and the ``force``
+        ones: ``build(src)`` filtered on the partition column (Catalyst
+        pushes the filter below the aggregate). Returns the keys rebuilt:
+        the partition directories the write added, and ``force``."""
         fp = note_read(sf_dir, self.source)
         if src is None:
             src = load_parts(spark, sf_dir, self.source)
         out = self.path(sf_dir)
         fresh = not os.path.isdir(out)
-        if keys is None:
-            before = self.materialized_keys(sf_dir)
-            keep = sorted(before - set(force))
-            col = F.col(self.partition_col)
-            todo = col.isNotNull()
-            if keep:
-                todo &= ~col.cast("string").isin(keep)
-            df = self.build(src, None).filter(todo)
-        else:
-            df = self.build(src, keys)
+        before = self.materialized_keys(sf_dir)
+        keep = sorted(before - set(force))
+        col = F.col(self.partition_col)
+        todo = col.isNotNull()
+        if keep:
+            todo &= ~col.cast("string").isin(keep)
+        df = self.build(src).filter(todo)
         (
             df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -258,9 +242,7 @@ class MaterializedView:
             + [StructField(self.partition_col, StringType())]
         )
         self._record(sf_dir, fp, view_schema=view, **({"parts": {}} if fresh else {}))
-        if keys is None:
-            return sorted((self.materialized_keys(sf_dir) - before) | set(force))
-        return keys
+        return sorted((self.materialized_keys(sf_dir) - before) | set(force))
 
     def stream_refresh(
         self,
@@ -272,14 +254,16 @@ class MaterializedView:
         rebuilt_log: list | None = None,
     ):
         """Streaming incremental maintenance: each micro-batch's distinct
-        partition keys become the dirty set, and ONLY those partitions are
-        rebuilt (from the whole source) — no key-discovery scan at all;
-        the stream IS the change-capture. foreachBatch + checkpoint make
-        it exactly-once at partition granularity: a replayed batch
-        re-marks the same keys dirty and the dynamic-partition overwrite
-        is idempotent. This is the serving loop a 100 TB dashboard runs:
-        append-only log → dirty-day detection from the stream → rebuild
-        of the dirty days.
+        partition keys are the dirty set, and the sink runs
+        ``refresh(force=dirty)`` — the one rebuild path, which rebuilds
+        those days (and any key not materialized yet) from the whole
+        source in one write and records the covered parts, so a later
+        plain :meth:`refresh` stays incremental. foreachBatch +
+        checkpoint make it exactly-once at partition granularity: a
+        replayed batch re-marks the same keys dirty and the
+        dynamic-partition overwrite is idempotent. This is the serving
+        loop a 100 TB dashboard runs: append-only log → dirty-day
+        detection from the stream → rebuild of the dirty days.
 
         Returns the started StreamingQuery (caller awaits termination);
         ``rebuilt_log`` (if given) collects the per-batch rebuilt keys.
@@ -290,7 +274,7 @@ class MaterializedView:
                 str(r[0])
                 for r in batch_df.select(key_expr.alias("k")).distinct().collect()
             )
-            done = self.rebuild(spark, sf_dir, dirty)
+            done = self.refresh(spark, sf_dir, force=dirty)
             if rebuilt_log is not None and done:
                 rebuilt_log.append(done)
 
@@ -307,11 +291,11 @@ class MaterializedView:
 
         An EMPTY source has nothing to materialize, so a missing path
         over it reads as the empty relation in the view's own schema —
-        build() over an empty key list is that frame analysis-time for
-        free (round-10 empty-input sweep).
+        build() over the empty source is that frame (round-10
+        empty-input sweep).
 
         The empty-frame substitution applies ONLY to the genuinely-empty
-        source: a missing directory when the source HAS keys means the
+        source: a missing directory when the source HAS rows means the
         caller skipped refresh() (or a refresh failed mid-flight), and
         silently serving zero rows there would be a correctness bug —
         raise instead (round-10 ADVICE).
@@ -323,13 +307,13 @@ class MaterializedView:
         out = self.path(sf_dir)
         if not os.path.isdir(out):
             src = load_parts(spark, sf_dir, self.source)
-            if self.keys(src).limit(1).count() > 0:
+            if src.limit(1).count() > 0:
                 raise FileNotFoundError(
                     f"materialized view '{self.name}' has no materialization "
-                    f"at {out} but its source has partition "
-                    "keys — call refresh() before read()"
+                    f"at {out} but its source has rows — call refresh() "
+                    "before read()"
                 )
-            df = self.build(src, [])
+            df = self.build(src)
         else:
             cov = self.covered(sf_dir)
             schema = cov.view_schema if cov is not None else None

@@ -1,10 +1,19 @@
-"""Structured Streaming twins of the cat. I batch operators.
+"""Structured Streaming forms of the cat. I batch operators.
 
-The correctness gate grades the batch forms (operators/events_batch.py);
-these builders run the same logic incrementally over ``readStream`` with
-watermarks. Each twin shares its aggregation shape with its batch form, so
-"batch-verified + twin smoke-tested" covers both executions of one logical
-operator (SURVEY.md §3.3).
+The correctness gate grades the batch forms (operators/events_batch.py).
+The stateless operators there are shared by construction: each is one
+frame → frame builder (``hourly_totals``, ``user_hourly_totals``,
+``sliding_counts``, ``click_purchase_pairs``) that the registry key
+applies to the events table and the streaming form applies to
+:func:`events_stream` watermarked on ``ts`` (SURVEY.md §3.3), so they
+have no copy here.
+
+The twins in this module differ from their batch keys by design, and
+each docstring names its key: ``session`` (native ``session_window``
+for ``stream_session``'s lag/running-sum form), ``dedup``
+(``dropDuplicatesWithinWatermark`` on event_id, which is not
+``stream_dedup``'s ordered pick), and the ``applyInPandasWithState``
+folds, whose per-key state replaces the batch form's full re-scan.
 
 Late-data policy: ``withWatermark(ts, delay)`` bounds state — aggregates
 drop events older than (max seen ts − delay); tests/test_streaming.py
@@ -13,7 +22,7 @@ drop actually happens.
 
 Scale notes: micro-batch state lives in the state store keyed by
 (window, group); watermarks are what keep 100 TB/day streams bounded —
-every stateful twin here sets one.
+every twin here whose state is keyed by event time sets one.
 """
 
 from __future__ import annotations
@@ -24,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_int
+from ..functions.numeric import dsum
 from ..sources.loader import _normalize_events_ts, ensure_confs
 
 
@@ -49,36 +59,6 @@ def events_stream(
     return _normalize_events_ts(df)
 
 
-def tumbling(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming twin of stream_tumbling."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias(
-                "sum_value"
-            ),
-        )
-        .select(
-            F.unix_seconds(F.col("w.start")).alias("ws_s"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-
-
-def sliding(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming twin of stream_sliding."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.unix_seconds(F.col("w.start")).alias("ws_s"), "event_type", "n")
-    )
-
-
 def session(stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Streaming twin of stream_session via native session windows
     (gap-merge semantics match the batch lag/running-sum form)."""
@@ -87,9 +67,7 @@ def session(stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias(
-                "sum_value"
-            ),
+            dsum("value").alias("sum_value"),
         )
         .select(
             "user_id",
@@ -102,39 +80,12 @@ def session(stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
 
 
 def dedup(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming twin of stream_dedup: drop duplicate event_ids while
-    their window is inside the watermark (bounded dedup state)."""
+    """Drop duplicate event_ids while their window is inside the
+    watermark (bounded dedup state). The batch key nearest to it,
+    ``stream_dedup``, differs: it keeps the earliest row per
+    (user_id, event_type)."""
     return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["event_id"]
-    )
-
-
-def topk(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming twin of stream_topk's stateful half: the per-(window,
-    user) counts maintained incrementally under the watermark. Update
-    mode re-emits a key's row whenever a trigger changes it, so the
-    LAST emission per key IS the compacted state-store row; the
-    per-window top-3 rank-prune then runs SINK-side on that compacted
-    state (rank over update-mode output — exactly the deployment split
-    the batch operator's docstring describes; a global rank cannot run
-    inside the streaming plan because row_number over an unbounded
-    window is not incrementally maintainable). The batch stream_topk
-    plan is this per-trigger computation run once over all data."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias(
-                "sum_value"
-            ),
-        )
-        .select(
-            F.unix_seconds(F.col("w.start")).alias("ws_s"),
-            "user_id",
-            "n",
-            "sum_value",
-        )
     )
 
 
@@ -220,40 +171,9 @@ def first_seen_users(stream: DataFrame) -> DataFrame:
     )
 
 
-def interval_join(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
-    """Streaming twin of stream_join: stream-stream interval join.
-
-    Both sides are watermarked; the two-sided time bound on p_ts is what
-    lets Spark bound join state — each side's rows are evicted once the
-    other side's watermark passes the interval end. Without the bounds a
-    stream-stream inner join would buffer both streams forever.
-    """
-    c = clicks.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("c_ts"),
-    ).withWatermark("c_ts", "1 hour")
-    p = purchases.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("p_ts"),
-    ).withWatermark("p_ts", "1 hour")
-    cond = (
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 24 HOURS"))
-    )
-    lag_s = F.floor(
-        (F.unix_micros("p_ts") - F.unix_micros("c_ts")) / F.lit(1_000_000)
-    )
-    return c.join(p, cond).select(
-        F.col("c_user").alias("user_id"),
-        "click_id",
-        "purchase_id",
-        lag_s.alias("lag_s"),
-    )
-
-
+#: the state-store provider for keyed state at scale: 100 TB/day of
+#: state outgrows the default in-heap store; RocksDB keeps it off-heap
+#: with incremental-checkpoint uploads
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
@@ -263,6 +183,8 @@ def user_totals(stream: DataFrame) -> DataFrame:
     """Per-user cumulative (count, sum) via ``applyInPandasWithState``.
     Emits one row per (user, micro-batch) with the running totals after
     that batch — the canonical per-key incremental-aggregate stateful op.
+    No registry key grades it; its batch form is a per-user count and
+    cents sum (``test_stateful_running_totals_on_rocksdb``).
 
     Value discipline: the running sum accumulates on the DECIMAL(18,2)
     grid (as ints of cents) in state, mirroring the batch forms'
@@ -296,67 +218,6 @@ def user_totals(stream: DataFrame) -> DataFrame:
             stateStructType="n BIGINT, cents BIGINT",
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def user_totals_tws(stream: DataFrame) -> DataFrame:
-    """The same running-totals operator on ``transformWithStateInPandas``
-    — Spark 4's arbitrary-state API (typed state variables, timers,
-    multiple state kinds per processor; successor of
-    applyInPandasWithState).
-
-    Requires (a) the RocksDB state-store provider —
-    ``spark.sql.streaming.stateStore.providerClass`` =
-    :data:`ROCKSDB_PROVIDER` — which is also the right provider at
-    scale: 100 TB/day keyed state outgrows the default in-heap store,
-    RocksDB keeps it off-heap with incremental-checkpoint uploads; and
-    (b) the ``protobuf`` Python package (the twS driver↔worker state
-    protocol), which this container lacks — so the pytest for this twin
-    auto-skips here (tests/test_streaming.py), and user_totals above is
-    the container-verified form of the same logic.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "totals", "n BIGINT, cents BIGINT"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, cents = (
-                self._state.get() if self._state.exists() else (0, 0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                # exact: value is 2-decimal money-style, so per-element
-                # ×100 rounds to the true integer cents before summing
-                cents += int((pdf["value"] * 100).round().astype("int64").sum())
-            self._state.update((n, cents))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [cents / 100.0],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            RunningTotals(),
-            outputStructType="user_id BIGINT, n_events BIGINT, total_value DOUBLE",
-            outputMode="Update",
-            timeMode="None",
         )
     )
 
@@ -465,9 +326,10 @@ def holt(stream: DataFrame) -> DataFrame:
 
 def session_timer(stream: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Timer-based sessionization via ``applyInPandasWithState`` +
-    EventTimeTimeout — the custom-stateful form of `session`, and the
-    pattern the native session_window cannot express variations of
-    (per-session enrichment, mid-session emission, dynamic gaps).
+    EventTimeTimeout — the custom-stateful form of `session` (batch key
+    ``stream_session``), and the pattern the native session_window
+    cannot express variations of (per-session enrichment, mid-session
+    emission, dynamic gaps).
 
     Per user the state is the open session (start_us, last_us, n,
     cents). A new event either extends it or — if the gap exceeds

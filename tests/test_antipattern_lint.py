@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import tokenize
 
 from mapreduce_server_spark import REGISTRY, registry
@@ -31,7 +32,9 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 #: (tokenize-stripped: docstring/comment mentions don't count).
 COLLECT_ALLOWLIST = {
     "serving/scheduler.py": 1,  # serving layer: materializes registered views
-    "serving/matview.py": 1,  # stream_refresh: a batch's distinct keys (bounded)
+    # stream_refresh: a micro-batch's distinct partition keys, the days it
+    # touched (bounded by the batch), handed to refresh(force=...)
+    "serving/matview.py": 1,
     "streaming/twins.py": 1,  # foreachBatch sink for the streaming twin tests
     # IVF quantizer: capped 10k training sample; knn_mmr greedy stage:
     # two K-bounded fetches (≤ MMR_CAND and ≤ MMR_CAND² rows by
@@ -67,6 +70,18 @@ TOPANDAS_ALLOWLIST = {
 }
 
 
+def _code(path: str, keep_strings: bool = False) -> str:
+    """The CODE tokens of ``path`` (round-13 ADVICE), see
+    :func:`_code_occurrences`."""
+    src = open(path, encoding="utf-8").read()
+    blank = (tokenize.COMMENT,) if keep_strings else (tokenize.STRING, tokenize.COMMENT)
+    parts = []
+    for t in tokenize.generate_tokens(io.StringIO(src).readline):
+        parts.append(" " if t.type in blank else t.string)
+        parts.append(" ")
+    return "".join(parts).replace(" ", "")
+
+
 def _code_occurrences(path: str, needle: str, keep_strings: bool = False) -> int:
     """Count ``needle`` in CODE tokens only (round-13 ADVICE): docstring
     and comment mentions are prose, not call sites — counting them let a
@@ -77,13 +92,7 @@ def _code_occurrences(path: str, needle: str, keep_strings: bool = False) -> int
     different attribute (``.cache_hit()``) still doesn't. With
     ``keep_strings`` only comments are blanked (string arguments are
     part of the needle)."""
-    src = open(path, encoding="utf-8").read()
-    blank = (tokenize.COMMENT,) if keep_strings else (tokenize.STRING, tokenize.COMMENT)
-    parts = []
-    for t in tokenize.generate_tokens(io.StringIO(src).readline):
-        parts.append(" " if t.type in blank else t.string)
-        parts.append(" ")
-    return "".join(parts).replace(" ", "").count(needle)
+    return _code(path, keep_strings).count(needle)
 
 
 def _sites(needle: str, keep_strings: bool = False) -> dict[str, int]:
@@ -149,10 +158,14 @@ def test_compare_loops_go_through_run_keys():
 #: cross-engine recipes written once (ARCHITECTURE §4 rule 9), needle →
 #: its one home: the md5-integer hash and the hourly sequence that every
 #: hour grid (series.hour_grid, series.hour_span) and hour-cell explode
-#: is built from.
+#: is built from; and the event operators' tumbling hour
+#: (``hourly_totals``) and interval-join bound (``click_purchase_pairs``),
+#: which a streaming twin must call rather than re-spell.
 RECIPE_HOMES = {
     "F.conv(": "functions/hashing.py",
     'F.expr("interval1hour")': "functions/series.py",
+    'F.window("ts","1hour")': "operators/events_batch.py",
+    'F.expr("INTERVAL24HOURS")': "operators/events_batch.py",
 }
 
 
@@ -180,6 +193,28 @@ def test_the_append_rule_is_spelled_once():
     was rewritten serves wrong rows. Call ``cache.new_parts`` instead."""
     found = {n: _sites(n, keep_strings=True) for n in APPEND_RULE_HOMES}
     assert found == {n: {home: 1} for n, home in APPEND_RULE_HOMES.items()}
+
+
+#: an exact-decimal sum spelled by hand, whitespace removed:
+#: ``F.sum(x.cast("decimal(p,s)")).cast("double")``
+DSUM_SPELLING = re.compile(r'\.cast\("decimal\(\d+,\d+\)"\)\)\.cast\("double"\)')
+
+
+def test_exact_decimal_sums_call_dsum():
+    """Every exact-decimal sum calls ``functions.numeric.dsum`` (or
+    ``davg``), the one spelling of the oracle's
+    ``sum(x::DECIMAL(p,s))::DOUBLE`` (its cast type is an f-string, so
+    the home itself does not match). Window-position sums (``.over(w)``
+    before the cast) keep their form and do not match."""
+    found: dict[str, int] = {}
+    for root, _dirs, files in os.walk(PKG):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                n = len(DSUM_SPELLING.findall(re.sub(r"\s", "", _code(path, True))))
+                if n:
+                    found[os.path.relpath(path, PKG)] = n
+    assert not found, f"call functions.numeric.dsum instead: {found}"
 
 
 def test_every_job_builder_has_an_operator_caller():
@@ -339,7 +374,6 @@ def test_base_table_scan_multiplicity_is_pinned(spark):
     derived frame is feeding multiple branches uncached — cache it
     (the duplicated-subtree trap, ARCHITECTURE §20 addendum) or audit
     the key into _SCAN_CEILING with its reason."""
-    import re
     from collections import Counter
 
     from mapreduce_server_spark.plans import plan_string

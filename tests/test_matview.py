@@ -63,25 +63,19 @@ def _put(src: str, part: str, t) -> None:
 
 
 def _mv(name: str) -> MaterializedView:
-    def keys(ev):
-        return ev.select(F.to_date("ts").cast("string").alias("day")).distinct()
-
-    def build(ev, days):
-        day = F.to_date("ts").cast("string")
-        if days is not None:
-            ev = ev.filter(day.isin(days))
-        return ev.groupBy(day.alias("day"), "event_type").agg(
+    def build(ev):
+        return ev.groupBy(F.to_date("ts").cast("string").alias("day"), "event_type").agg(
             F.count(F.lit(1)).alias("n")
         )
 
-    return MaterializedView(name, "day", "events", keys, build)
+    return MaterializedView(name, "day", "events", build)
 
 
 def _direct(spark, mv: MaterializedView, src: str) -> dict:
     """(day, event_type) → n of the view's aggregate over the whole source."""
     return {
         (r.day, r.event_type): r.n
-        for r in mv.build(load_table(spark, src, "events"), None).collect()
+        for r in mv.build(load_table(spark, src, "events")).collect()
     }
 
 
@@ -125,17 +119,9 @@ def test_escaped_partition_keys_stay_incremental(spark):
     round-trip through materialized_keys: a second refresh() is a no-op
     instead of rebuilding the escaped partitions forever."""
 
-    def keys(src):
-        return src.select("hour").distinct()
-
-    def build(src, hours):
-        if hours is not None:
-            src = src.filter(F.col("hour").isin(hours))
-        return src
-
     import pyarrow as pa
 
-    mv = MaterializedView("mv_escape", "hour", "hours", keys, build)
+    mv = MaterializedView("mv_escape", "hour", "hours", lambda src: src)
     src = os.path.join(SCRATCH, "mv_escape_src")
     shutil.rmtree(src, ignore_errors=True)
     os.makedirs(src)
@@ -154,10 +140,11 @@ def test_escaped_partition_keys_stay_incremental(spark):
 
 def test_stream_refresh_maintains_view_across_appends(spark):
     """foreachBatch incremental maintenance: the stream supplies the dirty
-    days (no discovery scan); a second availableNow run over the same
-    checkpoint processes ONLY the appended file and rebuilds only its
-    days — including the day split across both files (rebuilt from the
-    full source, so the split day's total is still exact)."""
+    days, which the sink passes to ``refresh(force=...)``; a second
+    availableNow run over the same checkpoint processes ONLY the
+    appended file and rebuilds only its days — including the day split
+    across both files (rebuilt from the full source, so the split day's
+    total is still exact)."""
     from mapreduce_server_spark.streaming.twins import events_stream
 
     import pyarrow as pa

@@ -1,4 +1,4 @@
-"""Structured Streaming twins: same results as the batch forms, plus the
+"""Structured Streaming forms: same results as the batch keys, plus the
 watermark late-data drop that only exists in streaming (SURVEY §2.I
 stream_late — pytest-only, not oracle-gradable)."""
 
@@ -9,12 +9,20 @@ import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from mapreduce_server_spark import REGISTRY
+from mapreduce_server_spark.operators.events_batch import (
+    click_purchase_pairs,
+    hourly_totals,
+    sliding_counts,
+    user_hourly_totals,
+)
 from mapreduce_server_spark.sources.loader import load_table
 from mapreduce_server_spark.streaming import twins
 
 from .conftest import SF001
+from .test_empty_fixture import build_fixture
 
 SCRATCH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
@@ -41,7 +49,12 @@ def _drain(spark, df, name, mode="append"):
 def test_tumbling_twin_matches_batch(spark):
     stream = twins.events_stream(spark, _events_dir())
     assert stream.isStreaming
-    got = _drain(spark, twins.tumbling(stream), "t_tumbling", "complete")
+    got = _drain(
+        spark,
+        hourly_totals(stream.withWatermark("ts", "1 hour"), "event_type"),
+        "t_tumbling",
+        "complete",
+    )
     batch = REGISTRY["stream_tumbling"].fn(spark, SF001)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, batch.collect()))
 
@@ -116,7 +129,7 @@ def test_watermark_drops_late_data(spark):
 
         def agg():
             stream = twins.events_stream(spark, src)
-            return twins.tumbling(stream, watermark=watermark)
+            return hourly_totals(stream.withWatermark("ts", watermark), "event_type")
 
         # update mode: each run emits only windows its batches touched —
         # complete mode would bypass watermarking entirely (no eviction).
@@ -162,21 +175,38 @@ def test_stateful_first_seen_dedups_across_batches(spark):
 
 def test_sliding_twin_matches_batch(spark):
     stream = twins.events_stream(spark, _events_dir())
-    got = _drain(spark, twins.sliding(stream), "t_sliding", "complete")
+    got = _drain(
+        spark, sliding_counts(stream.withWatermark("ts", "1 hour")), "t_sliding", "complete"
+    )
     batch = REGISTRY["stream_sliding"].fn(spark, SF001)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, batch.collect()))
 
 
-def test_topk_twin_matches_batch(spark, tmp_path):
-    """The topk twin's compacted update-mode state (+ the sink-side
-    per-window top-3 rank, the deployment split stream_topk's docstring
-    describes) equals the batch operator exactly. The sink keeps the
-    LAST emission per (window, user) — the update-mode compaction rule
-    — so the comparison holds regardless of how many triggers the file
-    source splits the input into."""
-    stream = twins.events_stream(spark, _events_dir(), max_files_per_trigger=1)
+@pytest.mark.parametrize("axis", ["base", "nullskew"])
+def test_topk_twin_matches_batch(spark, tmp_path, axis):
+    """stream_topk's pre-aggregate over a watermarked stream, as
+    compacted update-mode state (+ the sink-side per-window top-3 rank,
+    the deployment split stream_topk's docstring describes), equals the
+    batch operator exactly. The sink keeps the LAST emission per
+    (window, user) — the update-mode compaction rule — so the
+    comparison holds regardless of how many triggers the file source
+    splits the input into. The ``nullskew`` axis (90% of user_ids NULL)
+    checks that the streaming form drops the NULL user as the key does."""
+    sf_dir, events_dir = SF001, _events_dir()
+    if axis == "nullskew":
+        sf_dir, events_dir = str(tmp_path / "fixture"), str(tmp_path / "stream")
+        os.makedirs(sf_dir)
+        os.makedirs(events_dir)
+        build_fixture(sf_dir, axis, SF001)
+        shutil.copyfile(
+            os.path.join(sf_dir, "events.parquet"),
+            os.path.join(events_dir, "events.parquet"),
+        )
+    stream = twins.events_stream(spark, events_dir, max_files_per_trigger=1)
     ckpt = str(tmp_path / "ck_topk")
-    rows = twins.run_collect(twins.topk(stream), "update", ckpt)
+    rows = twins.run_collect(
+        user_hourly_totals(stream.withWatermark("ts", "1 hour")), "update", ckpt
+    )
     state: dict[tuple, tuple] = {}
     for r in rows:  # update mode: later emission = newer state row
         state[(r.ws_s, r.user_id)] = (r.n, r.sum_value)
@@ -189,7 +219,7 @@ def test_topk_twin_matches_batch(spark, tmp_path):
             got.add((ws_s, user_id, n, sv, rk))
     batch = {
         (r.ws_s, r.user_id, r.n, r.sum_value, r.rk)
-        for r in REGISTRY["stream_topk"].fn(spark, SF001).collect()
+        for r in REGISTRY["stream_topk"].fn(spark, sf_dir).collect()
     }
     assert got == batch
 
@@ -202,7 +232,12 @@ def test_interval_join_twin_matches_batch(spark):
     src = os.path.join(SCRATCH, "sjoin_ckpt")
     shutil.rmtree(src, ignore_errors=True)
     rows = twins.run_collect(
-        twins.interval_join(stream_c, stream_p), "append", src
+        click_purchase_pairs(
+            stream_c.withWatermark("ts", "1 hour"),
+            stream_p.withWatermark("ts", "1 hour"),
+        ),
+        "append",
+        src,
     )
     batch = REGISTRY["stream_join"].fn(spark, SF001).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, batch))
@@ -260,31 +295,6 @@ def test_stateful_running_totals_on_rocksdb(spark):
     }
     # two emissions per user (one per micro-batch)
     assert len(rows) == 2 * len(batch)
-
-
-def test_transform_with_state_variant(spark):
-    """transformWithStateInPandas twin of the running-totals op — needs
-    the protobuf Python package for the twS worker protocol; auto-skips
-    where it's absent (this container), since the logic itself is
-    verified by test_stateful_running_totals_on_rocksdb."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    src = os.path.join(SCRATCH, "tws2_src")
-    ckpt = os.path.join(SCRATCH, "tws2_ckpt")
-    for d in (src, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(src, exist_ok=True)
-    shutil.copyfile(f"{SF001}/events.parquet", os.path.join(src, "a.parquet"))
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", twins.ROCKSDB_PROVIDER
-    )
-    try:
-        stream = twins.events_stream(spark, src)
-        rows = twins.run_collect(twins.user_totals_tws(stream), "update", ckpt)
-        assert len(rows) > 0
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 def test_ewma_twin_matches_batch(spark):

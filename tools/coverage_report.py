@@ -67,10 +67,10 @@ SURVEY_MAP: dict[str, str] = {
     "scalar_cond": "scalar_cond",
     "scalar_array": "scalar_array",
     "scalar_json": "scalar_json",
-    "stream_tumbling": "stream_tumbling + streaming/twins.tumbling",
-    "stream_sliding": "stream_sliding + streaming/twins.sliding",
+    "stream_tumbling": "stream_tumbling; streaming form: its builder events_batch.hourly_totals over a watermarked stream",
+    "stream_sliding": "stream_sliding; streaming form: its builder events_batch.sliding_counts over a watermarked stream",
     "stream_session": "stream_session + streaming/twins.session (twin==batch pytest)",
-    "stream_dedup": "stream_dedup + streaming/twins.dedup",
+    "stream_dedup": "stream_dedup + streaming/twins.dedup (differs by design: event_id dedup within the watermark)",
     "stream_late": "tests/test_streaming.py::test_watermark_drops_late_data (pytest-only per SURVEY)",
     "stream_stateful": "stream_running_users (batch) + streaming/twins.first_seen_users (applyInPandasWithState)",
     "text_wordcount": "text_wordcount",

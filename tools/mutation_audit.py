@@ -133,10 +133,11 @@ MUTATIONS = [
         mid="M10_window_size",
         cls="tumbling window 1h → 2h",
         file="operators/events_batch.py",
-        old="ev.groupBy(F.window(\"ts\", \"1 hour\").alias(\"w\"), \"event_type\")",
-        new="ev.groupBy(F.window(\"ts\", \"2 hours\").alias(\"w\"), \"event_type\")",
+        # hourly_totals: the key and its streaming form, together
+        old="ev.groupBy(F.window(\"ts\", \"1 hour\").alias(\"w\"), by)",
+        new="ev.groupBy(F.window(\"ts\", \"2 hours\").alias(\"w\"), by)",
         fixture="base",
-        keys=["stream_tumbling"],
+        keys=["stream_tumbling", "stream_topk"],
     ),
     dict(
         mid="M11_count_skips_nulls",
